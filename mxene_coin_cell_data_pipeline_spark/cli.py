@@ -55,7 +55,7 @@ def cmd_run(args: argparse.Namespace) -> int:
 
         ts = spark.read.parquet(ts_path)  # features read the materialized layer
         feat = full_feature_pipeline(
-            ts, rated_ah=args.rated_ah, dv=args.dv, cache=False
+            ts, rated_ah=args.rated_ah, dv=args.dv
         ).orderBy("cycle_index")
         _write_single_csv(
             feat, os.path.join(args.out, f"{args.cell}_features_full.csv")

@@ -26,15 +26,6 @@ def drop_null_cycles(df: DataFrame) -> DataFrame:
     return df.filter(F.col("cycle_index").isNotNull())
 
 
-def distinct_cycles(df: DataFrame) -> DataFrame:
-    """All (cell, cycle) groups — feature operators that filter rows
-    (e.g. DIS-only) re-join onto this so cycles without qualifying rows
-    still emit a NULL-feature row, as the reference's groupby-over-the
-    -full-frame loops do (pipeline.py:180,202,222). NULL cycle keys are
-    excluded (pandas groupby dropna semantics)."""
-    return drop_null_cycles(df).select(*cycle_keys(df)).distinct()
-
-
 def is_dis(col: str = "step_type") -> F.Column:
     """NULL-safe substring discharge predicate (pipeline.py:171 etc.)."""
     return F.coalesce(F.col(col).contains("DIS"), F.lit(False))

@@ -14,41 +14,38 @@ Reference semantics (/root/reference/pipeline.py:157-166):
   matching both the reference's NaN propagation (pipeline.py:165) and
   DuckDB's NULL-on-zero-divide oracle semantics.
 
-Plan shape: one hash aggregate (map-side partial agg) + one tiny window
-over the per-cycle output (thousands of rows per cell, not samples) —
-no second shuffle over raw data.
+The aggregates and the window run inside the shared per-cycle plan
+(operators/features.py).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, functions as F
-
-from ._keys import cell_keys, cycle_keys, drop_null_cycles
+from pyspark.sql import Column, DataFrame, WindowSpec, functions as F
 
 
 def _last_non_null(value: str, order: str = "timestamp") -> F.Column:
     return F.max_by(F.col(value), F.when(F.col(value).isNotNull(), F.col(order)))
 
 
-def capacity_ce_per_cycle(df: DataFrame) -> DataFrame:
-    keys = cycle_keys(df)
-    agg = drop_null_cycles(df).groupBy(*keys).agg(
+def capacity_aggs() -> list[Column]:
+    return [
         _last_non_null("discharge_ah").alias("Q_dis_Ah"),
         _last_non_null("charge_ah").alias("Q_chg_Ah"),
-    )
+    ]
+
+
+def coulombic_efficiency() -> Column:
     qchg = F.col("Q_chg_Ah")
-    agg = agg.withColumn(
-        "CE",
-        F.when(qchg.isNull() | (qchg == 0), F.lit(None).cast("double")).otherwise(
-            F.col("Q_dis_Ah") / qchg
-        ),
+    return F.when(qchg.isNull() | (qchg == 0), F.lit(None).cast("double")).otherwise(
+        F.col("Q_dis_Ah") / qchg
     )
-    w = (
-        Window.partitionBy(*cell_keys(df))
-        .orderBy("cycle_index")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    agg = agg.withColumn(
-        "q_norm", F.try_divide(F.col("Q_dis_Ah"), F.first("Q_dis_Ah").over(w))
-    )
-    return agg
+
+
+def q_norm(by_cell: WindowSpec) -> Column:
+    return F.try_divide(F.col("Q_dis_Ah"), F.first("Q_dis_Ah").over(by_cell))
+
+
+def capacity_ce_per_cycle(df: DataFrame) -> DataFrame:
+    from .features import per_cycle_features
+
+    return per_cycle_features(df, features=("capacity",))

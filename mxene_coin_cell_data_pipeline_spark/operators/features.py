@@ -1,46 +1,119 @@
-"""Feature assembly: the reference's join chain + end-to-end pipeline.
+"""The per-cycle feature table as one partition-local plan.
 
-Reference (/root/reference/pipeline.py:294-296, step7/step10): features
-= capacity ⟕ energy ⟕ IR ⟕ dQdV on cycle_index. All four inputs are
-per-cycle tables (thousands of rows per cell), so every join is
-broadcast-able; with AQE enabled Spark picks broadcast-hash joins
-automatically, and we hint it explicitly for determinism at scale.
+Reference (pipeline.py:282-296, step7/step10): features
+= capacity ⟕ energy ⟕ IR ⟕ dQdV on cycle_index. Every formula reads the
+rows of one cycle, except the IR row position, which counts rows over
+the whole cell. The plan reads the raw timeseries once and lets Spark
+place the one exchange of raw rows that the first window or the
+aggregate needs:
+
+1. the IR row position per cell (operators/ir.py);
+2. two windows over each cycle's rows: the energy lag by timestamp
+   over the DIS rows (operators/energy.py), then the IR argmin;
+3. one ``groupBy(cycle keys)`` holding every formula as a conditional
+   aggregate — a cycle without DIS rows still gets its row, with NULL
+   DIS features — and the dQ/dV kernel over the cycle's sorted points
+   (operators/dqdv.py);
+4. the per-cell ``q_norm`` and ``dQdV_shift_mV`` windows.
+
+With the IR family (``full_feature_pipeline``), step 1 hashes the raw
+rows by cell and every later step reuses that partitioning, so a cell
+is one task: a single-cell table runs on one core (a frame without
+``cell_id`` is one partition). Without IR the raw rows are hashed by
+cycle keys, or, with no window at all (capacity or dQ/dV alone),
+partially aggregated before the shuffle; only the per-cycle rows move
+again for step 4.
+
+The single-feature operators (``capacity_ce_per_cycle``, ...) select
+their family from this plan, so each formula has one implementation.
 """
 
 from __future__ import annotations
 
-from functools import reduce
+from pyspark.sql import DataFrame, Window, functions as F
 
-from pyspark.sql import DataFrame, functions as F
+from ._keys import cell_keys, cycle_keys, drop_null_cycles, is_dis
+from .capacity import capacity_aggs, coulombic_efficiency, q_norm
+from .dqdv import DEFAULT_DV, dqdv_points, dqdv_shift, peak_voltage
+from .energy import energy_aggs, energy_segment, energy_wh
+from .ir import ir_aggs, ir_argmin, ir_ohm, ir_position
 
-from ._keys import cycle_keys
-from .capacity import capacity_ce_per_cycle
-from .dqdv import dqdv_peak_per_cycle
-from .energy import energy_wh_per_cycle
-from .ir import ir_c2_per_cycle
+#: feature families in output order, with their output columns
+FEATURES = {
+    "capacity": ("Q_dis_Ah", "Q_chg_Ah", "CE", "q_norm"),
+    "energy": ("E_dis_Wh",),
+    "ir": ("IR_C2_ohm",),
+    "dqdv": ("dQdV_peak_V", "dQdV_shift_mV"),
+}
 
 
-def combine_features(base: DataFrame, *others: DataFrame) -> DataFrame:
-    """Left-join chain on the cycle keys (J1)."""
-    keys = cycle_keys(base)
-    return reduce(lambda acc, o: acc.join(F.broadcast(o), keys, "left"), others, base)
+def per_cycle_features(
+    ts: DataFrame,
+    rated_ah: float = 3.0,
+    dv: float = DEFAULT_DV,
+    ir_window: int = 1,
+    features: tuple[str, ...] = tuple(FEATURES),
+) -> DataFrame:
+    """Canonical timeseries → cycle keys + the output columns of the
+    requested feature families (unordered rows). Only the input columns
+    those families read need to exist."""
+    unknown = set(features) - FEATURES.keys()
+    if unknown:
+        raise ValueError(f"unknown feature families {sorted(unknown)}")
+    keys, cells = cycle_keys(ts), cell_keys(ts)
+    want = [f for f in FEATURES if f in features]
+    dis = F.col("_dis")
+
+    rows = ts
+    if "ir" in want:
+        rows = rows.withColumn("_pos", ir_position(cells))
+    rows = drop_null_cycles(rows).withColumn("_dis", is_dis())
+    by_cycle = Window.partitionBy(*keys)
+    if "energy" in want:
+        rows = rows.withColumn(
+            "_seg_u", energy_segment(dis, by_cycle.orderBy("_dis", "timestamp"))
+        )
+    if "ir" in want:
+        rows = rows.withColumn("_idx", ir_argmin(dis, by_cycle, rated_ah))
+
+    aggs, finals = [], []
+    if "capacity" in want:
+        aggs += capacity_aggs()
+        finals += ["Q_dis_Ah", "Q_chg_Ah", coulombic_efficiency().alias("CE")]
+    if "energy" in want:
+        aggs += energy_aggs(dis)
+        finals.append(energy_wh().alias("E_dis_Wh"))
+    if "ir" in want:
+        aggs += ir_aggs(dis, ir_window)
+        finals.append(ir_ohm().alias("IR_C2_ohm"))
+    if "dqdv" in want:
+        aggs.append(dqdv_points(dis).alias("_pts"))
+        finals.append(peak_voltage(F.col("_pts"), dv).alias("dQdV_peak_V"))
+    per_cycle = rows.groupBy(*keys).agg(*aggs).select(*keys, *finals)
+
+    by_cell = (
+        Window.partitionBy(*cells)
+        .orderBy("cycle_index")
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    windowed = {"q_norm": q_norm(by_cell), "dQdV_shift_mV": dqdv_shift(by_cell)}
+    return per_cycle.select(
+        *keys,
+        *(
+            windowed[c].alias(c) if c in windowed else c
+            for f in want
+            for c in FEATURES[f]
+        ),
+    )
 
 
 def full_feature_pipeline(
-    ts: DataFrame, rated_ah: float = 3.0, dv: float = 0.05, cache: bool = True
+    ts: DataFrame, rated_ah: float = 3.0, dv: float = DEFAULT_DV, cache: bool = False
 ) -> DataFrame:
-    """Canonical timeseries → per-cycle feature table (pipeline.py:282-296).
+    """Canonical timeseries → per-cycle feature table ordered by the
+    cycle keys (pipeline.py:282-296).
 
-    Four independent aggregations scan the timeseries; caching it (the
-    equivalent of the reference's materialized normalize→parquet layer,
-    pipeline.py:150) turns four source recomputes into one. Pass
-    ``cache=False`` when ``ts`` is already a materialized parquet read.
+    ``cache`` is accepted and ignored: the plan reads ``ts`` once, so
+    persisting it would only pin cached blocks nothing frees.
     """
-    if cache:
-        ts = ts.persist()
-    cap = capacity_ce_per_cycle(ts)
-    ener = energy_wh_per_cycle(ts)
-    ir = ir_c2_per_cycle(ts, rated_ah)
-    dqdv = dqdv_peak_per_cycle(ts, dv)
-    feat = combine_features(cap, ener, ir, dqdv)
-    return feat.orderBy(*cycle_keys(ts))
+    return per_cycle_features(ts, rated_ah, dv).orderBy(*cycle_keys(ts))

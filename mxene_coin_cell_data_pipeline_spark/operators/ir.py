@@ -9,75 +9,59 @@ original positions [idx−w, idx−1], post = [idx, idx+w]. IR =
 |median(V_post) − median(V_pre)| / |ΔI_median|; NULL when either window
 is empty or ΔI is 0/NULL.
 
-Spark formulation (no applyInPandas needed):
-1. a row-position column (row_number over timestamp within cell) stands
-   in for the pandas index label;
-2. ``min_by(pos, struct(absdiff, pos))`` per cycle = first-occurrence
-   argmin;
-3. broadcast-join the tiny per-cycle argmin table back to the DIS rows
-   and take conditional medians over the [idx−w, idx+w] band.
-
-Scale: step 3's join is a broadcast (one row per cycle); the only
-shuffles are the two keyed aggregations.
+Spark formulation, inside the shared per-cycle plan
+(operators/features.py):
+1. a row-position column (row_number over timestamp within cell,
+   before NULL cycles are dropped) stands in for the pandas index label;
+2. ``min_by(pos, struct(absdiff, pos))`` over the cycle's DIS rows, as
+   a window = first-occurrence argmin on every row;
+3. conditional medians over the DIS rows inside [idx−w, idx+w] in the
+   per-cycle aggregate.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import Column, DataFrame, Window, WindowSpec, functions as F
 
-from ._keys import cell_keys, cycle_keys, distinct_cycles, drop_null_cycles, is_dis
+
+def ir_position(cells: list[str]) -> Column:
+    return F.row_number().over(Window.partitionBy(*cells).orderBy("timestamp"))
+
+
+def ir_argmin(dis: Column, by_cycle: WindowSpec, rated_ah: float) -> Column:
+    """Position of the cycle's first DIS row closest to C/2 (pandas
+    idxmin skips NaN: NULL distances never win)."""
+    absdiff = F.abs(F.abs(F.col("current_a")) - F.lit(0.5 * float(rated_ah)))
+    rank = F.when(dis & absdiff.isNotNull(), F.struct(absdiff, F.col("_pos")))
+    return F.min_by("_pos", rank).over(by_cycle)
+
+
+def ir_aggs(dis: Column, window: int) -> list[Column]:
+    pos, idx = F.col("_pos"), F.col("_idx")
+    band = dis & pos.between(idx - window, idx + window)
+    pre, post = band & (pos < idx), band & (pos >= idx)
+    return [
+        F.median(F.when(pre, F.col("voltage_v"))).alias("_pre_v"),
+        F.median(F.when(post, F.col("voltage_v"))).alias("_post_v"),
+        F.median(F.when(pre, F.col("current_a"))).alias("_pre_i"),
+        F.median(F.when(post, F.col("current_a"))).alias("_post_i"),
+        F.sum(F.when(pre, 1).otherwise(0)).alias("_n_pre"),
+        F.sum(F.when(post, 1).otherwise(0)).alias("_n_post"),
+    ]
+
+
+def ir_ohm() -> Column:
+    d_v = F.col("_post_v") - F.col("_pre_v")
+    d_i = F.col("_post_i") - F.col("_pre_i")
+    return F.when(
+        (F.col("_n_pre") == 0) | (F.col("_n_post") == 0) | d_i.isNull() | (d_i == 0),
+        F.lit(None).cast("double"),
+    ).otherwise(F.abs(d_v / d_i))
 
 
 def ir_c2_per_cycle(df: DataFrame, rated_ah: float, window: int = 1) -> DataFrame:
-    keys = cycle_keys(df)
-    target = 0.5 * float(rated_ah)
+    from .features import per_cycle_features
 
-    pos_w = Window.partitionBy(*cell_keys(df)).orderBy("timestamp")
-    rows = df.withColumn("_pos", F.row_number().over(pos_w))
-    dis = drop_null_cycles(rows).filter(is_dis()).select(
-        *keys,
-        "_pos",
-        "voltage_v",
-        "current_a",
-        (F.abs(F.abs(F.col("current_a")) - F.lit(target))).alias("_absdiff"),
+    return per_cycle_features(
+        df, rated_ah=rated_ah, ir_window=window, features=("ir",)
     )
-
-    # first-occurrence argmin of |abs(I) - target| (pandas idxmin skips NaN)
-    sel = (
-        dis.filter(F.col("_absdiff").isNotNull())
-        .groupBy(*keys)
-        .agg(F.min_by("_pos", F.struct("_absdiff", "_pos")).alias("_idx"))
-    )
-
-    band = dis.join(F.broadcast(sel), keys, "inner").filter(
-        F.col("_pos").between(F.col("_idx") - window, F.col("_idx") + window)
-    )
-    pre_v = F.median(F.when(F.col("_pos") < F.col("_idx"), F.col("voltage_v")))
-    post_v = F.median(F.when(F.col("_pos") >= F.col("_idx"), F.col("voltage_v")))
-    pre_i = F.median(F.when(F.col("_pos") < F.col("_idx"), F.col("current_a")))
-    post_i = F.median(F.when(F.col("_pos") >= F.col("_idx"), F.col("current_a")))
-    n_pre = F.sum(F.when(F.col("_pos") < F.col("_idx"), 1).otherwise(0))
-    n_post = F.sum(F.when(F.col("_pos") >= F.col("_idx"), 1).otherwise(0))
-
-    agg = band.groupBy(*keys).agg(
-        pre_v.alias("_pre_v"),
-        post_v.alias("_post_v"),
-        pre_i.alias("_pre_i"),
-        post_i.alias("_post_i"),
-        n_pre.alias("_n_pre"),
-        n_post.alias("_n_post"),
-    )
-    d_v = F.col("_post_v") - F.col("_pre_v")
-    d_i = F.col("_post_i") - F.col("_pre_i")
-    ir = (
-        F.when(
-            (F.col("_n_pre") == 0)
-            | (F.col("_n_post") == 0)
-            | d_i.isNull()
-            | (d_i == 0),
-            F.lit(None).cast("double"),
-        )
-        .otherwise(F.abs(d_v / d_i))
-        .alias("IR_C2_ohm")
-    )
-    return distinct_cycles(df).join(agg.select(*keys, ir), keys, "left")

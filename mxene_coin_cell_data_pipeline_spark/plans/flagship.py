@@ -72,9 +72,5 @@ def events_as_timeseries(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def flagship_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # cache=False: a one-shot query pays persist materialization without
-    # amortizing it (measured 2x slower cold). The production
-    # materialization boundary is the normalize→parquet layer (cli.py),
-    # not an in-memory cache.
     ts = events_as_timeseries(spark, sf_dir)
-    return full_feature_pipeline(ts, rated_ah=RATED_AH, cache=False)
+    return full_feature_pipeline(ts, rated_ah=RATED_AH)

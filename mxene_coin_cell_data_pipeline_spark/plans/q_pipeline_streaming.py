@@ -268,14 +268,10 @@ def p01_cycler_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     "+ trapezoid energy on events-mapped timeseries",
 )
 def p02_cycler_features_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.capacity import capacity_ce_per_cycle
-    from ..operators.energy import energy_wh_per_cycle
-    from ..operators.features import combine_features
+    from ..operators.features import per_cycle_features
 
     ts = events_as_timeseries(spark, sf_dir)
-    cap = capacity_ce_per_cycle(ts)
-    ener = energy_wh_per_cycle(ts)
-    return combine_features(cap, ener)
+    return per_cycle_features(ts, features=("capacity", "energy"))
 
 
 # =====================================================================
@@ -458,17 +454,19 @@ def m03_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     survey="A8-A10 oracle-checked: dQ/dV grid-interp/gradient/argmax kernel vs a "
     "full SQL reformulation (recursive-CTE arange, np.interp bracket algebra, "
     "np.gradient stencils, first-max argmax) + shift window",
-    note="The only non-SQL-native operator, differentially verified bit-for-bit. "
-    "The mapped input avoids a windowed cumsum (engines associate long window "
-    "sums differently at ulp scale, and argmax over gradients with exact ties "
-    "cannot tolerate ulp noise); every remaining float op is order-identical "
-    "in both engines, so raw np.argmax tie-resolution matches exactly.",
+    note="The engine runs the numpy kernel as Spark built-in array functions "
+    "(operators/dqdv.py), verified bit-for-bit against both this oracle and "
+    "the numpy reference. The mapped input avoids a windowed cumsum (engines "
+    "associate long window sums differently at ulp scale, and argmax over "
+    "gradients with exact ties cannot tolerate ulp noise); every remaining "
+    "float op is order-identical in both engines, so raw np.argmax "
+    "tie-resolution matches exactly.",
 )
 def p03_dqdv_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
     """dQ/dV peak + shift over an events-mapped timeseries — the
-    mapInPandas numpy kernel (operators/dqdv.py), oracle-checked
-    against an exact SQL re-derivation of np.interp + np.gradient +
-    first-max argmax (see the registered SQL)."""
+    array-function kernel (operators/dqdv.py), oracle-checked against
+    an exact SQL re-derivation of np.interp + np.gradient + first-max
+    argmax (see the registered SQL)."""
     from ..operators.dqdv import dqdv_peak_per_cycle
 
     ev = load_table(spark, sf_dir, "events")

@@ -507,3 +507,50 @@ def test_d21_keeper_is_aggregate_not_window(spark, sf_dir):
     assert "Window" not in plan, plan[:3000]
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
+
+
+def test_feature_pipeline_is_one_cell_exchange(spark, tmp_path):
+    """The per-cycle feature table is one partition-local plan over the
+    raw rows: one parquet scan, one hash exchange by cell, no broadcast
+    join chain and no Python hop. Feature subsets without IR keep their
+    cycle-level parallelism."""
+    import pandas as pd
+
+    from fixtures import RATED_AH, arbin_frame
+    from mxene_coin_cell_data_pipeline_spark.operators import (
+        capacity_ce_per_cycle,
+        full_feature_pipeline,
+        normalize_cycler,
+    )
+    from mxene_coin_cell_data_pipeline_spark.operators.features import (
+        per_cycle_features,
+    )
+    from mxene_coin_cell_data_pipeline_spark.sources import read_cycler_csv
+
+    cells = []
+    for cid in ("c1", "c2"):
+        pdf = arbin_frame()
+        pdf["cell_id"] = cid
+        cells.append(pdf)
+    csv = str(tmp_path / "cells.csv")
+    pd.concat(cells, ignore_index=True).to_csv(csv, index=False)
+    path = str(tmp_path / "ts.parquet")
+    normalize_cycler(read_cycler_csv(spark, csv)).write.parquet(path)
+
+    feat = full_feature_pipeline(spark.read.parquet(path), rated_ah=RATED_AH)
+    plan = feat._jdf.queryExecution().executedPlan().toString()
+    assert len(re.findall(r"Exchange hashpartitioning\(cell_id", plan)) == 1, plan
+    assert plan.count("FileScan parquet") == 1, plan
+    assert "BroadcastExchange" not in plan
+    assert "MapInPandas" not in plan and "ArrowEvalPython" not in plan
+
+    # without IR nothing needs a whole cell in one task: p02's families
+    # hash the raw rows by cycle keys, and capacity alone aggregates
+    # partially before its shuffle
+    ts = spark.read.parquet(path)
+    sub = per_cycle_features(ts, features=("capacity", "energy"))
+    plan = sub._jdf.queryExecution().executedPlan().toString()
+    by_cycle = r"Exchange hashpartitioning\(cell_id#\d+, cycle_index#\d+L?, "
+    assert len(re.findall(by_cycle, plan)) == 1, plan
+    plan = capacity_ce_per_cycle(ts)._jdf.queryExecution().executedPlan().toString()
+    assert "partial_max_by" in plan, plan

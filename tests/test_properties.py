@@ -3,18 +3,24 @@ implicitly, made explicit and fuzzed.
 
 Pure-Python kernels get full hypothesis fuzzing (no Spark in the loop);
 Spark-level invariants use seeded random frames (one job per case keeps
-the suite fast)."""
+the suite fast), except the native dQ/dV kernel, fuzzed against its
+numpy reference with one job per batch of cycles."""
 
+import datetime as dt
 import math
+import warnings
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import functions as F
 import pytest
-from hypothesis import given, settings, strategies as st
+from hypothesis import example, given, settings, strategies as st
 
 from fixtures import arbin_frame
-from mxene_coin_cell_data_pipeline_spark.operators.dqdv import _peak_voltage
+from mxene_coin_cell_data_pipeline_spark.operators.dqdv import (
+    _peak_voltage,
+    dqdv_peak_per_cycle,
+)
 from mxene_coin_cell_data_pipeline_spark.operators.energy import energy_wh_per_cycle
 from mxene_coin_cell_data_pipeline_spark.operators.normalize import normalize_cycler
 
@@ -80,6 +86,105 @@ def test_dqdv_kernel_arange_ulp_overshoot_regression():
     assert vgrid[0] <= peak <= vgrid[-1]
     k = (peak - va.min()) / dv
     assert abs(k - round(k)) < 1e-6
+
+
+# ------------------------------------ native dQ/dV expression vs numpy kernel
+_NAN = float("nan")
+# exact binary voltages make duplicates and span == dv (0.25, 0.5) likely
+_VOLT = st.one_of(
+    st.sampled_from([1.0, 1.25, 1.5, 1.75, 2.0, 2.5]),
+    st.floats(min_value=1.0, max_value=5.0),
+)
+_CAP = st.one_of(
+    st.floats(min_value=0.0, max_value=10.0),
+    st.floats(min_value=0.0, max_value=10.0),
+    st.floats(min_value=0.0, max_value=10.0),
+    st.sampled_from([_NAN, None]),
+)
+# timestamps in seconds over a small range, so ties are common
+_TS = st.one_of(st.integers(0, 5), st.integers(0, 5), st.none())
+
+
+@st.composite
+def _cycle(draw):
+    """One cycle's DIS rows (timestamp, voltage, capacity). A missing
+    voltage voids the whole cycle, so about one cycle in five gets one."""
+    rows = draw(st.lists(st.tuples(_TS, _VOLT, _CAP), max_size=25))
+    if rows and draw(st.integers(0, 4)) == 0:
+        i = draw(st.integers(0, len(rows) - 1))
+        rows[i] = (rows[i][0], draw(st.sampled_from([_NAN, None])), rows[i][2])
+    return rows
+
+
+def _as_nan(x):
+    return _NAN if x is None else x
+
+
+def _numpy_peak(rows, dv) -> float:
+    """The reference kernel on one cycle's DIS rows in timestamp order
+    (NaT last, as pandas sorts), timestamp ties by capacity (NaN last)
+    — the tie order the native expression uses."""
+    def key(r):
+        t, _, q = r[0], r[1], _as_nan(r[2])
+        return (t is None, t or 0, math.isnan(q), 0.0 if math.isnan(q) else q)
+
+    rows = sorted(rows, key=key)
+    v = np.array([_as_nan(r[1]) for r in rows], dtype=float)
+    q = np.array([_as_nan(r[2]) for r in rows], dtype=float)
+    with warnings.catch_warnings():
+        warnings.simplefilter("ignore", RuntimeWarning)  # all-NaN nanmin
+        return _peak_voltage(v, q, dv)
+
+
+@given(
+    cycles=st.lists(_cycle(), min_size=1, max_size=12),
+    dv=st.sampled_from([0.005, 0.05, 0.25, 0.5]),
+)
+# the np.arange ulp-overshoot pin: the last grid point lies past V_max
+@example(cycles=[[(0, 1.0, 0.0), (1, 1.0, 0.0), (2, 1.0, 0.0), (3, 1.0, 0.0),
+                  (4, 2.0000000000000004, 10.0)]], dv=0.05)
+# span == dv: a one-point grid has no gradient; span == 2*dv is the
+# smallest valid grid
+@example(cycles=[[(0, 1.0, 0.0), (1, 1.5, 1.0), (2, 1.25, 2.0)],
+                 [(0, 1.0, 0.0), (1, 2.0, 1.0), (2, 1.25, 2.0)]], dv=0.5)
+# duplicate voltages, one pair sharing its timestamp and one without a
+# timestamp: np.interp takes the last duplicate entering a segment and
+# the first leaving it
+@example(cycles=[[(0, 1.0, 0.0), (1, 1.5, 1.0), (2, 1.5, 3.0), (2, 1.5, 2.0),
+                  (None, 1.5, 0.2), (3, 2.0, 4.0), (4, 1.0, 0.5)]], dv=0.05)
+# NULL / NaN capacity inside a valid cycle, NULL and NaN voltage, < 3 rows
+@example(cycles=[[(0, 1.0, None), (1, 1.5, 1.0), (2, 2.0, 2.0)],
+                 [(0, 1.0, _NAN), (1, 1.5, _NAN), (2, 2.0, None)],
+                 [(0, None, 1.0), (1, 1.5, 1.0), (2, 2.0, 2.0)],
+                 [(0, _NAN, 1.0), (1, 1.5, 1.0), (None, 2.0, 2.0)],
+                 [(0, 1.0, 0.0), (1, 2.0, 1.0)]], dv=0.05)
+# infinite capacity: np.interp's NaN fallbacks (retry from the right
+# sample, then a flat inf segment) decide the peak
+@example(cycles=[[(0, 1.0, 0.0), (1, 1.25, math.inf), (2, 2.0, 0.0)],
+                 [(0, 1.0, 0.0), (1, 1.25, math.inf), (2, 2.0, math.inf)]], dv=0.25)
+@settings(max_examples=30, deadline=None)
+def test_native_dqdv_matches_numpy_kernel(spark, cycles, dv):
+    """The Spark array-function kernel equals ``_peak_voltage`` bit for
+    bit on every cycle (NULL ↔ NaN)."""
+    t0 = dt.datetime(2024, 1, 1)
+    rows = [
+        (c, None if t is None else t0 + dt.timedelta(seconds=t), "CC_DIS", v, q)
+        for c, cycle in enumerate(cycles)
+        for t, v, q in cycle
+    ]
+    df = spark.createDataFrame(
+        rows,
+        "cycle_index long, timestamp timestamp, step_type string, "
+        "voltage_v double, discharge_ah double",
+    )
+    got = {r["cycle_index"]: r["dQdV_peak_V"] for r in dqdv_peak_per_cycle(df, dv).collect()}
+    assert set(got) == {c for c, cycle in enumerate(cycles) if cycle}
+    for c, peak in got.items():
+        want = _numpy_peak(cycles[c], dv)
+        if math.isnan(want):
+            assert peak is None, (cycles[c], want, peak)
+        else:
+            assert peak is not None and peak.hex() == want.hex(), (cycles[c], want, peak)
 
 
 # ------------------------------------------------------- trapezoid vs np.trapz
