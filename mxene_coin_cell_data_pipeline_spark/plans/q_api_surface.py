@@ -167,19 +167,15 @@ def st08_stream_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
     import tempfile
 
+    from ..streaming.run import replay_feed
     from ..streaming.snapshot import run_stream_agg_snapshot
 
     (ev,) = _ctx(spark, sf_dir, "events")
     tmp = tempfile.mkdtemp(prefix="st08_")
-    src = os.path.join(tmp, "feed")
     snap = os.path.join(tmp, "snapshot")
-    ev.repartitionByRange(4, "ts").write.mode("overwrite").parquet(src)
-    stream = (
-        spark.readStream.schema(spark.read.parquet(src).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
+    run_stream_agg_snapshot(
+        replay_feed(ev, tmp), snap, key="event_type", agg_cols={"value": "sum"}
     )
-    run_stream_agg_snapshot(stream, snap, key="event_type", agg_cols={"value": "sum"})
     return spark.read.parquet(snap).select(
         "event_type",
         "n",

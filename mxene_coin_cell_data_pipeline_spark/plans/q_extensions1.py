@@ -666,7 +666,7 @@ def d10_chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     survey="streaming: incremental latest-per-key snapshot maintenance "
     "(foreachBatch upsert — each micro-batch MERGEs into a persisted "
-    "parquet snapshot via window-dedup + atomic dir swap; the streaming "
+    "parquet snapshot via window-dedup + rename-aside dir swap; the streaming "
     "form of o07's CDC compaction, and the foreachBatch surface itself: "
     "batch joins against storage state, no streaming state store). The "
     "feed is split into 4 time-ranged files replayed one per micro-batch, "
@@ -680,20 +680,14 @@ def st06_stream_upsert_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
     import tempfile
 
+    from ..streaming.run import replay_feed
     from ..streaming.snapshot import run_stream_latest_snapshot
 
     (events,) = _ctx(spark, sf_dir, "events")
     tmp = tempfile.mkdtemp(prefix="st06_")
-    src = os.path.join(tmp, "feed")
     snap = os.path.join(tmp, "snapshot")
-    events.repartitionByRange(4, "ts").write.mode("overwrite").parquet(src)
-    stream = (
-        spark.readStream.schema(spark.read.parquet(src).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
     run_stream_latest_snapshot(
-        stream, snap, key="user_id", order_cols=["ts", "event_id"]
+        replay_feed(events, tmp), snap, key="user_id", order_cols=["ts", "event_id"]
     )
     return spark.read.parquet(snap).select(
         "user_id",

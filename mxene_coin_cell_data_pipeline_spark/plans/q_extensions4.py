@@ -414,20 +414,18 @@ def st10_stream_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
     import tempfile
 
+    from ..streaming.run import replay_feed
     from ..streaming.snapshot import run_stream_histogram_snapshot
 
     (events,) = _ctx(spark, sf_dir, "events")
     tmp = tempfile.mkdtemp(prefix="st10_")
-    src = os.path.join(tmp, "feed")
     snap = os.path.join(tmp, "hist")
-    events.repartitionByRange(4, "ts").write.mode("overwrite").parquet(src)
-    stream = (
-        spark.readStream.schema(spark.read.parquet(src).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
     run_stream_histogram_snapshot(
-        stream, snap, key="event_type", value_col="value", bin_width=10.0
+        replay_feed(events, tmp),
+        snap,
+        key="event_type",
+        value_col="value",
+        bin_width=10.0,
     )
     hist = spark.read.parquet(snap)
     tot = hist.groupBy("event_type").agg(F.sum("c").alias("n"))

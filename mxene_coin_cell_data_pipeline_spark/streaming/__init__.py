@@ -18,6 +18,11 @@ operator semantics:
   micro-batches — state is three floats per open (cell, cycle).
 - ``windowed_event_rollup``: classic watermark + tumbling event-time
   window aggregation over the events stream.
+- ``run_stream_latest_snapshot`` / ``run_stream_agg_snapshot`` /
+  ``run_stream_histogram_snapshot``: a persisted parquet snapshot
+  (latest row per key, additive totals, bin counts) merged per
+  micro-batch through one crash-safe, checkpoint-guarded merge step
+  (``snapshot._merge_batch``).
 """
 
 from .ingest import (
@@ -40,6 +45,7 @@ from .run import (
 from .snapshot import (
     merge_latest_by_key,
     run_stream_agg_snapshot,
+    run_stream_histogram_snapshot,
     run_stream_latest_snapshot,
 )
 
@@ -57,4 +63,5 @@ __all__ = [
     "run_stream_to_memory",
     "run_stream_latest_snapshot",
     "run_stream_agg_snapshot",
+    "run_stream_histogram_snapshot",
 ]

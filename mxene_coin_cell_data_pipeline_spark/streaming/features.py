@@ -22,6 +22,7 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from .._serde import register_self
 from ..operators._keys import cycle_keys, is_dis
+from .run import _run_foreach_batch
 
 register_self(sys.modules[__name__])
 
@@ -355,15 +356,7 @@ def stream_incremental_dedup(
                 hash_fn=hash_fn,
             ).write.mode("append").parquet(out_dir)
 
-        writer = (
-            doc_stream.writeStream.foreachBatch(_probe)
-            .outputMode("update")
-            .trigger(availableNow=True)
-        )
-        if checkpoint_dir is not None:
-            writer = writer.option("checkpointLocation", checkpoint_dir)
-        q = writer.start()
-        q.awaitTermination()
+        _run_foreach_batch(doc_stream, _probe, "update", checkpoint_dir)
     finally:
         buckets.unpersist()
         sets.unpersist()

@@ -9,10 +9,42 @@ the same plans with a different ``writeStream`` tail.
 from __future__ import annotations
 
 import itertools
+import os
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
 _SEQ = itertools.count()
+
+
+def _run_foreach_batch(
+    df: DataFrame,
+    fn: Callable[[DataFrame, int], None],
+    output_mode: str,
+    checkpoint_dir: str | None = None,
+) -> None:
+    """Run ``df`` to completion (availableNow), calling
+    ``fn(batch_df, batch_id)`` on every micro-batch; with
+    ``checkpoint_dir`` the committed offsets (and operator state) persist
+    there and a restart resumes at the first uncommitted batch."""
+    w = df.writeStream.foreachBatch(fn).outputMode(output_mode)
+    if checkpoint_dir is not None:
+        w = w.option("checkpointLocation", checkpoint_dir)
+    w.trigger(availableNow=True).start().awaitTermination()
+
+
+def replay_feed(df: DataFrame, work_dir: str) -> DataFrame:
+    """Write ``df`` under ``<work_dir>/feed`` as 4 ``ts``-ranged parquet
+    files and return a stream reading them one file per micro-batch —
+    the registered streaming queries' replay of a static table."""
+    src = os.path.join(work_dir, "feed")
+    df.repartitionByRange(4, "ts").write.mode("overwrite").parquet(src)
+    spark = df.sparkSession
+    return (
+        spark.readStream.schema(spark.read.parquet(src).schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src)
+    )
 
 
 def run_stream_to_memory(
@@ -63,18 +95,12 @@ def run_stream_append_parquet(
     feed — the exactly-once recovery contract pinned by
     tests/test_streaming_recovery.py.
     """
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.write.mode("append").parquet(out_dir)
-
-    q = (
-        df.writeStream.foreachBatch(_sink)
-        .outputMode(output_mode)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    _run_foreach_batch(
+        df,
+        lambda batch_df, batch_id: batch_df.write.mode("append").parquet(out_dir),
+        output_mode,
+        checkpoint_dir,
     )
-    q.awaitTermination()
 
 
 def run_stream_complete_parquet(
@@ -100,14 +126,9 @@ def run_stream_complete_parquet(
     if out_dir is None:
         out_dir = tempfile.mkdtemp(prefix="stream_complete_")
 
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.write.mode("overwrite").parquet(out_dir)
-
-    q = (
-        df.writeStream.foreachBatch(_sink)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
+    _run_foreach_batch(
+        df,
+        lambda batch_df, batch_id: batch_df.write.mode("overwrite").parquet(out_dir),
+        "complete",
     )
-    q.awaitTermination()
     return df.sparkSession.read.parquet(out_dir)

@@ -16,11 +16,15 @@ Covers:
   merge + checkpoint;
 - applyInPandasWithState stateful energy (st07 shape): per-key
   accumulator state must survive the restart because phase boundaries
-  cut cycles mid-accumulation.
+  cut cycles mid-accumulation;
+- the one snapshot merge step (``snapshot._merge_batch``) under each
+  combine function: a replayed batch is skipped, and a crash between
+  the swap's two renames loses no state.
 """
 
 import math
 import os
+from functools import partial
 
 import pytest
 from pyspark.sql import functions as F
@@ -275,53 +279,53 @@ def test_histogram_snapshot_checkpoint_recovery(spark, sf_dir, tmp_path):
     assert got == want
 
 
+def _combine(runner):
+    """The snapshot kind's combine function, as its runner binds it."""
+    from mxene_coin_cell_data_pipeline_spark.streaming.snapshot import (
+        merge_additive_totals,
+        merge_bin_counts,
+        merge_latest_by_key,
+    )
+
+    if runner == "agg":
+        return partial(
+            merge_additive_totals, key="event_type", agg_cols={"value": "sum"}
+        )
+    if runner == "histogram":
+        return partial(
+            merge_bin_counts, key="event_type", value_col="value", bin_width=10.0
+        )
+    return partial(merge_latest_by_key, key="user_id", order_cols=["ts", "event_id"])
+
+
+def _snapshot_rows(spark, snap):
+    return sorted(map(tuple, spark.read.parquet(snap).collect()))
+
+
 @pytest.mark.parametrize("runner", ["agg", "histogram", "latest"])
 def test_replayed_batch_is_noop_all_runners(spark, sf_dir, tmp_path, runner):
-    """The rename-before-offset-commit crash window, parametrized over
-    ALL THREE snapshot runners' merge steps: replaying an
-    already-applied batch_id must leave the snapshot unchanged, and
-    the NEXT batch must still apply. The additive runners (agg,
-    histogram) get this from the _LAST_BATCH guard; the latest-by-key
-    runner is idempotent by construction (no guard needed) — both
-    roads must land on the same observable."""
+    """The swap-before-offset-commit crash window, parametrized over
+    ALL THREE combine functions through the one merge step: replaying
+    an already-applied batch_id must leave the snapshot unchanged, and
+    the NEXT batch must still apply. Under a checkpoint the
+    _LAST_BATCH guard skips the replay for every kind (the
+    latest-by-key combine would also be idempotent without it)."""
     from mxene_coin_cell_data_pipeline_spark.sources.tables import load_table
-    from mxene_coin_cell_data_pipeline_spark.streaming.snapshot import (
-        _merge_agg_batch,
-        _merge_histogram_batch,
-        _merge_latest_batch,
-    )
+    from mxene_coin_cell_data_pipeline_spark.streaming.snapshot import _merge_batch
 
     ev = load_table(spark, sf_dir, "events").limit(500)
     snap = str(tmp_path / "snap")
+    combine = _combine(runner)
 
     def merge(batch_df, batch_id):
-        if runner == "agg":
-            _merge_agg_batch(
-                batch_df, batch_id, snap, "event_type", {"value": "sum"},
-                ckpt_id="ckA",
-            )
-        elif runner == "histogram":
-            _merge_histogram_batch(
-                batch_df, batch_id, snap, "event_type", "value", 10.0,
-                ckpt_id="ckA",
-            )
-        else:
-            _merge_latest_batch(
-                batch_df, batch_id, snap, "user_id", ["ts", "event_id"]
-            )
-
-    def snapshot_rows():
-        return sorted(
-            map(tuple, spark.read.parquet(snap).drop("_rn").collect())
-        )
+        _merge_batch(batch_df, batch_id, snap, combine, ckpt_id="ckA")
 
     merge(ev, 0)
-    once = snapshot_rows()
+    once = _snapshot_rows(spark, snap)
     # replay of batch 0 (crash-window restart) — must be a no-op
     merge(ev, 0)
-    assert snapshot_rows() == once
-    # the next batch still applies (the guard is <=, not a latch;
-    # the idempotent merge folds genuinely-new rows)
+    assert _snapshot_rows(spark, snap) == once
+    # the next batch still applies (the guard is <=, not a latch)
     if runner == "latest":
         # newer versions for every key: the later ts must win
         max_once = max(
@@ -331,7 +335,7 @@ def test_replayed_batch_is_noop_all_runners(spark, sf_dir, tmp_path, runner):
     else:
         batch1 = ev
     merge(batch1, 1)
-    after = snapshot_rows()
+    after = _snapshot_rows(spark, snap)
     assert after != once
     if runner == "agg":
         total = sum(r["n"] for r in spark.read.parquet(snap).collect())
@@ -347,43 +351,41 @@ def test_replayed_batch_is_noop_all_runners(spark, sf_dir, tmp_path, runner):
         )
         # and a second replay of batch 1 is again a no-op
         merge(batch1, 1)
-        assert snapshot_rows() == after
+        assert _snapshot_rows(spark, snap) == after
 
 
 def test_additive_merge_replayed_batch_is_skipped(spark, sf_dir, tmp_path):
-    """The rename-before-offset-commit crash window: a crash after the
+    """The swap-before-offset-commit crash window: a crash after the
     snapshot swap but before the checkpoint commits the offset replays
-    the SAME batch_id on restart. The _LAST_BATCH marker (swapped
-    atomically with the snapshot) must make re-applying that batch a
-    no-op — without it the additive merge double-counts."""
+    the SAME batch_id on restart. The _LAST_BATCH marker (swapped in
+    with the snapshot) must make re-applying that batch a no-op —
+    without it the additive combines double-count."""
     from mxene_coin_cell_data_pipeline_spark.sources.tables import load_table
-    from mxene_coin_cell_data_pipeline_spark.streaming.snapshot import (
-        _merge_agg_batch,
-        _merge_histogram_batch,
-    )
+    from mxene_coin_cell_data_pipeline_spark.streaming.snapshot import _merge_batch
 
     ev = load_table(spark, sf_dir, "events").limit(500)
+    agg, hist_combine = _combine("agg"), _combine("histogram")
     snap = str(tmp_path / "snap")
-    _merge_agg_batch(ev, 0, snap, "event_type", {"value": "sum"}, ckpt_id="ckA")
+    _merge_batch(ev, 0, snap, agg, ckpt_id="ckA")
     once = {r["event_type"]: r["n"] for r in spark.read.parquet(snap).collect()}
     # replay of batch 0 (crash-window restart) — must be skipped
-    _merge_agg_batch(ev, 0, snap, "event_type", {"value": "sum"}, ckpt_id="ckA")
+    _merge_batch(ev, 0, snap, agg, ckpt_id="ckA")
     assert {
         r["event_type"]: r["n"] for r in spark.read.parquet(snap).collect()
     } == once
     # the next batch still applies (guard is <=, not a latch)
-    _merge_agg_batch(ev, 1, snap, "event_type", {"value": "sum"}, ckpt_id="ckA")
+    _merge_batch(ev, 1, snap, agg, ckpt_id="ckA")
     assert sum(
         r["n"] for r in spark.read.parquet(snap).collect()
     ) == 2 * sum(once.values())
 
     hist = str(tmp_path / "hist")
-    _merge_histogram_batch(ev, 0, hist, "event_type", "value", 10.0, ckpt_id="ckA")
+    _merge_batch(ev, 0, hist, hist_combine, ckpt_id="ckA")
     honce = {
         (r["event_type"], r["bin"]): r["c"]
         for r in spark.read.parquet(hist).collect()
     }
-    _merge_histogram_batch(ev, 0, hist, "event_type", "value", 10.0, ckpt_id="ckA")
+    _merge_batch(ev, 0, hist, hist_combine, ckpt_id="ckA")
     assert {
         (r["event_type"], r["bin"]): r["c"]
         for r in spark.read.parquet(hist).collect()
@@ -392,8 +394,8 @@ def test_additive_merge_replayed_batch_is_skipped(spark, sf_dir, tmp_path):
     # unguarded (checkpoint-less) keeps the documented at-least-once
     # shape: the same replay double-counts
     snap2 = str(tmp_path / "snap2")
-    _merge_agg_batch(ev, 0, snap2, "event_type", {"value": "sum"}, ckpt_id=None)
-    _merge_agg_batch(ev, 0, snap2, "event_type", {"value": "sum"}, ckpt_id=None)
+    _merge_batch(ev, 0, snap2, agg, ckpt_id=None)
+    _merge_batch(ev, 0, snap2, agg, ckpt_id=None)
     assert sum(
         r["n"] for r in spark.read.parquet(snap2).collect()
     ) == 2 * sum(once.values())
@@ -402,7 +404,48 @@ def test_additive_merge_replayed_batch_is_skipped(spark, sf_dir, tmp_path):
     # checkpoint (fresh lineage, batch_ids restart at 0) must MERGE
     # its batch 0, not skip it — the marker carries the checkpoint
     # identity and is ignored on mismatch
-    _merge_agg_batch(ev, 0, snap, "event_type", {"value": "sum"}, ckpt_id="ckB")
+    _merge_batch(ev, 0, snap, agg, ckpt_id="ckB")
     assert sum(
         r["n"] for r in spark.read.parquet(snap).collect()
     ) == 3 * sum(once.values())
+
+
+@pytest.mark.parametrize("runner", ["agg", "histogram", "latest"])
+def test_crash_inside_swap_loses_no_state(
+    spark, sf_dir, tmp_path, monkeypatch, runner
+):
+    """Fault injection inside the snapshot swap: the tmp → live rename
+    fails after the live snapshot was moved aside. The batch's offset
+    is never committed, so the restart replays it — and the snapshot
+    must equal an uninterrupted run's, not just the replayed batch
+    merged onto nothing."""
+    from mxene_coin_cell_data_pipeline_spark.sources.tables import load_table
+    from mxene_coin_cell_data_pipeline_spark.streaming import snapshot
+
+    ev = load_table(spark, sf_dir, "events").filter(F.col("event_id") < 500)
+    b0 = ev.filter(F.col("event_id") % 2 == 0)
+    b1 = ev.filter(F.col("event_id") % 2 == 1)
+    combine = _combine(runner)
+
+    ref = str(tmp_path / "ref")
+    for batch_id, batch in enumerate([b0, b1]):
+        snapshot._merge_batch(batch, batch_id, ref, combine, ckpt_id="ckA")
+
+    snap = str(tmp_path / "snap")
+    snapshot._merge_batch(b0, 0, snap, combine, ckpt_id="ckA")
+    real_rename = os.rename
+
+    def crash_on_tmp_to_live(src, dst):
+        if src == snap + ".tmp":
+            raise OSError("injected crash before tmp -> live")
+        real_rename(src, dst)
+
+    monkeypatch.setattr(snapshot.os, "rename", crash_on_tmp_to_live)
+    with pytest.raises(OSError, match="injected crash"):
+        snapshot._merge_batch(b1, 1, snap, combine, ckpt_id="ckA")
+    monkeypatch.undo()
+
+    # restart: batch 1's offset was never committed, so it replays
+    snapshot._merge_batch(b1, 1, snap, combine, ckpt_id="ckA")
+    assert _snapshot_rows(spark, snap) == _snapshot_rows(spark, ref)
+    assert not os.path.exists(snap + ".old")
