@@ -24,6 +24,13 @@ cycle keys, or, with no window at all (capacity or dQ/dV alone),
 partially aggregated before the shuffle; only the per-cycle rows move
 again for step 4.
 
+``full_feature_pipeline`` materializes the ordered table through
+``checkpoint.durable_checkpoint``: the plan above runs as Spark jobs
+inside the call, and every later read (the CSV, the fade summary, the
+report, QC) scans the stored cycles instead of re-running the raw-row
+scan, the exchange, the windows and the dQ/dV kernel. The checkpoint
+job runs the same plan, so the one-task-per-cell limit is unchanged.
+
 The single-feature operators (``capacity_ce_per_cycle``, ...) select
 their family from this plan, so each formula has one implementation.
 """
@@ -32,6 +39,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from ..checkpoint import durable_checkpoint
 from ._keys import cell_keys, cycle_keys, drop_null_cycles, is_dis
 from .capacity import capacity_aggs, coulombic_efficiency, q_norm
 from .dqdv import DEFAULT_DV, dqdv_points, dqdv_shift, peak_voltage
@@ -111,9 +119,16 @@ def full_feature_pipeline(
     ts: DataFrame, rated_ah: float = 3.0, dv: float = DEFAULT_DV, cache: bool = False
 ) -> DataFrame:
     """Canonical timeseries → per-cycle feature table ordered by the
-    cycle keys (pipeline.py:282-296).
+    cycle keys (pipeline.py:282-296), materialized once.
 
-    ``cache`` is accepted and ignored: the plan reads ``ts`` once, so
-    persisting it would only pin cached blocks nothing frees.
+    The table is computed inside this call by one eager
+    ``durable_checkpoint`` (a ``localCheckpoint``, or a reliable
+    checkpoint when a checkpoint dir is configured), so later reads of
+    the returned frame do not rescan ``ts``. Local checkpoint blocks are
+    freed when the frame is garbage-collected. A cell is still one task
+    (module docstring). ``cache`` is accepted and ignored: the table is already
+    materialized, and ``persist`` would only pin blocks nothing frees.
     """
-    return per_cycle_features(ts, rated_ah, dv).orderBy(*cycle_keys(ts))
+    return durable_checkpoint(
+        per_cycle_features(ts, rated_ah, dv).orderBy(*cycle_keys(ts))
+    )

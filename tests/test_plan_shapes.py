@@ -509,22 +509,13 @@ def test_d21_keeper_is_aggregate_not_window(spark, sf_dir):
     assert "BroadcastNestedLoopJoin" not in plan
 
 
-def test_feature_pipeline_is_one_cell_exchange(spark, tmp_path):
-    """The per-cycle feature table is one partition-local plan over the
-    raw rows: one parquet scan, one hash exchange by cell, no broadcast
-    join chain and no Python hop. Feature subsets without IR keep their
-    cycle-level parallelism."""
+def _two_cell_timeseries(spark, tmp_path) -> str:
+    """Two fixture cells normalized and written as parquet; returns the
+    path, so feature plans start from a ``FileScan parquet``."""
     import pandas as pd
 
-    from fixtures import RATED_AH, arbin_frame
-    from mxene_coin_cell_data_pipeline_spark.operators import (
-        capacity_ce_per_cycle,
-        full_feature_pipeline,
-        normalize_cycler,
-    )
-    from mxene_coin_cell_data_pipeline_spark.operators.features import (
-        per_cycle_features,
-    )
+    from fixtures import arbin_frame
+    from mxene_coin_cell_data_pipeline_spark.operators import normalize_cycler
     from mxene_coin_cell_data_pipeline_spark.sources import read_cycler_csv
 
     cells = []
@@ -536,8 +527,29 @@ def test_feature_pipeline_is_one_cell_exchange(spark, tmp_path):
     pd.concat(cells, ignore_index=True).to_csv(csv, index=False)
     path = str(tmp_path / "ts.parquet")
     normalize_cycler(read_cycler_csv(spark, csv)).write.parquet(path)
+    return path
 
-    feat = full_feature_pipeline(spark.read.parquet(path), rated_ah=RATED_AH)
+
+def test_feature_pipeline_is_one_cell_exchange(spark, tmp_path):
+    """The per-cycle feature table is one partition-local plan over the
+    raw rows: one parquet scan, one hash exchange by cell, no broadcast
+    join chain and no Python hop. Feature subsets without IR keep their
+    cycle-level parallelism. The plan is the one
+    ``full_feature_pipeline`` checkpoints (its returned frame scans the
+    materialized rows)."""
+    from fixtures import RATED_AH
+    from mxene_coin_cell_data_pipeline_spark.operators import (
+        capacity_ce_per_cycle,
+    )
+    from mxene_coin_cell_data_pipeline_spark.operators.features import (
+        per_cycle_features,
+    )
+
+    path = _two_cell_timeseries(spark, tmp_path)
+
+    feat = per_cycle_features(spark.read.parquet(path), rated_ah=RATED_AH).orderBy(
+        "cell_id", "cycle_index"
+    )
     plan = feat._jdf.queryExecution().executedPlan().toString()
     assert len(re.findall(r"Exchange hashpartitioning\(cell_id", plan)) == 1, plan
     assert plan.count("FileScan parquet") == 1, plan
@@ -554,3 +566,32 @@ def test_feature_pipeline_is_one_cell_exchange(spark, tmp_path):
     assert len(re.findall(by_cycle, plan)) == 1, plan
     plan = capacity_ce_per_cycle(ts)._jdf.queryExecution().executedPlan().toString()
     assert "partial_max_by" in plan, plan
+
+
+def test_feature_table_is_read_once(spark, tmp_path):
+    """``full_feature_pipeline`` materializes the table when it is
+    built, so the summary, report and QC plans read the stored cycles:
+    no raw-row parquet scan, no feature window and no exchange of raw
+    rows by cell. The fade fit's own aggregate by cell is the one cell
+    exchange left, over the cycle rows."""
+    from fixtures import RATED_AH
+    from mxene_coin_cell_data_pipeline_spark.operators import (
+        fade_and_rul,
+        full_feature_pipeline,
+    )
+    from mxene_coin_cell_data_pipeline_spark.operators.qc import qc_aggregate
+    from mxene_coin_cell_data_pipeline_spark.operators.report import report_table
+
+    path = _two_cell_timeseries(spark, tmp_path)
+    feat = full_feature_pipeline(spark.read.parquet(path), rated_ah=RATED_AH)
+    for name, df, cell_exchanges in (
+        ("fade", fade_and_rul(feat), 1),
+        ("report", report_table(feat), 0),
+        ("qc", qc_aggregate(feat), 0),
+    ):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "FileScan parquet" not in plan, (name, plan)
+        assert "Window" not in plan, (name, plan)
+        assert "Scan ExistingRDD" in plan, (name, plan)
+        found = re.findall(r"Exchange hashpartitioning\(cell_id", plan)
+        assert len(found) == cell_exchanges, (name, plan)

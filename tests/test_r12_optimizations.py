@@ -209,3 +209,45 @@ def test_durable_checkpoint_reliable_mode(spark, tmp_path):
     assert os.path.isdir(ckdir) and any(os.scandir(ckdir)), (
         "reliable checkpoint wrote nothing"
     )
+
+
+def test_durable_checkpoint_resets_mismatched_dir(spark, tmp_path):
+    """A checkpoint dir set on the context earlier (A) must not swallow
+    the configured one (B): the feature table's reliable checkpoint
+    lands under B and equals the local-checkpoint form. Once B is set,
+    later calls keep it (one Spark UUID subdirectory under B)."""
+    import os
+
+    from fixtures import RATED_AH, arbin_frame
+    from mxene_coin_cell_data_pipeline_spark.operators import (
+        full_feature_pipeline,
+        normalize_cycler,
+    )
+    from mxene_coin_cell_data_pipeline_spark.sources import read_cycler_csv
+
+    csv = str(tmp_path / "cell.csv")
+    arbin_frame().to_csv(csv, index=False)
+    ts = normalize_cycler(read_cycler_csv(spark, csv), cell_id="C1")
+    local = full_feature_pipeline(ts, rated_ah=RATED_AH).toPandas()
+
+    dir_a, dir_b = str(tmp_path / "ck_a"), str(tmp_path / "ck_b")
+    spark.sparkContext.setCheckpointDir(dir_a)
+    spark.conf.set("spark.graft.checkpointDir", dir_b)
+    try:
+        got = full_feature_pipeline(ts, rated_ah=RATED_AH).toPandas()
+        again = full_feature_pipeline(ts, rated_ah=RATED_AH).toPandas()
+    finally:
+        spark.conf.unset("spark.graft.checkpointDir")
+
+    def rdd_dirs(root):
+        return [
+            name
+            for dirpath, dirnames, _ in os.walk(root)
+            for name in dirnames
+            if name.startswith("rdd-")
+        ]
+
+    assert rdd_dirs(dir_b), "nothing checkpointed into the configured dir"
+    assert rdd_dirs(dir_a) == []
+    assert len(os.listdir(dir_b)) == 1, os.listdir(dir_b)
+    assert got.equals(local) and again.equals(local)
