@@ -1403,8 +1403,11 @@ def mmr_diverse_topk(
         # IEEE-identical to the oracle's list_dot_product expression
         # AND to the JVM rel expression below (same fold order, same
         # IEEE ops). Round half-AWAY-from-zero on the EXACT binary
-        # double via decimal.Decimal (r12, ADVICE fix): Spark F.round
-        # is BigDecimal HALF_UP on the exact double — floor(x+0.5)
+        # double via decimal.Decimal (r12, ADVICE fix). Spark F.round
+        # is BigDecimal HALF_UP on the double's shortest decimal repr
+        # (Double.toString), not its exact binary value; the two agree
+        # here because |x| <= 1e9 < 2^52 keeps every n.5 exactly
+        # representable, so no shortest repr crosses a half. floor(x+0.5)
         # disagrees when x+0.5 is inexact at ~1e9 magnitude (the
         # 0.49999999999999994 class of cases)
         x = (

@@ -19,13 +19,17 @@ def cell_keys(df: DataFrame) -> list[str]:
     return ["cell_id"] if "cell_id" in df.columns else []
 
 
+#: NULL-safe substring discharge predicate (pipeline.py:171 etc.), as SQL
+IS_DIS = "coalesce(contains(`step_type`, 'DIS'), false)"
+
+
 def drop_null_cycles(df: DataFrame) -> DataFrame:
     """pandas ``groupby`` DROPS NaN keys (reference pipeline.py:159
     etc.), Spark groupBy keeps a NULL group — filter to match the
     reference exactly. The filter is pushed into the scan."""
-    return df.filter(F.col("cycle_index").isNotNull())
+    return df.filter("`cycle_index` IS NOT NULL")
 
 
-def is_dis(col: str = "step_type") -> F.Column:
-    """NULL-safe substring discharge predicate (pipeline.py:171 etc.)."""
-    return F.coalesce(F.col(col).contains("DIS"), F.lit(False))
+def is_dis() -> F.Column:
+    """``IS_DIS`` as a Column."""
+    return F.expr(IS_DIS)

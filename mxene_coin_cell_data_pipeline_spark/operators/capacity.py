@@ -20,29 +20,29 @@ The aggregates and the window run inside the shared per-cycle plan
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, WindowSpec, functions as F
+from pyspark.sql import DataFrame
 
 
-def _last_non_null(value: str, order: str = "timestamp") -> F.Column:
-    return F.max_by(F.col(value), F.when(F.col(value).isNotNull(), F.col(order)))
+def _last_non_null(value: str, order: str = "timestamp") -> str:
+    return f"max_by(`{value}`, CASE WHEN `{value}` IS NOT NULL THEN `{order}` END)"
 
 
-def capacity_aggs() -> list[Column]:
+def capacity_aggs() -> list[str]:
     return [
-        _last_non_null("discharge_ah").alias("Q_dis_Ah"),
-        _last_non_null("charge_ah").alias("Q_chg_Ah"),
+        f"{_last_non_null('discharge_ah')} AS `Q_dis_Ah`",
+        f"{_last_non_null('charge_ah')} AS `Q_chg_Ah`",
     ]
 
 
-def coulombic_efficiency() -> Column:
-    qchg = F.col("Q_chg_Ah")
-    return F.when(qchg.isNull() | (qchg == 0), F.lit(None).cast("double")).otherwise(
-        F.col("Q_dis_Ah") / qchg
+def coulombic_efficiency() -> str:
+    return (
+        "CASE WHEN `Q_chg_Ah` IS NULL OR `Q_chg_Ah` = 0 THEN CAST(NULL AS DOUBLE) "
+        "ELSE `Q_dis_Ah` / `Q_chg_Ah` END"
     )
 
 
-def q_norm(by_cell: WindowSpec) -> Column:
-    return F.try_divide(F.col("Q_dis_Ah"), F.first("Q_dis_Ah").over(by_cell))
+def q_norm(by_cell: str) -> str:
+    return f"try_divide(`Q_dis_Ah`, first(`Q_dis_Ah`) {by_cell})"
 
 
 def capacity_ce_per_cycle(df: DataFrame) -> DataFrame:

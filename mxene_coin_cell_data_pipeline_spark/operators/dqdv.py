@@ -4,10 +4,16 @@ Reference (pipeline.py:206-228): per cycle, interpolate
 Q(V) onto a uniform voltage grid, take the finite-difference gradient,
 and report the grid voltage at the gradient argmax. ``_peak_voltage``
 is that numpy kernel, kept as the reference; ``peak_voltage`` is the
-same kernel written with Spark's built-in array functions, so the
-feature plan (operators/features.py) runs it inside the per-cycle
-aggregate with no Python hop. The two agree bit for bit
+same kernel as one SQL expression over Spark's built-in array
+functions (``transform``, ``zip_with``, ``filter``, ``sort_array``),
+so the feature plan (operators/features.py) runs it inside the
+per-cycle aggregate with no Python hop. The two agree bit for bit
 (tests/test_properties.py).
+
+The expression is text the JVM parses once: built as Column objects it
+cost some 1,500 py4j calls per feature plan. Every float in it is a
+DOUBLE literal (``0.05D``, operators/_sql.py): a bare SQL ``0.05`` is a
+DECIMAL and would change the grid arithmetic.
 
 Kernel semantics, mirrored operation by operation:
 - DIS rows only; NULL peak when fewer than 3 rows (pipeline.py:209);
@@ -37,7 +43,9 @@ The *shift* part (A10) is window algebra over the per-cycle rows:
 from __future__ import annotations
 
 import numpy as np
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import DataFrame
+
+from ._sql import double
 
 DEFAULT_DV = 0.05  # pipeline.py:206 (docs recommend 0.005 for real data)
 
@@ -60,133 +68,114 @@ def _peak_voltage(voltage: np.ndarray, dis_ah: np.ndarray, dv: float) -> float:
     return float(vgrid[int(np.argmax(dqdv))])
 
 
-def _let(value: Column, body) -> Column:
-    """``body(value)`` with ``value`` evaluated once. A lambda that reads
-    an array column directly would rebuild it for every element
-    (Catalyst inlines projected columns into lambdas); a lambda
-    parameter is bound once."""
-    return F.element_at(F.transform(F.array(value), body), 1)
+def _let(value: str, var: str, body: str) -> str:
+    """``body`` with the lambda variable ``var`` bound to ``value``,
+    evaluated once. A lambda that reads an array column directly would
+    rebuild it for every element (Catalyst inlines projected columns
+    into lambdas); a lambda parameter is bound once. Lambda variables
+    are named apart from each other and from every column the kernel
+    reads, so no name is shadowed."""
+    return f"element_at(transform(array({value}), {var} -> {body}), 1)"
 
 
-def dqdv_points(dis: Column) -> Column:
+def dqdv_points(dis: str) -> str:
     """Aggregate: the cycle's DIS rows as ``array<struct<v, t_null, t,
     q>>`` in kernel order — by voltage, ties in timestamp order (a NULL
     timestamp last, as pandas sorts NaT), then by capacity. NULL voltage
     and capacity become NaN."""
-    nan = F.lit(float("nan"))
-    row = F.struct(
-        F.coalesce(F.col("voltage_v"), nan).alias("v"),
-        F.col("timestamp").isNull().alias("t_null"),
-        F.col("timestamp").alias("t"),
-        F.coalesce(F.col("discharge_ah"), nan).alias("q"),
-    )
-    return F.sort_array(F.collect_list(F.when(dis, row)))
-
-
-def _brackets(v: Column, grid: Column, n: Column, ng: Column) -> Column:
-    """Index of the last sample ≤ each grid point (numpy's
-    binary_search_with_guess) for the whole grid in one merge: sort the
-    samples and the grid points together, a sample ahead of an equal
-    grid point; grid point k at merged position p has p − 1 − k samples
-    ahead of it. O((rows + grid)·log) in one native sort and one pass,
-    where a search per grid point costs a lambda call per step."""
-
-    def tagged(xs, size, kind):
-        return F.arrays_zip(xs.alias("x"), F.array_repeat(F.lit(kind), size).alias("kind"))
-
-    merged = F.sort_array(F.concat(tagged(v, n, 0), tagged(grid, ng, 1)))
-    pos = _let(
-        merged,
-        lambda m: F.filter(
-            F.sequence(F.lit(1), n + ng), lambda i: F.element_at(m, i)["kind"] == 1
-        ),
-    )
-    return F.transform(pos, lambda p, k: p - k - 2)
-
-
-def _interp(x: Column, j: Column, v: Column, q: Column, n: Column) -> Column:
-    """np.interp(x, v, q) for one grid point x ≥ v[0] whose bracket
-    starts at sample j."""
-    v_lo, q_lo = F.element_at(v, j + 1), F.element_at(q, j + 1)
-    v_hi, q_hi = F.element_at(v, j + 2), F.element_at(q, j + 2)
-    slope = (q_hi - q_lo) / (v_hi - v_lo)
-    fwd = slope * (x - v_lo) + q_lo
-    back = slope * (x - v_hi) + q_hi
+    nan = double(float("nan"))
     return (
-        F.when(j >= n - 1, F.element_at(q, n))
-        .when(v_lo == x, q_lo)
-        .when(~F.isnan(fwd), fwd)
-        .when(F.isnan(back) & (q_lo == q_hi), q_lo)
-        .otherwise(back)
+        f"sort_array(collect_list(CASE WHEN {dis} THEN named_struct("
+        f"'v', coalesce(`voltage_v`, {nan}), 't_null', `timestamp` IS NULL, "
+        f"'t', `timestamp`, 'q', coalesce(`discharge_ah`, {nan})) END))"
     )
 
 
-def _grid_argmax(s: Column, dv: float) -> Column:
+def _brackets() -> str:
+    """Index of the last sample ≤ each grid point of the state ``s``
+    (numpy's binary_search_with_guess) for the whole grid in one merge:
+    sort the samples and the grid points together, a sample ahead of an
+    equal grid point; grid point k at merged position p has p − 1 − k
+    samples ahead of it. O((rows + grid)·log) in one native sort and
+    one pass, where a search per grid point costs a lambda call per
+    step."""
+    merged = (
+        "sort_array(concat("
+        "transform(s.v, x -> named_struct('x', x, 'kind', 0)), "
+        "transform(s.grid, x -> named_struct('x', x, 'kind', 1))))"
+    )
+    at = _let(merged, "m", "filter(sequence(1, s.n + s.ng), i -> element_at(m, i).kind = 1)")
+    return f"transform({at}, (p_at, k) -> p_at - k - 2)"
+
+
+def _interp() -> str:
+    """np.interp(x, s.v, s.q) for one grid point x ≥ v[0] whose bracket
+    starts at sample j."""
+    v_lo, q_lo = "element_at(s.v, j + 1)", "element_at(s.q, j + 1)"
+    v_hi, q_hi = "element_at(s.v, j + 2)", "element_at(s.q, j + 2)"
+    slope = f"(({q_hi} - {q_lo}) / ({v_hi} - {v_lo}))"
+    fwd = f"({slope} * (x - {v_lo}) + {q_lo})"
+    back = f"({slope} * (x - {v_hi}) + {q_hi})"
+    return (
+        f"CASE WHEN j >= s.n - 1 THEN element_at(s.q, s.n) "
+        f"WHEN {v_lo} = x THEN {q_lo} "
+        f"WHEN NOT isnan({fwd}) THEN {fwd} "
+        f"WHEN isnan({back}) AND {q_lo} = {q_hi} THEN {q_lo} "
+        f"ELSE {back} END"
+    )
+
+
+def _grid_argmax(dv: float) -> str:
     """Grid voltage at the first maximal np.gradient(interp(grid), dv)."""
-    last = s["ng"] - 1
-
-    def peak(qg):
-        def grad(f, k):
-            return (
-                F.when(k == 0, (F.element_at(qg, 2) - f) / F.lit(dv))
-                .when(k == last, (f - F.element_at(qg, k)) / F.lit(dv))
-                .otherwise(
-                    (F.element_at(qg, k + 2) - F.element_at(qg, k)) / F.lit(2.0 * dv)
-                )
-            )
-
-        return _let(
-            F.transform(qg, grad),
-            lambda g: F.element_at(
-                s["grid"], F.array_position(g, F.array_max(g)).cast("int")
-            ),
-        )
-
-    lo = _brackets(s["v"], s["grid"], s["n"], s["ng"])
-    qgrid = F.zip_with(s["grid"], lo, lambda x, j: _interp(x, j, s["v"], s["q"], s["n"]))
-    return _let(qgrid, peak)
+    d, d2 = double(dv), double(2.0 * dv)
+    grad = (
+        f"CASE WHEN k = 0 THEN (element_at(qg, 2) - f) / {d} "
+        f"WHEN k = s.ng - 1 THEN (f - element_at(qg, k)) / {d} "
+        f"ELSE (element_at(qg, k + 2) - element_at(qg, k)) / {d2} END"
+    )
+    peak = _let(
+        f"transform(qg, (f, k) -> {grad})",
+        "g",
+        "element_at(s.grid, CAST(array_position(g, array_max(g)) AS INT))",
+    )
+    qgrid = f"zip_with(s.grid, {_brackets()}, (x, j) -> {_interp()})"
+    return _let(qgrid, "qg", peak)
 
 
-def peak_voltage(points: Column, dv: float) -> Column:
+def peak_voltage(points: str, dv: float) -> str:
     """``_peak_voltage`` over a ``dqdv_points`` array; NULL where the
     numpy kernel returns NaN."""
     if not dv > 0:
         raise ValueError(f"dQ/dV grid step must be positive, got {dv!r}")
-
-    def kernel(p):
-        v0 = F.element_at(p, 1)["v"]
-        span = F.element_at(p, -1)["v"] - v0
-        ng = F.ceil(span / F.lit(dv))
-        # CASE branches run in order: no element is read from a short array
-        valid = F.when(F.size(p) < 3, False).otherwise(
-            ~F.isnan(span) & (span >= dv) & (ng >= 2)
-        )
-        step = (v0 + F.lit(dv)) - v0
-        grid = F.transform(
-            F.sequence(F.lit(0), ng.cast("int") - 1),
-            lambda k: F.when(k == 0, v0)
-            .when(k == 1, v0 + F.lit(dv))
-            .otherwise(v0 + k * step),
-        )
-        q = _let(F.array_min(p["q"]), lambda q_min: F.transform(p["q"], lambda x: x - q_min))
-        state = F.struct(
-            F.size(p).alias("n"),
-            ng.cast("int").alias("ng"),
-            p["v"].alias("v"),
-            q.alias("q"),
-            grid.alias("grid"),
-        )
-        return F.when(valid, _let(state, lambda s: _grid_argmax(s, dv)))
-
-    return _let(points, kernel)
+    d = double(dv)
+    v0 = "element_at(p, 1).v"
+    span = f"(element_at(p, -1).v - {v0})"
+    ng = f"ceil({span} / {d})"
+    # CASE branches run in order: no element is read from a short array
+    valid = (
+        f"CASE WHEN size(p) < 3 THEN false "
+        f"ELSE NOT isnan({span}) AND {span} >= {d} AND {ng} >= 2 END"
+    )
+    step = f"(({v0} + {d}) - {v0})"
+    grid = (
+        f"transform(sequence(0, CAST({ng} AS INT) - 1), k -> CASE WHEN k = 0 THEN {v0} "
+        f"WHEN k = 1 THEN {v0} + {d} ELSE {v0} + k * {step} END)"
+    )
+    q = _let("array_min(p.q)", "q_min", "transform(p.q, x -> x - q_min)")
+    state = (
+        f"named_struct('n', size(p), 'ng', CAST({ng} AS INT), 'v', p.v, "
+        f"'q', {q}, 'grid', {grid})"
+    )
+    return _let(points, "p", f"CASE WHEN {valid} THEN {_let(state, 's', _grid_argmax(dv))} END")
 
 
-def dqdv_shift(ref_window) -> Column:
-    """A10: mV shift of each cycle's peak from the first valid peak."""
-    v_ref = F.first("dQdV_peak_V", ignorenulls=True).over(ref_window)
-    return F.when(
-        F.col("dQdV_peak_V").isNotNull(),
-        (F.col("dQdV_peak_V") - v_ref) * F.lit(1000.0),
+def dqdv_shift(window: str) -> str:
+    """A10: mV shift of each cycle's peak from the first valid peak;
+    ``window`` is the per-cell ``OVER`` clause in cycle order."""
+    peak = "`dQdV_peak_V`"
+    return (
+        f"CASE WHEN {peak} IS NOT NULL "
+        f"THEN ({peak} - first({peak}, true) {window}) * {double(1000.0)} END"
     )
 
 

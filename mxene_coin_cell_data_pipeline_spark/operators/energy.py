@@ -17,22 +17,21 @@ DIS rows counts 0 rows and so yields NULL.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, WindowSpec, functions as F
+from pyspark.sql import DataFrame
+
+from ._sql import double
+
+_T = "CAST(`timestamp` AS DOUBLE)"  # fractional epoch seconds (C8)
+_P = "(`voltage_v` * `current_a`)"
 
 
-def _t() -> Column:
-    return F.col("timestamp").cast("double")  # fractional epoch seconds (C8)
-
-
-def _p() -> Column:
-    return F.col("voltage_v") * F.col("current_a")
-
-
-def energy_segment(dis: Column, by_time: WindowSpec) -> Column:
+def energy_segment(dis: str, by_time: str) -> str:
     """Fixed-point trapezoid segment ending at each DIS row but the
     first; ``by_time`` orders one cycle's rows by (is-DIS, timestamp)."""
-    t, p = _t(), _p()
-    seg = 0.5 * (p + F.lag(p).over(by_time)) * (t - F.lag(t).over(by_time))
+    seg = (
+        f"{double(0.5)} * ({_P} + lag({_P}) {by_time}) "
+        f"* ({_T} - lag({_T}) {by_time})"
+    )
     # segments quantized to integer NANO watt-seconds with
     # floor(x*1e9+0.5): multiply/add/floor are IEEE-deterministic, the
     # int64 sum is exact and associative, so the per-cycle energy is
@@ -48,25 +47,26 @@ def energy_segment(dis: Column, by_time: WindowSpec) -> Column:
     # reference's NaN-propagating np.trapz. Non-DIS rows never reach
     # the cast either, nor does the first DIS row, whose lag is a
     # non-DIS row (or none).
-    seg_safe = F.when(
-        dis & F.lag(dis).over(by_time), F.nanvl(seg, F.lit(None).cast("double"))
+    seg_safe = (
+        f"CASE WHEN {dis} AND lag({dis}) {by_time} "
+        f"THEN nanvl({seg}, CAST(NULL AS DOUBLE)) END"
     )
-    return F.floor(seg_safe * F.lit(1e9) + F.lit(0.5)).cast("long")
+    return f"CAST(floor({seg_safe} * {double(1e9)} + {double(0.5)}) AS BIGINT)"
 
 
-def energy_aggs(dis: Column) -> list[Column]:
-    bad = _p().isNull() | _t().isNull() | F.isnan(_p())
+def energy_aggs(dis: str) -> list[str]:
+    bad = f"{_P} IS NULL OR {_T} IS NULL OR isnan({_P})"
     return [
-        F.sum(F.when(dis, 1).otherwise(0)).alias("_e_n"),
-        F.sum(F.when(dis & bad, 1).otherwise(0)).alias("_e_nbad"),
-        F.sum("_seg_u").alias("_e_ns"),
+        f"sum(CASE WHEN {dis} THEN 1 ELSE 0 END) AS `_e_n`",
+        f"sum(CASE WHEN {dis} AND ({bad}) THEN 1 ELSE 0 END) AS `_e_nbad`",
+        "sum(`_seg_u`) AS `_e_ns`",
     ]
 
 
-def energy_wh() -> Column:
-    return F.when(
-        (F.col("_e_n") >= 2) & (F.col("_e_nbad") == 0),
-        F.abs(F.col("_e_ns").cast("double") / F.lit(1e9)) / F.lit(3600.0),
+def energy_wh() -> str:
+    return (
+        "CASE WHEN `_e_n` >= 2 AND `_e_nbad` = 0 "
+        f"THEN abs(CAST(`_e_ns` AS DOUBLE) / {double(1e9)}) / {double(3600.0)} END"
     )
 
 

@@ -33,14 +33,19 @@ job runs the same plan, so the one-task-per-cell limit is unchanged.
 
 The single-feature operators (``capacity_ce_per_cycle``, ...) select
 their family from this plan, so each formula has one implementation.
+Each family module writes its formulas as SQL text (operators/_sql.py)
+— the window columns, the aggregate list, the finishing projection —
+so building the plan is a few dozen py4j calls whatever the formulas
+hold, where Column trees cost one call per node (some 1,700).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 from ..checkpoint import durable_checkpoint
-from ._keys import cell_keys, cycle_keys, drop_null_cycles, is_dis
+from ._keys import IS_DIS, cell_keys, cycle_keys, drop_null_cycles
+from ._sql import ident, over
 from .capacity import capacity_aggs, coulombic_efficiency, q_norm
 from .dqdv import DEFAULT_DV, dqdv_points, dqdv_shift, peak_voltage
 from .energy import energy_aggs, energy_segment, energy_wh
@@ -70,45 +75,44 @@ def per_cycle_features(
         raise ValueError(f"unknown feature families {sorted(unknown)}")
     keys, cells = cycle_keys(ts), cell_keys(ts)
     want = [f for f in FEATURES if f in features]
-    dis = F.col("_dis")
+    dis = ident("_dis")
 
     rows = ts
     if "ir" in want:
-        rows = rows.withColumn("_pos", ir_position(cells))
-    rows = drop_null_cycles(rows).withColumn("_dis", is_dis())
-    by_cycle = Window.partitionBy(*keys)
+        rows = rows.withColumn("_pos", F.expr(ir_position(cells)))
+    rows = drop_null_cycles(rows).withColumn("_dis", F.expr(IS_DIS))
     if "energy" in want:
-        rows = rows.withColumn(
-            "_seg_u", energy_segment(dis, by_cycle.orderBy("_dis", "timestamp"))
-        )
+        by_time = over(keys, ["_dis", "timestamp"])
+        rows = rows.withColumn("_seg_u", F.expr(energy_segment(dis, by_time)))
     if "ir" in want:
-        rows = rows.withColumn("_idx", ir_argmin(dis, by_cycle, rated_ah))
+        rows = rows.withColumn("_idx", F.expr(ir_argmin(dis, over(keys), rated_ah)))
 
     aggs, finals = [], []
     if "capacity" in want:
         aggs += capacity_aggs()
-        finals += ["Q_dis_Ah", "Q_chg_Ah", coulombic_efficiency().alias("CE")]
+        finals += ["`Q_dis_Ah`", "`Q_chg_Ah`", f"{coulombic_efficiency()} AS `CE`"]
     if "energy" in want:
         aggs += energy_aggs(dis)
-        finals.append(energy_wh().alias("E_dis_Wh"))
+        finals.append(f"{energy_wh()} AS `E_dis_Wh`")
     if "ir" in want:
         aggs += ir_aggs(dis, ir_window)
-        finals.append(ir_ohm().alias("IR_C2_ohm"))
+        finals.append(f"{ir_ohm()} AS `IR_C2_ohm`")
     if "dqdv" in want:
-        aggs.append(dqdv_points(dis).alias("_pts"))
-        finals.append(peak_voltage(F.col("_pts"), dv).alias("dQdV_peak_V"))
-    per_cycle = rows.groupBy(*keys).agg(*aggs).select(*keys, *finals)
+        aggs.append(f"{dqdv_points(dis)} AS `_pts`")
+        finals.append(f"{peak_voltage(ident('_pts'), dv)} AS `dQdV_peak_V`")
+    key_cols = [ident(k) for k in keys]
+    per_cycle = (
+        rows.groupBy(*keys).agg(*map(F.expr, aggs)).selectExpr(*key_cols, *finals)
+    )
 
-    by_cell = (
-        Window.partitionBy(*cells)
-        .orderBy("cycle_index")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    by_cell = over(
+        cells, ["cycle_index"], "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW"
     )
     windowed = {"q_norm": q_norm(by_cell), "dQdV_shift_mV": dqdv_shift(by_cell)}
-    return per_cycle.select(
-        *keys,
+    return per_cycle.selectExpr(
+        *key_cols,
         *(
-            windowed[c].alias(c) if c in windowed else c
+            f"{windowed[c]} AS {ident(c)}" if c in windowed else ident(c)
             for f in want
             for c in FEATURES[f]
         ),

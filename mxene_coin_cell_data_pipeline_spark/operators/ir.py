@@ -21,42 +21,43 @@ Spark formulation, inside the shared per-cycle plan
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window, WindowSpec, functions as F
+from pyspark.sql import DataFrame
+
+from ._sql import double, over
 
 
-def ir_position(cells: list[str]) -> Column:
-    return F.row_number().over(Window.partitionBy(*cells).orderBy("timestamp"))
+def ir_position(cells: list[str]) -> str:
+    return f"row_number() {over(cells, ['timestamp'])}"
 
 
-def ir_argmin(dis: Column, by_cycle: WindowSpec, rated_ah: float) -> Column:
+def ir_argmin(dis: str, by_cycle: str, rated_ah: float) -> str:
     """Position of the cycle's first DIS row closest to C/2 (pandas
     idxmin skips NaN: NULL distances never win)."""
-    absdiff = F.abs(F.abs(F.col("current_a")) - F.lit(0.5 * float(rated_ah)))
-    rank = F.when(dis & absdiff.isNotNull(), F.struct(absdiff, F.col("_pos")))
-    return F.min_by("_pos", rank).over(by_cycle)
+    absdiff = f"abs(abs(`current_a`) - {double(0.5 * float(rated_ah))})"
+    rank = f"CASE WHEN {dis} AND {absdiff} IS NOT NULL THEN struct({absdiff}, `_pos`) END"
+    return f"min_by(`_pos`, {rank}) {by_cycle}"
 
 
-def ir_aggs(dis: Column, window: int) -> list[Column]:
-    pos, idx = F.col("_pos"), F.col("_idx")
-    band = dis & pos.between(idx - window, idx + window)
-    pre, post = band & (pos < idx), band & (pos >= idx)
+def ir_aggs(dis: str, window: int) -> list[str]:
+    w = int(window)
+    band = f"{dis} AND `_pos` >= `_idx` - {w} AND `_pos` <= `_idx` + {w}"
+    pre, post = f"{band} AND `_pos` < `_idx`", f"{band} AND `_pos` >= `_idx`"
     return [
-        F.median(F.when(pre, F.col("voltage_v"))).alias("_pre_v"),
-        F.median(F.when(post, F.col("voltage_v"))).alias("_post_v"),
-        F.median(F.when(pre, F.col("current_a"))).alias("_pre_i"),
-        F.median(F.when(post, F.col("current_a"))).alias("_post_i"),
-        F.sum(F.when(pre, 1).otherwise(0)).alias("_n_pre"),
-        F.sum(F.when(post, 1).otherwise(0)).alias("_n_post"),
+        f"median(CASE WHEN {pre} THEN `voltage_v` END) AS `_pre_v`",
+        f"median(CASE WHEN {post} THEN `voltage_v` END) AS `_post_v`",
+        f"median(CASE WHEN {pre} THEN `current_a` END) AS `_pre_i`",
+        f"median(CASE WHEN {post} THEN `current_a` END) AS `_post_i`",
+        f"sum(CASE WHEN {pre} THEN 1 ELSE 0 END) AS `_n_pre`",
+        f"sum(CASE WHEN {post} THEN 1 ELSE 0 END) AS `_n_post`",
     ]
 
 
-def ir_ohm() -> Column:
-    d_v = F.col("_post_v") - F.col("_pre_v")
-    d_i = F.col("_post_i") - F.col("_pre_i")
-    return F.when(
-        (F.col("_n_pre") == 0) | (F.col("_n_post") == 0) | d_i.isNull() | (d_i == 0),
-        F.lit(None).cast("double"),
-    ).otherwise(F.abs(d_v / d_i))
+def ir_ohm() -> str:
+    d_v, d_i = "(`_post_v` - `_pre_v`)", "(`_post_i` - `_pre_i`)"
+    return (
+        f"CASE WHEN `_n_pre` = 0 OR `_n_post` = 0 OR {d_i} IS NULL OR {d_i} = 0 "
+        f"THEN CAST(NULL AS DOUBLE) ELSE abs({d_v} / {d_i}) END"
+    )
 
 
 def ir_c2_per_cycle(df: DataFrame, rated_ah: float, window: int = 1) -> DataFrame:

@@ -5,20 +5,26 @@ Spark-first re-expression of the reference normalize stage
 renames, lenient casts, step-label canonicalization, unit rescale,
 discharge-negative sign convention, canonical projection.
 
-Everything is a single declarative projection (one Catalyst plan, fully
-codegen'd, no shuffle) except the sign-flip decision, which is
-inherently a two-phase global aggregate (pipeline.py:131-135): one
-cheap map-side-combined `avg` per cell, then a conditional negate.
+The per-row part is one ``select`` over the raw columns: the header
+strip and the vendor renames are resolved in Python over the column
+names, and each canonical column is one SQL expression reading its raw
+column by its quoted name (operators/_sql.py), so building it is a
+few dozen py4j calls for any layout. The sign-flip decision
+(pipeline.py:131-135) is a per-cell fraction of discharge rows with
+positive current, one expression shared by every path:
 
-Scale: with a `cell_id` column the sign decision is computed per cell
-in one aggregation and applied via a broadcast join of the tiny
-per-cell decision table — no collect of data rows, works at any number
-of cells.
+- batch with a ``cell_id`` column (or argument): a window over the one
+  exchange by cell that also orders the rows — one exchange, one sort,
+  no aggregate, no join, at any number of cells;
+- batch without cells: one driver-side aggregate, then a negate;
+- streaming: ``sign_flip_decisions`` over history, applied to each
+  micro-batch by a broadcast join of the tiny per-cell decision table
+  (``apply_sign_flip``).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 from ..schema import (
     ARBIN_MAP,
@@ -28,159 +34,156 @@ from ..schema import (
     STEP_CANDIDATES,
     STEP_TYPE_MAP,
 )
+from ._keys import IS_DIS
+from ._sql import double, ident, string
+
+#: base-unit column → its milli-unit source (C4, pipeline.py:118-125)
+_MILLI = {
+    "current_a": "current_mA",
+    "voltage_v": "voltage_mV",
+    "charge_ah": "charge_mAh",
+    "discharge_ah": "discharge_mAh",
+}
 
 
-def _soft_rename(df: DataFrame, mapping: dict[str, str]) -> DataFrame:
-    """Rename only source columns that exist; first writer of a target
-    wins (guards against duplicate canonical columns, which pandas
-    would silently create; see pipeline.py:69-75)."""
-    present: dict[str, str] = {}
-    existing = set(df.columns)
-    for src, dst in mapping.items():
-        if src in existing and dst not in existing and dst not in present.values():
-            present[src] = dst
-    return df.withColumnsRenamed(present) if present else df
+def _source_columns(columns: list[str]) -> dict[str, str | None]:
+    """Name after the header strip (P1, pipeline.py:26) and the soft
+    vendor renames (P2) → the raw column it reads; ``None`` when two raw
+    columns strip to that name. A rename applies only when its source
+    exists and its target does not; the first writer of a target wins
+    (guards against duplicate canonical columns, which pandas would
+    silently create; see pipeline.py:69-75)."""
+    src: dict[str, str | None] = {}
+    for raw in columns:
+        name = raw.strip()
+        src[name] = None if name in src else raw
+    for mapping in (ARBIN_MAP, NEWARE_MAP):
+        renames: dict[str, str] = {}
+        for old, new in mapping.items():
+            if old in src and new not in src and new not in renames.values():
+                renames[old] = new
+        src = {renames.get(name, name): raw for name, raw in src.items()}
+    # cycle & step indices (P3/C3, pipeline.py:88-99)
+    for target, candidates in (
+        ("cycle_index", CYCLE_CANDIDATES),
+        ("step_index", STEP_CANDIDATES),
+    ):
+        if target not in src:
+            cand = next((c for c in candidates if c in src), None)
+            if cand is not None:
+                src[target] = src.pop(cand)
+    return src
 
 
-def _lenient_double(col: Column) -> Column:
+def _lenient_double(col: str) -> str:
     """pandas ``to_numeric(errors="coerce")`` equivalent; ANSI-safe."""
-    return col.cast("string").try_cast("double")
+    return f"try_cast(CAST({col} AS STRING) AS DOUBLE)"
 
 
-def _canonical_step_type(col: Column) -> Column:
+def _canonical_step_type(col: str) -> str:
     """Uppercase + exact-label replacement (pipeline.py:110-115).
 
     pandas ``astype(str)`` stringifies missing values to ``"nan"`` →
     upper ``"NAN"``; mirrored with the coalesce so downstream substring
     filters see the same tokens the reference sees.
     """
-    upper = F.upper(F.coalesce(col.cast("string"), F.lit("nan")))
-    mapping = F.create_map(
-        *[F.lit(x) for kv in STEP_TYPE_MAP.items() for x in kv]
-    )
-    return F.coalesce(F.element_at(mapping, upper), upper)
+    upper = f"upper(coalesce(CAST({col} AS STRING), 'nan'))"
+    mapping = ", ".join(string(x) for kv in STEP_TYPE_MAP.items() for x in kv)
+    return f"coalesce(element_at(map({mapping}), {upper}), {upper})"
 
 
 def normalize_cycler_stateless(df: DataFrame, cell_id: str | None = None) -> DataFrame:
     """The per-row (stateless) part of normalize: renames, casts, label
     canonicalization, unit rescale, canonical projection.
 
-    No aggregation, no sort — a single narrow projection, so it applies
-    unchanged to a *streaming* DataFrame (streaming/ingest.py). The
-    batch ``normalize_cycler`` adds the two stateful phases on top:
-    the global sign-flip decision (C10) and the canonical ordering (O1).
+    One ``select`` over the raw columns, each output column one SQL
+    expression: no aggregation, no sort, so it applies unchanged to a
+    *streaming* DataFrame (streaming/ingest.py). The batch
+    ``normalize_cycler`` adds the two stateful phases on top: the
+    per-cell sign-flip decision (C10) and the canonical ordering (O1).
     """
-    df = df.toDF(*[c.strip() for c in df.columns])  # P1, pipeline.py:26
-    df = _soft_rename(df, ARBIN_MAP)  # P2
-    df = _soft_rename(df, NEWARE_MAP)
+    src = _source_columns(df.columns)
+
+    def col(name: str) -> str:
+        raw = src[name]
+        if raw is None:
+            raise ValueError(f"Duplicate column after trimming the header: {name!r}")
+        return ident(raw)
 
     # --- timestamp (C1/C2, pipeline.py:79-85)
-    if "timestamp" in df.columns:
-        df = df.withColumn(
-            "timestamp", F.try_to_timestamp(F.col("timestamp").cast("string"))
-        )
-    elif "test_time_s" in df.columns:
-        df = df.withColumn(
-            "timestamp", F.timestamp_seconds(_lenient_double(F.col("test_time_s")))
-        )
+    if "timestamp" in src:
+        out = {"timestamp": f"try_to_timestamp(CAST({col('timestamp')} AS STRING))"}
+    elif "test_time_s" in src:
+        out = {"timestamp": f"timestamp_seconds({_lenient_double(col('test_time_s'))})"}
     else:
         raise ValueError(
             "No timestamp-like column found (expected Date_Time/Record Time "
             "or Test Time (s))."
         )
 
-    # --- cycle & step indices (P3/C3, pipeline.py:88-99)
-    if "cycle_index" not in df.columns:
-        for cand in CYCLE_CANDIDATES:
-            if cand in df.columns:
-                df = df.withColumnRenamed(cand, "cycle_index")
-                break
-    if "step_index" not in df.columns:
-        for cand in STEP_CANDIDATES:
-            if cand in df.columns:
-                df = df.withColumnRenamed(cand, "step_index")
-                break
-    for idx_col in ("cycle_index", "step_index"):
-        src = (
-            _lenient_double(F.col(idx_col))
-            if idx_col in df.columns
-            else F.lit(None).cast("double")
+    # --- cycle & step indices: to_numeric(...).astype("Int64") accepts
+    # "3.0" → 3, so go through double, then truncate to long.
+    for idx in ("cycle_index", "step_index"):
+        num = _lenient_double(col(idx)) if idx in src else "CAST(NULL AS DOUBLE)"
+        out[idx] = f"try_cast({num} AS BIGINT)"
+
+    # --- step type (C5/C6, pipeline.py:102-115): inferred from the raw
+    # current's sign when the export has no step column
+    if "step_type" in src:
+        step = col("step_type")
+    elif "current_a" in src or "current_mA" in src:
+        cur = _lenient_double(col("current_a" if "current_a" in src else "current_mA"))
+        step = (
+            f"CASE WHEN {cur} < 0 THEN 'CC_DIS' WHEN {cur} > 0 THEN 'CC_CHG' "
+            "ELSE 'REST' END"
         )
-        # to_numeric(...).astype("Int64") accepts "3.0" → 3: go through
-        # double, then truncate to long.
-        df = df.withColumn(idx_col, src.try_cast("long"))
+    else:
+        step = "'REST'"
+    out["step_type"] = _canonical_step_type(step)
 
-    # --- step type (C5/C6, pipeline.py:102-115)
-    if "step_type" not in df.columns:
-        cur_col = (
-            "current_a"
-            if "current_a" in df.columns
-            else ("current_mA" if "current_mA" in df.columns else None)
-        )
-        if cur_col is not None:
-            cur = _lenient_double(F.col(cur_col))
-            df = df.withColumn(
-                "step_type",
-                F.when(cur < 0, F.lit("CC_DIS"))
-                .when(cur > 0, F.lit("CC_CHG"))
-                .otherwise(F.lit("REST")),
-            )
-        else:
-            df = df.withColumn("step_type", F.lit("REST"))
-    df = df.withColumn("step_type", _canonical_step_type(F.col("step_type")))
-
-    # --- units → A/V/Ah (C4, pipeline.py:118-125)
-    for base, milli in [
-        ("current_a", "current_mA"),
-        ("voltage_v", "voltage_mV"),
-        ("charge_ah", "charge_mAh"),
-        ("discharge_ah", "discharge_mAh"),
-    ]:
-        if base not in df.columns and milli in df.columns:
-            df = df.withColumn(base, _lenient_double(F.col(milli)) / F.lit(1000.0))
-
-    # make all numeric canonical columns true doubles regardless of the
-    # CSV's string types (the reference relies on pandas inference here)
+    # --- units → A/V/Ah (C4), every numeric column a true double
+    # whatever the CSV's string types (the reference relies on pandas
+    # inference here); temp_c is optional (P4/P8, pipeline.py:138-145)
     for c in ("current_a", "voltage_v", "charge_ah", "discharge_ah", "temp_c"):
-        if c in df.columns:
-            df = df.withColumn(c, _lenient_double(F.col(c)))
-
-    # --- canonical projection (P4/P8, pipeline.py:138-145)
-    if "temp_c" not in df.columns:
-        df = df.withColumn("temp_c", F.lit(None).cast("double"))
-    missing = [c for c in CANONICAL_COLUMNS if c not in df.columns]
+        if c in src:
+            out[c] = _lenient_double(col(c))
+        elif _MILLI.get(c) in src:
+            milli = _lenient_double(col(_MILLI[c]))
+            out[c] = _lenient_double(f"{milli} / {double(1000.0)}")
+        elif c == "temp_c":
+            out[c] = "CAST(NULL AS DOUBLE)"
+    missing = [c for c in CANONICAL_COLUMNS if c not in out]
     if missing:
         raise ValueError(
             f"Missing required column after normalization: {missing[0]}"
         )
 
-    has_cell = "cell_id" in df.columns
-    if cell_id is not None and not has_cell:
-        df = df.withColumn("cell_id", F.lit(cell_id))
-        has_cell = True
-    out_cols = (["cell_id"] if has_cell else []) + CANONICAL_COLUMNS
-    return df.select(*out_cols)
+    canonical = [F.expr(f"{out[c]} AS {ident(c)}") for c in CANONICAL_COLUMNS]
+    if "cell_id" in src:
+        return df.select(F.expr(f"{col('cell_id')} AS `cell_id`"), *canonical)
+    if cell_id is not None:
+        return df.select(F.lit(cell_id).alias("cell_id"), *canonical)
+    return df.select(*canonical)
+
+
+def _flip(window: str = "") -> str:
+    """C10 (pipeline.py:131-135), the fraction both the batch and the
+    streaming path read: TRUE when more than 80% of the discharge-step
+    rows carry positive current, FALSE without any. ``window`` makes it
+    a window aggregate."""
+    frac = f"avg(CASE WHEN {IS_DIS} THEN IF(`current_a` > 0, 1.0D, 0.0D) END)"
+    return f"coalesce({frac} {window} > {double(0.8)}, false)"
 
 
 def sign_flip_decisions(df: DataFrame) -> DataFrame:
-    """Per-cell sign-flip decision table ``(cell_id, _flip)`` (C10,
-    pipeline.py:131-135): flip when >80% of discharge-step rows carry
-    positive current. One map-side-combined avg per cell; the result is
-    tiny (one row per cell) and is broadcast back onto the data.
+    """Per-cell sign-flip decision table ``(cell_id, _flip)``: one
+    map-side-combined avg per cell, one row per cell.
 
-    Streaming ingest reuses this as its batch-calibration step: compute
-    the decisions once over history, feed them to
-    ``streaming.normalize_cycler_stream`` as a static broadcast side.
+    Streaming ingest computes it once over history and feeds it to
+    ``streaming.normalize_cycler_stream``, which joins it to each
+    micro-batch as a static broadcast side (``apply_sign_flip``).
     """
-    dis = F.coalesce(F.col("step_type").contains("DIS"), F.lit(False))
-    pos = F.when(F.col("current_a") > 0, 1.0).otherwise(0.0)
-    return (
-        df.filter(dis)
-        .groupBy("cell_id")
-        .agg(F.avg(pos).alias("_pos_frac"))
-        .withColumn("_flip", F.col("_pos_frac") > 0.8)
-        .drop("_pos_frac")
-    )
+    return df.groupBy("cell_id").agg(F.expr(_flip()).alias("_flip"))
 
 
 def apply_sign_flip(df: DataFrame, decisions: DataFrame) -> DataFrame:
@@ -189,8 +192,7 @@ def apply_sign_flip(df: DataFrame, decisions: DataFrame) -> DataFrame:
         df.join(F.broadcast(decisions), "cell_id", "left")
         .withColumn(
             "current_a",
-            F.when(F.coalesce(F.col("_flip"), F.lit(False)), -F.col("current_a"))
-            .otherwise(F.col("current_a")),
+            F.expr("CASE WHEN coalesce(`_flip`, false) THEN -`current_a` ELSE `current_a` END"),
         )
         .drop("_flip")
     )
@@ -205,25 +207,20 @@ def normalize_cycler(df: DataFrame, cell_id: str | None = None) -> DataFrame:
     (pipeline.py:85,145).
     """
     df = normalize_cycler_stateless(df, cell_id)
-    has_cell = "cell_id" in df.columns
-
-    # --- discharge-negative convention (C10, pipeline.py:131-135).
-    # Reference: if >80% of DIS rows have positive current, negate the
-    # whole current column. Two-phase: per-cell fraction (map-side
-    # combined avg), broadcast the tiny decision table back.
-    if has_cell:
-        df = apply_sign_flip(df, sign_flip_decisions(df))
-    else:
-        dis = F.coalesce(F.col("step_type").contains("DIS"), F.lit(False))
-        pos = F.when(F.col("current_a") > 0, 1.0).otherwise(0.0)
-        row = df.filter(dis).agg(F.avg(pos).alias("f")).first()
-        if row is not None and row["f"] is not None and row["f"] > 0.8:
-            df = df.withColumn("current_a", -F.col("current_a"))
-
-    # --- canonical ordering (O1, pipeline.py:148). At scale we sort
-    # within cell partitions instead of one global range sort.
-    if has_cell:
-        df = df.repartition("cell_id").sortWithinPartitions("cell_id", "timestamp")
-    else:
-        df = df.orderBy("timestamp")
-    return df
+    if "cell_id" in df.columns:
+        # one exchange by cell: the sort within it is the canonical
+        # order (O1, pipeline.py:148) and the per-cell window over it
+        # the sign decision (C10), with no aggregate or join
+        flip = _flip("OVER (PARTITION BY `cell_id`)")
+        return (
+            df.repartition("cell_id")
+            .sortWithinPartitions("cell_id", "timestamp")
+            .withColumn(
+                "current_a",
+                F.expr(f"CASE WHEN {flip} THEN -`current_a` ELSE `current_a` END"),
+            )
+        )
+    # one cell: one driver-side decision, then a global sort
+    if df.select(F.expr(_flip())).first()[0]:
+        df = df.withColumn("current_a", F.expr("-`current_a`"))
+    return df.orderBy("timestamp")

@@ -1,0 +1,72 @@
+"""Driver-call budgets for building the cell chain's plans.
+
+Normalize and the per-cycle feature plan are written as SQL text the
+JVM parses once, so building them costs a few dozen py4j calls however
+many formulas they hold. Column trees cost one py4j call per node: the
+feature plan took 1,741 calls that way and normalize 439–556.
+
+Each test counts py4j *call* commands (the ``c\\n`` prefix; garbage
+collection detaches are left out) while one plan is built, and holds it
+to the count measured when the text form landed plus 25%:
+
+- ``per_cycle_features`` (all families) on the two-cell fixture: 62
+  calls, budget 77;
+- ``normalize_cycler(..., cell_id=...)`` on the Arbin, Neware and
+  headless fixture CSVs: 52 calls each, budget 65.
+
+A new formula written as text costs nothing here; one written as a
+Column tree shows up at once.
+"""
+
+from __future__ import annotations
+
+from contextlib import contextmanager
+
+import pytest
+
+from fixtures import RATED_AH, arbin_frame, headless_frame, neware_frame
+from mxene_coin_cell_data_pipeline_spark.operators import normalize_cycler
+from mxene_coin_cell_data_pipeline_spark.operators.features import per_cycle_features
+from mxene_coin_cell_data_pipeline_spark.sources import read_cycler_csv
+from test_plan_shapes import _two_cell_timeseries
+
+FEATURES_BUDGET = 77
+NORMALIZE_BUDGET = 65
+
+
+@contextmanager
+def _py4j_calls(spark):
+    """Count the py4j call commands sent while the block runs."""
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    calls = [0]
+
+    def counting(command, *args, **kwargs):
+        if command.startswith("c\n"):
+            calls[0] += 1
+        return send(command, *args, **kwargs)
+
+    client.send_command = counting
+    try:
+        yield calls
+    finally:
+        client.send_command = send
+
+
+def test_feature_plan_build_budget(spark, tmp_path):
+    ts = spark.read.parquet(_two_cell_timeseries(spark, tmp_path))
+    per_cycle_features(ts, rated_ah=RATED_AH)  # warm: first-use lookups
+    with _py4j_calls(spark) as calls:
+        per_cycle_features(ts, rated_ah=RATED_AH)
+    assert calls[0] <= FEATURES_BUDGET, calls[0]
+
+
+@pytest.mark.parametrize("frame", [arbin_frame, neware_frame, headless_frame])
+def test_normalize_build_budget(spark, tmp_path, frame):
+    path = tmp_path / "raw.csv"
+    frame().to_csv(path, index=False)
+    raw = read_cycler_csv(spark, str(path))
+    normalize_cycler(raw, cell_id="CELL01")
+    with _py4j_calls(spark) as calls:
+        normalize_cycler(raw, cell_id="CELL01")
+    assert calls[0] <= NORMALIZE_BUDGET, calls[0]

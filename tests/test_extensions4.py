@@ -393,16 +393,13 @@ class TestCountMin:
 
 
 class TestHivePartitionedRoundtrip:
-    def test_partition_filters_in_plan(self, spark, sf_dir):
+    def test_partition_filters_in_plan(self, spark, sf_dir, tmp_path):
         """The pruned read carries the predicate as PartitionFilters
         (directory-level pruning), not merely PushedFilters."""
-        import os
-        import tempfile
-
         from mxene_coin_cell_data_pipeline_spark.plans._registry import _ctx
 
         (events,) = _ctx(spark, sf_dir, "events")
-        tmp = os.path.join(tempfile.mkdtemp(prefix="src05t_"), "p")
+        tmp = str(tmp_path / "p")
         events.write.mode("overwrite").partitionBy("event_type").parquet(tmp)
         back = spark.read.parquet(tmp).filter(F.col("event_type") == "click")
         plan = back._jdf.queryExecution().executedPlan().toString()

@@ -3,6 +3,7 @@ fallback, headless inference (SURVEY.md §2.1-2.4)."""
 
 import pandas as pd
 import pytest
+from pyspark.sql import functions as F
 
 from mxene_coin_cell_data_pipeline_spark.operators import normalize_cycler
 from mxene_coin_cell_data_pipeline_spark.schema import CANONICAL_COLUMNS
@@ -94,3 +95,28 @@ def test_multi_cell_sign_flip_is_per_cell(spark, tmp_path):
     for cell in ["good", "flipped"]:
         sub = out[(out["cell_id"] == cell) & (out["step_type"] == "CC_DIS")]
         assert (sub["current_a"] < 0).all(), cell
+
+
+def test_sql_text_survives_quotes_in_headers_and_cell_id(spark, tmp_path):
+    """Normalize is SQL text over the raw columns: a header holding a
+    backtick and a quote, a padded header read by its raw name and a
+    cell id with a quote and a backslash must not change the frame."""
+    from mxene_coin_cell_data_pipeline_spark.operators.normalize import (
+        normalize_cycler_stateless,
+    )
+
+    plain = normalize_cycler(
+        read_cycler_csv(spark, _write_csv(tmp_path, arbin_frame(), "plain.csv"))
+    )
+    pdf = arbin_frame()
+    pdf["note `x` 'y'"] = "a'b`c"
+    raw = read_cycler_csv(spark, _write_csv(tmp_path, pdf, "quoted.csv"))
+    assert "note `x` 'y'" in raw.columns
+    raw = raw.withColumnRenamed("Voltage(V)", " Voltage(V) ")
+    cell = "o'k\\"
+    out = normalize_cycler(raw, cell_id=cell)
+    assert out.columns == ["cell_id"] + CANONICAL_COLUMNS
+    assert {r["cell_id"] for r in out.select("cell_id").collect()} == {cell}
+    assert out.drop("cell_id").collect() == plain.collect()
+    stateless = normalize_cycler_stateless(raw.withColumn("cell_id", F.lit(cell)))
+    assert stateless.select("cell_id").distinct().collect()[0][0] == cell

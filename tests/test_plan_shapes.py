@@ -73,18 +73,15 @@ def test_sketch_aggregates_partial_map_side(spark, sf_dir):
     assert "partial_count" in plan
 
 
-def test_src05_partition_pruning(spark, sf_dir):
+def test_src05_partition_pruning(spark, sf_dir, tmp_path):
     """The hive-partitioned read prunes directories: the scan's
     PartitionFilters must carry the event_type predicate."""
-    import os
-    import tempfile
-
     from pyspark.sql import functions as F
 
     from mxene_coin_cell_data_pipeline_spark.plans._registry import _ctx
 
     (events,) = _ctx(spark, sf_dir, "events")
-    tmp = os.path.join(tempfile.mkdtemp(prefix="planshape_"), "p")
+    tmp = str(tmp_path / "p")
     events.write.mode("overwrite").partitionBy("event_type").parquet(tmp)
     back = spark.read.parquet(tmp).filter(F.col("event_type") == "click")
     plan = back._jdf.queryExecution().executedPlan().toString()
@@ -509,14 +506,11 @@ def test_d21_keeper_is_aggregate_not_window(spark, sf_dir):
     assert "BroadcastNestedLoopJoin" not in plan
 
 
-def _two_cell_timeseries(spark, tmp_path) -> str:
-    """Two fixture cells normalized and written as parquet; returns the
-    path, so feature plans start from a ``FileScan parquet``."""
+def _two_cell_csv(tmp_path) -> str:
+    """Two fixture cells in one raw Arbin CSV with a ``cell_id`` column."""
     import pandas as pd
 
     from fixtures import arbin_frame
-    from mxene_coin_cell_data_pipeline_spark.operators import normalize_cycler
-    from mxene_coin_cell_data_pipeline_spark.sources import read_cycler_csv
 
     cells = []
     for cid in ("c1", "c2"):
@@ -525,8 +519,17 @@ def _two_cell_timeseries(spark, tmp_path) -> str:
         cells.append(pdf)
     csv = str(tmp_path / "cells.csv")
     pd.concat(cells, ignore_index=True).to_csv(csv, index=False)
+    return csv
+
+
+def _two_cell_timeseries(spark, tmp_path) -> str:
+    """Two fixture cells normalized and written as parquet; returns the
+    path, so feature plans start from a ``FileScan parquet``."""
+    from mxene_coin_cell_data_pipeline_spark.operators import normalize_cycler
+    from mxene_coin_cell_data_pipeline_spark.sources import read_cycler_csv
+
     path = str(tmp_path / "ts.parquet")
-    normalize_cycler(read_cycler_csv(spark, csv)).write.parquet(path)
+    normalize_cycler(read_cycler_csv(spark, _two_cell_csv(tmp_path))).write.parquet(path)
     return path
 
 
@@ -595,3 +598,54 @@ def test_feature_table_is_read_once(spark, tmp_path):
         assert "Scan ExistingRDD" in plan, (name, plan)
         found = re.findall(r"Exchange hashpartitioning\(cell_id", plan)
         assert len(found) == cell_exchanges, (name, plan)
+
+
+def test_batch_normalize_is_one_cell_exchange(spark, tmp_path):
+    """Batch normalize with ``cell_id`` decides the sign flip with a
+    per-cell window over the one exchange by cell that also orders the
+    rows: one exchange, one sort, no aggregate-and-broadcast join.
+    Writing it runs 2 Spark jobs (the exchange and the write); the
+    broadcast decision table cost 2 more."""
+    from mxene_coin_cell_data_pipeline_spark.operators import normalize_cycler
+    from mxene_coin_cell_data_pipeline_spark.sources import read_cycler_csv
+
+    ts = normalize_cycler(read_cycler_csv(spark, _two_cell_csv(tmp_path)))
+    plan = ts._jdf.queryExecution().executedPlan().toString()
+    assert len(re.findall(r"Exchange hashpartitioning\(cell_id", plan)) == 1, plan
+    assert plan.count("Exchange") == 1, plan
+    assert len(re.findall(r"\bSort \[", plan)) == 1, plan
+    assert "BroadcastHashJoin" not in plan and "BroadcastExchange" not in plan, plan
+
+    sc = spark.sparkContext
+    sc.setJobGroup("normalize-write", "two-cell timeseries write")
+    try:
+        ts.write.parquet(str(tmp_path / "ts.parquet"))
+        jobs = sc.statusTracker().getJobIdsForGroup("normalize-write")
+    finally:
+        sc._jsc.clearJobGroup()
+    assert len(jobs) == 2, jobs
+
+
+def test_cell_chain_plans_hold_no_decimal(spark, tmp_path):
+    """The SQL text of normalize and the feature plan writes every float
+    as a DOUBLE literal: a bare ``0.05`` or ``1000.0`` would parse as a
+    DECIMAL and show up as a decimal type in the analyzed plan."""
+    from fixtures import RATED_AH, headless_frame, neware_frame
+    from mxene_coin_cell_data_pipeline_spark.operators import normalize_cycler
+    from mxene_coin_cell_data_pipeline_spark.operators.features import (
+        per_cycle_features,
+    )
+    from mxene_coin_cell_data_pipeline_spark.sources import read_cycler_csv
+
+    raws = [read_cycler_csv(spark, _two_cell_csv(tmp_path))]
+    for frame in (neware_frame, headless_frame):
+        csv = tmp_path / f"{frame.__name__}.csv"
+        frame().to_csv(csv, index=False)
+        raws.append(read_cycler_csv(spark, str(csv)))
+    plans = [normalize_cycler(raw) for raw in raws]
+    plans.append(normalize_cycler(raws[1], cell_id="c1"))
+    ts = spark.read.parquet(_two_cell_timeseries(spark, tmp_path))
+    plans.append(per_cycle_features(ts, rated_ah=RATED_AH))
+    for df in plans:
+        analyzed = df._jdf.queryExecution().analyzed().toJSON().lower()
+        assert "decimal" not in analyzed

@@ -9,7 +9,6 @@ from __future__ import annotations
 import hashlib
 import math
 import os
-import tempfile
 
 import pytest
 
@@ -36,7 +35,7 @@ def _cosn(a, b):
 # ---------------------------------------------------------------------------
 
 
-def test_src07_materialized_matches_fused(spark, sf_dir):
+def test_src07_materialized_matches_fused(spark, sf_dir, tmp_path):
     """The written-index path must return EXACTLY the fused in-query
     rows — same codes, same LUTs, same grid — under the src07
     constants (kc=8, nprobe=3)."""
@@ -48,7 +47,7 @@ def test_src07_materialized_matches_fused(spark, sf_dir):
     emb = load_table(spark, sf_dir, "embeddings")
     kw = dict(query_vec_id=0, kc=8, m=4, k=4, nprobe=3, topk=10)
     fused = [tuple(r) for r in ivfpq_residual_topk(emb, **kw).collect()]
-    idx = os.path.join(tempfile.mkdtemp(prefix="t_src07_"), "ivf")
+    idx = str(tmp_path / "ivf")
     mat = [
         tuple(r)
         for r in ivfpq_residual_topk(emb, materialize_dir=idx, **kw).collect()
@@ -61,7 +60,7 @@ def test_src07_materialized_matches_fused(spark, sf_dir):
     assert len(parts) == 8
 
 
-def test_src07_index_write_is_full_and_idempotent(spark, sf_dir):
+def test_src07_index_write_is_full_and_idempotent(spark, sf_dir, tmp_path):
     """Re-running the materialized search overwrites in place (same
     rows twice) and the index itself holds every corpus vector exactly
     once."""
@@ -71,7 +70,7 @@ def test_src07_index_write_is_full_and_idempotent(spark, sf_dir):
     from mxene_coin_cell_data_pipeline_spark.sources.tables import load_table
 
     emb = load_table(spark, sf_dir, "embeddings")
-    idx = os.path.join(tempfile.mkdtemp(prefix="t_src07b_"), "ivf")
+    idx = str(tmp_path / "ivf")
     kw = dict(query_vec_id=0, kc=8, m=4, k=4, nprobe=3, topk=10)
     first = [tuple(r) for r in ivfpq_residual_topk(emb, materialize_dir=idx, **kw).collect()]
     again = [tuple(r) for r in ivfpq_residual_topk(emb, materialize_dir=idx, **kw).collect()]

@@ -631,7 +631,7 @@ def test_stream_incremental_dedup_checkpoint_recovery(spark, tmp_path):
 # ---------------------------------------------------------------------------
 
 
-def test_merge_upsert_hand_case(spark):
+def test_merge_upsert_hand_case(spark, tmp_path):
     """Full WHEN MATCHED/NOT MATCHED matrix on four hand-built users:
     untouched base, matched update, matched delete, unmatched insert."""
     import datetime
@@ -656,9 +656,8 @@ def test_merge_upsert_hand_case(spark):
     ev = spark.createDataFrame(
         rows, ["event_id", "ts", "user_id", "event_type", "value"]
     )
-    import tempfile, os
-    sf = tempfile.mkdtemp(prefix="o17_")
-    ev.write.parquet(os.path.join(sf, "events.parquet"))
+    sf = str(tmp_path)
+    ev.write.parquet(str(tmp_path / "events.parquet"))
     out = {r["user_id"]: r for r in QUERIES["o17_merge_upsert"].spark(spark, sf).collect()}
     assert set(out) == {10, 20, 40}
     assert out[10]["src"] == "base" and out[10]["value"] == 1.0
