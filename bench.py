@@ -8,53 +8,26 @@ Each query is executed to completion via the ``noop`` sink (full
 materialization of EVERY output column, no result shipping overhead).
 ``count()`` is NOT used: Catalyst prunes cardinality-preserving work
 under a count — a windowed projection with no downstream filter would
-measure as a bare scan. A warmup pass on the smallest table absorbs
-JVM/codegen startup so the numbers measure the plans, not the JIT.
+measure as a bare scan. The protocol lives in :func:`measure`, which
+``tools/time_queries.py`` runs for a named subset.
 
 Each query is measured as the MIN of N interleaved full passes
-(default 3, $SPARK_GRAFT_BENCH_PASSES; any value >= 1 is honored, so
-a deliberate single-pass smoke run costs one pass). Before the timed
-passes, ONE untimed warmup pass runs at the bench SF itself (r09's
-stamped per-pass totals 55.7/59.4/46.0 were warmup-shaped — the
-sf0.001 warmup compiles codegen but does not touch the sf0.1 parquet
-page cache or the size-tiered JIT); its wall time is stamped as
-``warmup_pass_sec``. Skip it with $SPARK_GRAFT_BENCH_NO_WARMUP=1.
-SCALING.md ("Round 4:
-bench-noise audit") measured four same-code full runs within one
-session spreading 93.5-141.7s with single-query transients up to 46x
-(t06: 0.67s / 31.1s / 0.9s isolated), caused by host-level
-interference, not the plans; round 8 then measured four IDLE-host
-runs of an unchanged plan set spreading 1.46x under min-of-2. Min
-over ≥3 interleaved passes converges each query to its floor (a
-transient must hit the same query in every pass to survive) while
-remaining an honest per-plan cost: every reported number is a time
-the full query actually took, cold-cache effects are already
-absorbed by the warmup pass. The per-pass headline totals and their
-spread are stamped into the artifact — read any committed headline
-against its own spread before calling a delta a regression.
+(default 3, $SPARK_GRAFT_BENCH_PASSES; any value >= 1 is honored).
+Before the timed passes, $SPARK_GRAFT_BENCH_WARMUP_PASSES (default 2;
+0 skips them) untimed warmup passes run at the bench SF itself; their
+wall times are stamped as ``warmup_pass_secs``. Min over interleaved
+passes converges each query to its floor (a transient must hit the
+same query in every pass to survive) while staying an honest per-plan
+cost: every reported number is a time the full query actually took.
+The per-pass headline totals and their spread are stamped into the
+artifact — read any committed headline against its own spread before
+calling a delta a regression. SCALING.md ("Bench noise and the timing
+protocol") keeps the measurements behind these choices.
 
-Round-12 protocol changes (both are measurement-honesty fixes, called
-out per the optimization brief; the OLD numbers live on in the
-committed BENCH_r* series and OPTIMIZATION_r12.md keeps both):
-
-- ``spark.catalog.clearCache()`` runs after EVERY query execution
-  (warmup and timed, outside the timed window). Several operators
-  legitimately ``persist()`` a reused intermediate within one query
-  plan (guide §5); because Spark's CacheManager matches canonicalized
-  plans ACROSS invocations, a timed pass would otherwise read
-  intermediates materialized during the untimed warmup (and one query
-  could read a twin's cache within a pass) — result caching in effect,
-  even though each persist is a within-query optimization. Clearing
-  between executions makes every timed number a full recompute from
-  the parquet inputs, and bounds the session's cache growth.
-- The final stdout JSON line now carries a ``queries`` map (the r01
-  contract) with the 58 headline entries plus a PINNED list of the
-  heaviest extended entries, values rounded to 2 decimals. The r05
-  full-map line blew the driver's ~2000-byte tail capture (parsed:
-  null); this subset is sized to fit with slack, and informational
-  fields are dropped before query entries if the line ever overflows.
-  The full 3-decimal map for all entries stays in BENCH_DETAIL.json
-  and on stderr.
+The final stdout JSON line carries a ``queries`` map with the 58
+headline entries plus a PINNED list of the heaviest extended entries,
+values rounded to 2 decimals; the full 3-decimal map for all entries
+is in BENCH_DETAIL.json ($SPARK_GRAFT_BENCH_DETAIL) and on stderr.
 """
 
 from __future__ import annotations
@@ -219,8 +192,7 @@ def _bench_only() -> dict:
     entries (xxhash64 is JVM-only, so DuckDB cannot hash-match the
     exact pair/bucket sets; correctness of the shared kernels is pinned
     by the md5 twins' oracles plus tests/test_hash_modes.py) — so
-    the perf the library actually ships is tracked by BENCH history,
-    not only tools/measure_hash_modes.py."""
+    the perf the library actually ships is tracked by BENCH history."""
     from pyspark.sql import functions as F
 
     from mxene_coin_cell_data_pipeline_spark.functions.dedup import (
@@ -300,21 +272,17 @@ def _bench_only() -> dict:
 
 #: 1-min loadavg above which the host is considered busy. The bench
 #: saturates all cores itself, so the guard only looks at load from
-#: OTHER work, *before* the session starts. BENCH_r06's 61.9s headline
-#: was recorded while a 100x oracle sweep ran on the same host and the
-#: pollution entered the perf history silently; this makes that
-#: structural: the bench WAITS (bounded) for the host to drain, and
-#: unconditionally stamps the load it actually measured under into
+#: OTHER work, *before* the session starts: it WAITS (bounded) for the
+#: host to drain, and stamps the load it actually measured under into
 #: both the detail file and the headline JSON.
 BUSY_LOADAVG = 4.0
-#: Wait-until-idle budget. Round 7's committed headline (65.8s) was
-#: recorded after the old 300s cap expired while a 100x sweep still
-#: held all 32 cores (loadavg 32) — the guard stamped honestly but the
-#: series entry was still polluted. 30 min outlasts any single
-#: co-scheduled sweep batch, so the committed series is load-clean by
-#: construction; the stamp fields below remain the audit trail for the
-#: (now pathological) case where even 30 min wasn't enough.
+#: Wait-until-idle budget: outlasts a co-scheduled sweep batch, so a
+#: committed headline is load-clean unless the stamp says otherwise.
 BUSY_WAIT_S = 1800
+
+#: Smallest scale factor: one pass over it compiles every plan's
+#: whole-stage codegen before anything at the bench SF runs.
+WARM_SF = "/root/testdata/sf0.001"
 
 
 def _host_guard() -> dict:
@@ -336,130 +304,95 @@ def _host_guard() -> dict:
     }
 
 
+def measure(spark, fns: dict, sf_dir: str, passes: int, warmups: int):
+    """Time each ``fns[name](spark, sf_dir)`` through the noop sink.
+
+    Returns ``(mins, per_pass, warmup_pass_secs, warmup_failures)``:
+    the min seconds per query, its ``passes`` timed seconds in pass
+    order, the wall time of each untimed warmup pass, and the names
+    that raised in any warmup. A warmup failure never sinks the run,
+    but it is recorded; a failure in a timed pass raises.
+    """
+
+    def run(name, fn, d) -> None:
+        spark.sparkContext.setJobDescription(name)
+        try:
+            fn(spark, d).write.format("noop").mode("overwrite").save()
+        finally:
+            spark.sparkContext.setJobDescription(None)
+
+    # Cache honesty: CacheManager matches canonicalized plans across
+    # invocations, so an intermediate one execution persist()s would be
+    # read by the next. Every execution, warmup or timed, is followed by
+    # clearCache() — outside the timed window — so each timed number is
+    # a full recompute from the parquet inputs.
+    def untimed(d, failures) -> None:
+        for name, fn in fns.items():
+            try:
+                run(name, fn, d)
+            except Exception:
+                if name not in failures:
+                    failures.append(name)
+            spark.catalog.clearCache()
+
+    # One-time session costs: JVM, parquet footer caches and the Python
+    # worker pool (fork + numpy/pandas import per core) ...
+    region = spark.read.parquet(os.path.join(sf_dir, "region.parquet"))
+    region.count()
+    region.repartition(int(spark.conf.get("spark.sql.shuffle.partitions"))).mapInPandas(
+        lambda it: it, schema=region.schema
+    ).count()
+    # ... and whole-stage codegen: janino caches generated classes by
+    # source, so one pass at the smallest SF compiles the code the
+    # measured passes reuse.
+    warmup_failures: list[str] = []
+    if os.path.isdir(WARM_SF):
+        untimed(WARM_SF, warmup_failures)
+    # Warmups at the bench SF absorb the tiered JIT (C2 thresholds count
+    # executions of the generated classes) and the parquet page cache.
+    warmup_pass_secs: list[float] = []
+    for _ in range(warmups):
+        t0 = time.perf_counter()
+        untimed(sf_dir, warmup_failures)
+        warmup_pass_secs.append(round(time.perf_counter() - t0, 3))
+
+    per_pass: dict[str, list[float]] = {name: [] for name in fns}
+    for _ in range(passes):
+        for name, fn in fns.items():
+            t0 = time.perf_counter()
+            run(name, fn, sf_dir)
+            per_pass[name].append(round(time.perf_counter() - t0, 3))
+            spark.catalog.clearCache()
+    mins = {name: min(ts) for name, ts in per_pass.items() if ts}
+    return mins, per_pass, warmup_pass_secs, warmup_failures
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", "") or "0.1")
     host = _host_guard()
     spark = get_spark("mxene-bench")
 
-    # warmup: JVM + parquet footer caches + the Python worker pool
-    # (fork + numpy/pandas import per core) + whole-stage-codegen
-    # compilation of every headline plan shape (janino caches generated
-    # classes by source, so running each query once at the smallest SF
-    # compiles exactly the code the measured run reuses). One-time
-    # session costs; the measured numbers are the plans, not the JIT.
-    region = spark.read.parquet(os.path.join(sf_dir, "region.parquet"))
-    region.count()
-    region.repartition(int(spark.conf.get("spark.sql.shuffle.partitions"))).mapInPandas(
-        lambda it: it, schema=region.schema
-    ).count()
-
-    def run(df) -> None:
-        df.write.format("noop").mode("overwrite").save()
-
-    # Cache honesty (r12, VERDICT r11 item 1): drop every SQL-cached
-    # relation once a query's action completes, so the NEXT execution —
-    # warmup or timed — recomputes from parquet instead of reading
-    # intermediates a previous invocation persisted (CacheManager
-    # matches canonicalized plans across invocations). Called OUTSIDE
-    # the timed window: timers stop before cleanup runs.
-    def clear_cache() -> None:
-        spark.catalog.clearCache()
-
     bench_only = _bench_only()
     fns = {name: QUERIES[name].spark for name in HEADLINE + EXTENDED}
     fns.update(bench_only)
-
-    warm_sf = "/root/testdata/sf0.001"
-    if os.path.isdir(warm_sf):
-        for fn in fns.values():
-            try:
-                run(fn(spark, warm_sf))
-            except Exception:
-                pass  # a warmup failure must never sink the bench
-            clear_cache()
-
-    # ≥3 interleaved passes, min per query (VERDICT r08 task 4): the
-    # committed series was sampling co-tenant weather — four same-day
-    # idle runs of an UNCHANGED plan set spread 43.76-63.98s (1.46×)
-    # under min-of-2, swamping any plan signal. More passes converge
-    # each query to its floor (a transient must now hit the same query
-    # in EVERY pass to survive); the per-pass headline totals are
-    # stamped into the artifact so the intra-RUN spread is part of the
-    # record — read a committed headline against that spread before
-    # calling anything a regression.
     n_passes = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_PASSES", "3")))
-    times: dict[str, float] = {}
-    pass_totals: list[float] = []
-
-    # one UNTIMED warmup pass at the bench SF (VERDICT r09 task 6):
-    # the sf0.001 warmup above compiles every plan's codegen, but the
-    # first sf0.1 pass still pays parquet page-cache faults and the
-    # size-tiered JIT — r09's stamped spread 1.292 (55.7/59.4/46.0)
-    # was exactly that shape. Timed separately so the artifact shows
-    # what the warmup absorbed.
-    # A warmup failure must never sink the bench, but it must not be
-    # SILENT either (r10 ADVICE): a query that raises only during
-    # warmup would otherwise leave no trace while its timed pass
-    # silently lost the warm state this pass exists to provide — so
-    # the failing names are stamped into the artifact.
-    # The r10-item-4 diagnosis RAN (round 11, idle host): the spread
-    # DECAYS WITH EXECUTIONS — 1.292 at 0 warmups (r09), 1.226 at 1
-    # (r10), 1.152 at 2 (BENCH_DETAIL warmups 118.7/112.1s, pass
-    # totals 46.1/40.0/40.3) — which is tiered-JIT behavior (C2
-    # recompilation thresholds are counted in EXECUTIONS of the
-    # generated classes), not page cache (every parquet page was hot
-    # after warmup 1, yet warmup 2 still moved the spread). Default is
-    # therefore TWO warmup passes; the residual ~15% on pass 1 is the
-    # tail of the same tiering (some plans need >2 executions to reach
-    # C2) and is absorbed by min-per-query.
-    # SPARK_GRAFT_BENCH_WARMUP_PASSES overrides for re-diagnosis.
-    warmup_pass_sec = None
-    warmup_pass_secs: list[float] = []
-    warmup_failures: list[str] = []
-    n_warmup = (
-        0
-        if os.environ.get("SPARK_GRAFT_BENCH_NO_WARMUP")
-        else max(1, int(os.environ.get("SPARK_GRAFT_BENCH_WARMUP_PASSES", "2")))
+    n_warmup = max(0, int(os.environ.get("SPARK_GRAFT_BENCH_WARMUP_PASSES", "2")))
+    times, per_pass, warmup_pass_secs, warmup_failures = measure(
+        spark, fns, sf_dir, n_passes, n_warmup
     )
-    for _w in range(n_warmup):
-        t0 = time.perf_counter()
-        for name, fn in fns.items():
-            try:
-                run(fn(spark, sf_dir))
-            except Exception:
-                if name not in warmup_failures:
-                    warmup_failures.append(name)
-            clear_cache()
-        warmup_pass_secs.append(round(time.perf_counter() - t0, 3))
-    if warmup_pass_secs:
-        warmup_pass_sec = warmup_pass_secs[0]
-    for _pass in range(n_passes):
-        pass_t: dict[str, float] = {}
-        for name, fn in fns.items():
-            t0 = time.perf_counter()
-            run(fn(spark, sf_dir))
-            elapsed = round(time.perf_counter() - t0, 3)
-            clear_cache()
-            pass_t[name] = elapsed
-            if name not in times or elapsed < times[name]:
-                times[name] = elapsed
-        pass_totals.append(round(sum(pass_t[n] for n in HEADLINE), 3))
+    pass_totals = [
+        round(sum(per_pass[n][i] for n in HEADLINE), 3) for i in range(n_passes)
+    ]
+    warmup_pass_sec = warmup_pass_secs[0] if warmup_pass_secs else None
 
-    # "value" stays the ORIGINAL 58-query headline total — directly
-    # comparable to the round-1 pin in BASELINE.md; the wave-3/4
-    # heavies and the xxh production twins report separately so their
-    # history is tracked without making the headline series
-    # incomparable across rounds.
+    # "value" stays the 58-query headline total, comparable to the
+    # round-1 pin in BASELINE.md; the extended heavies and the xxh
+    # production twins report separately.
     total = round(sum(times[n] for n in HEADLINE), 3)
     total_ext = round(sum(times[n] for n in EXTENDED), 3)
     total_xxh = round(sum(times[n] for n in bench_only), 3)
 
-    # Output protocol (VERDICT r05 task 3): the per-query map blew the
-    # driver's tail capture in r05 (BENCH_r05.json parsed: null), so
-    # the map goes to a committed detail file and stderr, and the LAST
-    # stdout line is a COMPACT headline JSON the driver can always
-    # parse from a bounded tail.
     detail = {
         "metric": "total_headline_query_sec",
         "value": total,
@@ -486,12 +419,10 @@ def main() -> None:
     with open(detail_file, "w") as f:
         json.dump(detail, f, indent=1)
     print(json.dumps({"per_query_detail": detail_file, "queries": times}), file=sys.stderr)
-    # Final stdout line (r12 protocol): the compact headline JSON the
-    # driver parses from a bounded (~2000 byte) output tail, now
-    # carrying per-query seconds for HEADLINE + STDOUT_EXTRA (2-decimal
-    # — full precision in the detail file). If the line ever outgrows
-    # the budget, informational fields are dropped first; query entries
-    # are never dropped.
+    # The LAST stdout line is parsed from a bounded (~2000-byte) output
+    # tail, so it is kept under 1900 bytes: query entries are 2-decimal
+    # and never dropped; informational fields are dropped first if the
+    # line ever outgrows the budget.
     stdout_obj = {
         "metric": "total_headline_query_sec",
         "value": total,

@@ -19,6 +19,7 @@ Design for 100 TB:
 from __future__ import annotations
 
 from ..checkpoint import durable_checkpoint
+from ..operators._sql import ident
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from .text import tokenize
@@ -1495,6 +1496,40 @@ def crossdoc_kept_tokens(
     )
 
 
+#: 2⁶³ and 2⁶³−1 as DECIMAL literals (BD suffix): both exceed int64,
+#: so they cannot ride F.lit
+_P63 = "9223372036854775808BD"
+_P63M1 = "9223372036854775807BD"
+
+
+def argmax_pack(value: str, id_col: str) -> Column:
+    """``value·2⁶³ + (2⁶³−1−id)`` as one DECIMAL(38,0): its ``max`` over
+    a group encodes argmax(value, tie → smaller id).
+
+    The pack is strictly monotone in (value asc, id desc) for any long
+    value and any id ≥ 0, and stays below ~8.6·10³⁷ < 10³⁸. A decimal
+    buffer is mutable, so the aggregate plans as HashAggregate with
+    map-side partials; ``max(struct(value, −id))`` forces SortAggregate.
+    A negative id would overlap the next value's range and pick a wrong
+    id, so it raises instead.
+    """
+    v, i = ident(value), ident(id_col)
+    return F.expr(
+        f"CAST({v} AS DECIMAL(20,0)) * {_P63} + ({_P63M1} - CAST(IF({i} < 0,"
+        f" raise_error(concat('argmax_pack: negative id ', CAST({i} AS STRING))),"
+        f" {i}) AS DECIMAL(20,0)))"
+    )
+
+
+def argmax_unpack(pack: str, value_max: str) -> Column:
+    """The id inside ``max`` of :func:`argmax_pack`, given the group's
+    ``max`` value: ``2⁶³−1 − (pack − value_max·2⁶³)``, exact in decimal."""
+    return F.expr(
+        f"CAST({_P63M1} - ({ident(pack)} - CAST({ident(value_max)}"
+        f" AS DECIMAL(20,0)) * {_P63}) AS BIGINT)"
+    )
+
+
 def quality_keeper_audit(
     groups: DataFrame,
     docs: DataFrame,
@@ -1518,17 +1553,10 @@ def quality_keeper_audit(
     members) − mixer(keeper) after the aggregate, exact in int64.
     State is O(#groups) end to end.
 
-    Argmax encoding (optimization r12, VERDICT r11 item 4): for
-    integral quality columns the argmax travels as ``max`` of ONE
-    DECIMAL(38,0) packing ``q·2⁶³ + (2⁶³−1−id)`` — strictly monotone in
-    the (quality asc, id desc) order for any long q and any
-    non-negative id (the library's id contract), with every value
-    bounded by ~8.6·10³⁷ < 10³⁸, so it never overflows the decimal.
-    A decimal buffer is mutable, so the aggregate plans as
-    HashAggregate with map-side partials; the r11 ``max(struct(q,
-    −id))`` form forced SortAggregate (struct buffers are not mutable),
-    paying an exchange-side sort per round. Non-integral quality
-    columns keep the exact struct form (a decimal cast would truncate).
+    Argmax encoding: for integral quality columns the argmax travels
+    as ``max`` of :func:`argmax_pack` (HashAggregate, no sort; a
+    negative doc_id raises). Non-integral quality columns keep the
+    exact struct form (a decimal cast would truncate).
     """
     q = groups.join(
         docs.select(F.col(id_col).alias("doc_id"), quality_col), "doc_id"
@@ -1541,24 +1569,13 @@ def quality_keeper_audit(
         "bigint",
     )
     if integral:
-        # 2^63 and 2^63−1 as DECIMAL literals (BD suffix): both exceed
-        # int64, so they cannot ride F.lit
-        pack = F.expr(
-            f"CAST(`{quality_col}` AS DECIMAL(20,0)) * 9223372036854775808BD"
-            " + (9223372036854775807BD - CAST(doc_id AS DECIMAL(20,0)))"
-        )
         agg = q.groupBy("group_id").agg(
             F.count(F.lit(1)).alias("n_docs"),
             F.max(F.col(quality_col)).alias("_bq"),
-            F.max(pack).alias("_bp"),
+            F.max(argmax_pack(quality_col, "doc_id")).alias("_bp"),
             F.sum(mix).alias("_sig_all"),
         )
-        # unpack: _bp = bq·2⁶³ + (2⁶³−1 − keeper_id), all exact decimal
-        keeper_id = F.expr(
-            "CAST(9223372036854775807BD"
-            " - (_bp - CAST(_bq AS DECIMAL(20,0)) * 9223372036854775808BD)"
-            " AS BIGINT)"
-        )
+        keeper_id = argmax_unpack("_bp", "_bq")
         keeper_q = F.col("_bq")
     else:
         best = F.max(

@@ -21,19 +21,7 @@ import math
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
-
-def _d_sql(v) -> str:
-    """One double value as a SQL literal. ``repr`` emits the shortest
-    round-trip decimal, so the parsed double is bit-identical to the
-    ``F.lit`` it replaces; non-finite values (which ``repr`` would
-    render as invalid SQL — 'infD', 'nanD') emit the CAST form Spark
-    parses to the same IEEE specials (r12, ADVICE fix)."""
-    v = float(v)
-    if math.isfinite(v):
-        return repr(v) + "D"
-    if math.isnan(v):
-        return "CAST('NaN' AS DOUBLE)"
-    return f"CAST('{'' if v > 0 else '-'}Infinity' AS DOUBLE)"
+from ..operators._sql import double
 
 
 def _dlit(vals) -> Column:
@@ -48,7 +36,7 @@ def _dlit(vals) -> Column:
 def _dlit_sql(vals) -> str:
     """The SQL-string form of :func:`_dlit`, for embedding literal
     arrays inside larger single-parse expressions."""
-    return "array(" + ",".join(_d_sql(v) for v in vals) + ")"
+    return "array(" + ",".join(map(double, vals)) + ")"
 
 
 def _sq_sql(arr: str) -> str:
@@ -858,7 +846,7 @@ def pq_assign(
                 dcc = dcc + float(x) * float(x)
             dxc = _dotp_sql(xs, _dlit_sql(cvec))
             cand.append(
-                f"struct(({dxx}) - 2 * ({dxc}) + {repr(dcc)}D AS dist,"
+                f"struct(({dxx}) - 2 * ({dxc}) + {double(dcc)} AS dist,"
                 f" {c} AS code)"
             )
         mn = f"array_min(array({', '.join(cand)}))"

@@ -629,6 +629,8 @@ def _g04_oracle() -> str:
 def g04_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """3-round synchronous LPA communities on the trade graph,
     audited per community (size, range, member mixer)."""
+    from ..functions.dedup import argmax_pack, argmax_unpack
+
     li, orders = _ctx(spark, sf_dir, "lineitem", "orders")
     raw = li.join(orders, F.col("o_orderkey") == F.col("l_orderkey")).select(
         F.col("o_custkey").alias("src"), F.col("l_suppkey").alias("dst")
@@ -674,30 +676,14 @@ def g04_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy(F.col("dst"), F.col("lbl"))
             .agg(F.count(F.lit(1)).alias("c"))
         )
-        # Argmax(count DESC, label ASC) as max of ONE DECIMAL(38,0)
-        # pack c·2⁶³ + (2⁶³−1−lbl) — strictly monotone in (c, −lbl)
-        # for any count ≥ 0 and any non-negative label (vertex ids),
-        # bounded < 10³⁸ (optimization r12, the d21 move): a decimal
-        # buffer is mutable so each round's argmax plans as
-        # HashAggregate with map-side partials; the r11 max(struct(c,
-        # −lbl)) form forced a SortAggregate (exchange-side sort) per
-        # round. max(c) is the argmax row's count, so the label unpacks
-        # exactly: lbl = 2⁶³−1 − (pack − max(c)·2⁶³).
-        pack = F.expr(
-            "CAST(c AS DECIMAL(20,0)) * 9223372036854775808BD"
-            " + (9223372036854775807BD - CAST(lbl AS DECIMAL(20,0)))"
-        )
+        # Argmax(count DESC, label ASC) as max of the d21 decimal pack:
+        # each round's argmax plans as HashAggregate with map-side
+        # partials, not a SortAggregate per round; a negative vertex id
+        # raises.
         labels = (
             cnt.groupBy(F.col("dst").alias("v"))
-            .agg(F.max(pack).alias("_bp"), F.max("c").alias("_bc"))
-            .select(
-                "v",
-                F.expr(
-                    "CAST(9223372036854775807BD - (_bp"
-                    " - CAST(_bc AS DECIMAL(20,0)) * 9223372036854775808BD)"
-                    " AS BIGINT)"
-                ).alias("lbl"),
-            )
+            .agg(F.max(argmax_pack("c", "lbl")).alias("_bp"), F.max("c").alias("_bc"))
+            .select("v", argmax_unpack("_bp", "_bc").alias("lbl"))
         )
     mix = ((F.col("v") % F.lit(2147483647)) * F.lit(2654435761)) % F.lit(
         2147483647

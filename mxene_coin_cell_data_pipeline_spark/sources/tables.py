@@ -65,11 +65,30 @@ _DF_CACHE: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
 )
 
 
+def _data_files(path: str) -> list[str]:
+    """The files Spark reads for a parquet path: the path itself, or
+    every file under a directory (partition subdirectories included)
+    whose name and directories' names are not hidden. Spark's rule: a
+    name starting with ``.``, or with ``_`` and holding no ``=``, is
+    hidden — part files need no ``.parquet`` suffix (``000000_0``)."""
+    if not os.path.isdir(path):
+        return [path]
+
+    def hidden(name: str) -> bool:
+        return name.startswith(".") or (name.startswith("_") and "=" not in name)
+
+    out = []
+    for root, dirs, files in os.walk(path):
+        dirs[:] = sorted(d for d in dirs if not hidden(d))
+        out.extend(os.path.join(root, f) for f in sorted(files) if not hidden(f))
+    return out
+
+
 def _file_sig(path: str):
     """Cache key for a parquet file or directory of part files.
 
-    Signature is (mtime_ns, inode, size) per file (r12, ADVICE fix):
-    float-seconds mtime alone let a same-size rewrite inside the
+    Signature is (mtime_ns, inode, size) per data file (r12, ADVICE
+    fix): float-seconds mtime alone let a same-size rewrite inside the
     filesystem's timestamp granularity return a stale entry; nanosecond
     mtime plus the inode (rewrites via rename/replace allocate a new
     one) closes that window for every realistic rewrite path. A
@@ -78,10 +97,9 @@ def _file_sig(path: str):
     try:
         if os.path.isdir(path):
             parts = tuple(
-                (f, st.st_mtime_ns, st.st_ino, st.st_size)
-                for f in sorted(os.listdir(path))
-                if f.endswith(".parquet")
-                for st in (os.stat(os.path.join(path, f)),)
+                (os.path.relpath(f, path), st.st_mtime_ns, st.st_ino, st.st_size)
+                for f in _data_files(path)
+                for st in (os.stat(f),)
             )
             return (path, parts)
         st = os.stat(path)
@@ -110,29 +128,18 @@ def _nano_timestamp_columns(path: str) -> list[str]:
 
     Uses a driver-side footer read (cheap: metadata only) so the loader
     works for any table without a hard-coded column list. Accepts both
-    single-file tables and directory layouts (first part file's footer
-    — parts of one dataset share a schema).
+    single-file tables and directory layouts (the first data file's
+    footer — parts of one dataset share a schema).
     """
     sig = _file_sig(path)
     key = ("nanos", sig)
     if sig is not None and key in _META_CACHE:
         return _META_CACHE[key]
-    try:
-        fpath = path
-        if os.path.isdir(fpath):
-            fpath = next(
-                os.path.join(fpath, f)
-                for f in sorted(os.listdir(fpath))
-                if f.endswith(".parquet")
-            )
-        schema = pq.read_schema(fpath)
-    except Exception:
-        return []
-    out = []
-    for field in schema:
-        t = field.type
-        if str(t).startswith("timestamp[ns"):
-            out.append(field.name)
+    files = _data_files(path)
+    # a footer that cannot be read raises: swallowing it would load
+    # nanosecond columns as raw longs
+    schema = pq.read_schema(files[0]) if files else []
+    out = [f.name for f in schema if str(f.type).startswith("timestamp[ns")]
     if sig is not None:
         _META_CACHE[key] = out
     return out

@@ -132,6 +132,44 @@ def test_quality_keeper_pack_argmax_exact(spark, quality):
     assert r["n_docs"] == len(members)
 
 
+def test_quality_keeper_negative_id_raises(spark):
+    """The decimal argmax pack is exact only for ids >= 0: doc -2 at
+    quality 5 packs above doc 2^63-1 at quality 6 and would unpack as a
+    keeper that is not in the group. The pack raises instead."""
+    from mxene_coin_cell_data_pipeline_spark.functions.dedup import (
+        quality_keeper_audit,
+    )
+
+    top = (1 << 63) - 1
+    groups = spark.createDataFrame([(-2, 1), (top, 1)], "doc_id long, group_id long")
+    docs = spark.createDataFrame([(-2, 5), (top, 6)], "doc_id long, n_chars long")
+    with pytest.raises(Exception, match="argmax_pack: negative id -2"):
+        quality_keeper_audit(groups, docs).collect()
+
+
+def test_argmax_pack_roundtrip_and_negative_id(spark):
+    """The helper g04 and d21 share: max of the pack unpacks to the
+    argmax (value desc, tie -> smaller id); a negative id raises."""
+    from pyspark.sql import functions as F
+
+    from mxene_coin_cell_data_pipeline_spark.functions.dedup import (
+        argmax_pack,
+        argmax_unpack,
+    )
+
+    rows = [(1, 7, 3), (1, 9, 3), (1, 2, 1), (2, (1 << 63) - 1, 0), (2, 0, 0)]
+    df = spark.createDataFrame(rows, "g long, id long, v long")
+    out = (
+        df.groupBy("g")
+        .agg(F.max(argmax_pack("v", "id")).alias("p"), F.max("v").alias("m"))
+        .select("g", argmax_unpack("p", "m").alias("id"))
+    )
+    assert sorted(map(tuple, out.collect())) == [(1, 7), (2, 0)]
+    neg = spark.createDataFrame([(1, -1, 0)], "g long, id long, v long")
+    with pytest.raises(Exception, match="argmax_pack: negative id -1"):
+        neg.groupBy("g").agg(F.max(argmax_pack("v", "id"))).collect()
+
+
 def test_quality_keeper_hash_aggregates(spark):
     """VERDICT r11 item 4 'done' criterion: integral quality plans as
     HashAggregate (decimal pack buffer is mutable); the struct-argmax

@@ -65,3 +65,41 @@ def test_stream_schema_has_no_ntz(spark, sf_dir):
     assert all(
         f.dataType.typeName() != "timestamp_ntz" for f in df.schema.fields
     ), df.schema.simpleString()
+
+
+@pytest.mark.parametrize("part", ["part-0.parquet", "000000_0"])
+def test_load_table_nanos_in_any_part_file_name(spark, tmp_path, part):
+    """Spark reads every non-hidden file of a table directory, with or
+    without a ``.parquet`` suffix (Hive writes ``000000_0``). The
+    nanosecond sniff must look at the same files, or a TIMESTAMP(NANOS)
+    column loads as raw bigint nanoseconds."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from mxene_coin_cell_data_pipeline_spark.sources.tables import load_table
+
+    table_dir = tmp_path / "t.parquet"
+    table_dir.mkdir()
+    ns = [1_700_000_000_123_456_789, 1_700_000_001_000_000_999]
+    pq.write_table(
+        pa.table({"id": [1, 2], "ts": pa.array(ns, pa.timestamp("ns"))}),
+        table_dir / part,
+    )
+    (table_dir / "_SUCCESS").write_bytes(b"")
+    df = load_table(spark, str(tmp_path), "t")
+    assert dict(df.dtypes)["ts"] == "timestamp"
+    got = [r[0] for r in df.orderBy("id").select(F.unix_micros("ts")).collect()]
+    assert got == [n // 1000 for n in ns]
+
+
+def test_nano_sniff_raises_on_unreadable_footer(tmp_path):
+    """A footer read that fails must not pass as 'no nanosecond
+    columns': that answer loads TIMESTAMP(NANOS) as raw longs."""
+    from mxene_coin_cell_data_pipeline_spark.sources.tables import (
+        _nano_timestamp_columns,
+    )
+
+    bad = tmp_path / "bad.parquet"
+    bad.write_bytes(b"not a parquet file")
+    with pytest.raises(Exception):
+        _nano_timestamp_columns(str(bad))

@@ -3,10 +3,12 @@
 Usage: python tools/time_queries.py --only a,b,c [--sf DIR] [--passes 3]
        [--warmups 2]
 
-Same methodology as bench.py (untimed warmups at the target SF, min of
-N interleaved passes, noop sink so every output column materializes)
-but restricted to a named subset, for tight optimize-measure loops.
-Prints one JSON line {name: min_sec}.
+Runs bench.py's protocol (:func:`bench.measure`: sf0.001 codegen warmup,
+untimed warmups at the target SF, min of N interleaved passes, noop sink
+so every output column materializes, clearCache after every execution)
+restricted to a named subset, for tight optimize-measure loops and for
+scale rows (one run per ``--sf`` directory). Prints one JSON line
+{"min": {name: sec}, "passes": {name: [sec, ...]}}.
 """
 
 from __future__ import annotations
@@ -15,10 +17,10 @@ import argparse
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+import bench  # noqa: E402
 from mxene_coin_cell_data_pipeline_spark import get_spark  # noqa: E402
 from mxene_coin_cell_data_pipeline_spark.plans import QUERIES  # noqa: E402
 
@@ -33,29 +35,10 @@ def main() -> int:
 
     spark = get_spark("time-queries")
     names = [n.strip() for n in args.only.split(",") if n.strip()]
-
-    def run(name: str) -> None:
-        spark.sparkContext.setJobDescription(name)
-        QUERIES[name].spark(spark, args.sf).write.format("noop").mode(
-            "overwrite"
-        ).save()
-        spark.sparkContext.setJobDescription(None)
-
-    for _ in range(args.warmups):
-        for name in names:
-            run(name)
-            spark.catalog.clearCache()  # bench.py cache-honesty parity
-    times: dict[str, float] = {}
-    per_pass: dict[str, list[float]] = {n: [] for n in names}
-    for _ in range(args.passes):
-        for name in names:
-            t0 = time.perf_counter()
-            run(name)
-            el = round(time.perf_counter() - t0, 3)
-            spark.catalog.clearCache()  # outside the timed window
-            per_pass[name].append(el)
-            if name not in times or el < times[name]:
-                times[name] = el
+    fns = {name: QUERIES[name].spark for name in names}
+    times, per_pass, _, failed = bench.measure(spark, fns, args.sf, args.passes, args.warmups)
+    if failed:
+        print(json.dumps({"warmup_failures": failed}), file=sys.stderr)
     print(json.dumps({"min": times, "passes": per_pass}))
     spark.stop()
     return 0
