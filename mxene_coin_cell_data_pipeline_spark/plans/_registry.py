@@ -19,10 +19,10 @@ order-insensitively):
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from typing import Callable
 
-from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..sources.tables import load_table
 
@@ -124,39 +124,13 @@ def _fsum6_micro(col) -> F.Column:
     return F.sum(F.floor(col * F.lit(1000000.0) + F.lit(0.5)).cast("long"))
 
 
-#: Driver-facing registration order. The correctness driver checks a
-#: PREFIX window of the registry (50 queries in rounds 1-2), so the
-#: highest-value coverage heads are listed first: the TPC-H plan-shape
-#: family, the streaming family, and the north-star dedup/similarity/
-#: text/multimodal heads — every one oracle-backed and green in the
-#: full driver_check sweep. Everything not listed follows in
-#: definition order, so the full registry is always exported.
-#: Round-11 rotation (VERDICT r10 task 5): union of the r01-r10
-#: windows = 199/199 green, so this window leads with the ELEVEN
-#: round-11 additions (wave 13/14: g04 LPA communities, s17
-#: ANN-prefiltered MMR, d21
-#: quality-keeper dedup, o20
-#: epoch shard shuffle, src07
-#: materialized IVF index, s16 MMR, o19 epoch upsampling; wave 12:
-#: s14 IVFADC, m13 audio fingerprint near-dup, s15 RRF fusion, p07
-#: trained-tokenizer capstone — never driver-verified) plus s13,
-#: whose oracle CHANGED this round (r10 ADVICE: cosine audit
-#: re-ranked onto the round(·1e9) int64 grid); then the r06-stale
-#: trio the judge named (a05_trapezoid, m02_decode_stub,
-#: p01_cycler_pipeline — last driver-verdicted r06), then the r07
-#: cohort in its r07-window order MINUS the four the judge
-#: re-verified first-hand in r10 (a16_stats_agg, g01_pagerank,
-#: e05_ewma, o09_zorder_layout). The wave-13/14 inserts push the
-#: prefix tail past position 50; left for r12: that tail
-#: (m04_byte_features, j08_salted_skew_agg, s05_kmeans_iteration,
-#: st05_stream_stream_join, c13_variant_shred,
-#: u03_udtf_sentences,
-#: a18_promo_ratio, a19_priority_counts, t09_pii_redact), the rest of
-#: the filtered r07 cohort (e06_interval_coverage,
-#: o08_weighted_sample, st06_stream_upsert_snapshot,
-#: a20_approx_distinct_bound), and the four judge-covered names.
-_DRIVER_PREFIX = [
-    # — NEW this round (waves 13/14): never driver-verified, so they lead —
+#: Driver-facing order of the whole registry, one name per query. The
+#: correctness driver checks a PREFIX window of it, so the head lists
+#: the queries that most need a fresh driver verdict; rotating the window
+#: means reordering the head of this list (COVERAGE.md, "Registry layout
+#: and order"). ``tests/test_registry.py`` pins that it names every
+#: registered query once.
+ORDER = [
     "g04_label_propagation",
     "s17_mmr_over_ivfadc",
     "d21_quality_keeper_groups",
@@ -164,18 +138,14 @@ _DRIVER_PREFIX = [
     "src07_ivf_index_layout",
     "s16_mmr_diverse_topk",
     "o19_epoch_upsample",
-    # — NEW this round (wave 12): never driver-verified, so they lead —
     "s14_ivfpq_residual_topk",
     "m13_audio_fingerprint_neardup",
     "s15_rrf_hybrid_fusion",
     "p07_trained_tokenizer_pipeline",
-    # — oracle CHANGED this round (int-grid cosine audit) —
     "s13_pq_adc_topk",
-    # — the r06-stale trio —
     "a05_trapezoid",
     "m02_decode_stub",
     "p01_cycler_pipeline",
-    # — the r07 cohort (42 of 46 after the judge-covered four) —
     "s03_signlsh_pairs",
     "d07_signlsh_neardup",
     "d10_chunk_dedup",
@@ -215,27 +185,171 @@ _DRIVER_PREFIX = [
     "st05_stream_stream_join",
     "c13_variant_shred",
     "u03_udtf_sentences",
-    # past position 50 once wave 13 leads — next rotation's head
     "a18_promo_ratio",
     "a19_priority_counts",
     "t09_pii_redact",
+    # -- end of the driver head; the rest follow in the order they were added --
+    "q01_pricing_summary",
+    "q03_top_revenue_orders",
+    "q05_nation_volume",
+    "o03_topk_orders",
+    "u01_union_slices",
+    "w01_rank_per_group",
+    "a02_last_non_null",
+    "a03_guarded_ratio",
+    "a04_first_norm",
+    "a06_argmin_nearest",
+    "a07_neighbor_median_delta",
+    "a08_min_subtract",
+    "a10_running_first_shift",
+    "a11_regr_fade",
+    "c05_c06_labels",
+    "c07_substring_filter",
+    "c04_c08_casts",
+    "qc01_aggregate_checks",
+    "d01_exact_dedup",
+    "d02_minhash_lsh",
+    "d03_simhash",
+    "d05_ngram_jaccard",
+    "s01_cosine_topk",
+    "s02_ivf_topk",
+    "d04_embedding_neardup",
+    "t01_token_stats",
+    "t02_quality_score",
+    "t03_language_id",
+    "t04_fingerprint",
+    "m01_binary_meta",
+    "m05_ppm_decode",
+    "p02_cycler_features_sql",
+    "st01_stream_window_rollup",
+    "st02_stream_static_join",
+    "m03_frame_sample",
+    "p03_dqdv_sql",
+    "p04_ir_sql",
+    "w07_unpivot",
+    "d06_near_dup_groups",
+    "d09_simhash_hamming",
+    "d12_lsh_star_cap",
+    "d14_star_cap_groups",
+    "d13_simhash_star_cap",
+    "d08_edit_distance_refine",
+    "e01_asof_join",
+    "e02_sessionize",
+    "e04_resample_ffill",
+    "t05_tfidf_top_terms",
+    "w02_pivot_step_counts",
+    "w03_rolling_capacity",
+    "j04_outer_custdist",
+    "u02_intersect_except",
+    "w05_ntile_cume",
+    "c12_json_extract",
+    "t06_top_bigrams",
+    "o05_hash_split",
+    "w06_range_frame",
+    "a15_listagg",
+    "a16_stats_agg",
+    "a13_percentiles",
+    "o07_latest_by_key",
+    "e05_ewma",
+    "e06_interval_coverage",
+    "o08_weighted_sample",
+    "o09_zorder_layout",
+    "st06_stream_upsert_snapshot",
+    "q07_nation_pair_volume",
+    "g01_pagerank",
+    "a20_approx_distinct_bound",
+    "a26_hll_sketch_merge",
+    "o10_table_profile",
+    "e07_funnel",
+    "o11_compaction_bins",
+    "d11_url_dedup",
+    "q06_forecast_revenue",
+    "t10_unigram_logprob",
+    "c14_calendar_rollup",
+    "w10_navigation_functions",
+    "src01_jsonl_roundtrip",
+    "src02_csv_fallback",
+    "c15_map_column_ops",
+    "u04_bag_set_ops",
+    "e08_spatial_join",
+    "e09_running_distinct",
+    "o12_cohort_retention",
+    "s06_label_centroids",
+    "o13_winsorize",
+    "e10_twap",
+    "e11_ohlc_bars",
+    "o14_gaps_islands",
+    "e12_asof_forward",
+    "a22_zscore",
+    "e13_interarrival_histogram",
+    "t11_feature_hashing",
+    "u05_bag_counts_derived",
+    "a23_scalar_pandas_udf",
+    "a24_grouped_agg_pandas_udf",
+    "src03_python_datasource",
+    "a25_approx_percentile_bound",
+    "j13_param_grid",
+    "t12_explode_outer",
+    "t13_curation_funnel",
+    "d15_decontaminate",
+    "o15_sequence_pack",
+    "o16_domain_mixture",
+    "t14_dsir_resample",
+    "s08_semdedup",
+    "s07_int8_quantize",
+    "t15_bpe_pretokenize",
+    "g02_connected_components",
+    "e14_linear_interp",
+    "d16_bloom_decontaminate",
+    "src04_orc_roundtrip",
+    "m06_ppm_resize",
+    "t16_linear_classifier",
+    "st09_stream_decode",
+    "m07_wav_decode",
+    "m08_avi_frames",
+    "t17_span_self_dedup",
+    "t18_bm25_topk",
+    "a27_histogram_quantile",
+    "s09_matryoshka_topk",
+    "g03_triangle_count",
+    "e15_scd2_intervals",
+    "st10_stream_histogram",
+    "a28_countmin_freq",
+    "src05_hive_partitioned_roundtrip",
+    "p05_export_pipeline",
+    "s10_pca_power",
+    "e16_seasonal_backtest",
+    "a29_join_size_sketch",
+    "d17_window_duprate",
+    "d18_incremental_dedup",
+    "t19_bpe_top_merges",
+    "t20_inverted_index",
+    "s11_pq_assign",
+    "st11_stream_incremental_dedup",
+    "s12_random_projection",
+    "m09_avi_keyframes",
+    "d19_containment_pairs",
+    "src06_schema_evolution",
+    "t21_bigram_lm_score",
+    "o17_merge_upsert",
+    "j14_dynamic_partition_pruning",
+    "m10_image_ahash_neardup",
+    "t22_token_drift",
+    "d20_crossdoc_span_removal",
+    "m11_image_phash_neardup",
+    "o18_source_mix_quota",
+    "t23_bpe_encode",
+    "t24_bpe_train_merges",
+    "m12_video_phash_neardup",
+    "p06_tokenizer_corpus_pipeline",
 ]
 
 
-def _driver_order() -> list[str]:
-    rest = [n for n in QUERIES if n not in _DRIVER_PREFIX]
-    return [n for n in _DRIVER_PREFIX if n in QUERIES] + rest
-
-
 def query_fns() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return {name: QUERIES[name].spark for name in _driver_order()}
+    return {name: QUERIES[name].spark for name in ORDER}
 
 
 def oracle_sqls() -> dict[str, str]:
-    return {
-        n: QUERIES[n].oracle
-        for n in _driver_order()
-        if QUERIES[n].oracle is not None
-    }
+    return {n: QUERIES[n].oracle for n in ORDER if QUERIES[n].oracle is not None}
 
 

@@ -1,59 +1,35 @@
 """Driver-contract query registry — aggregator.
 
-The former 6.5k-line monolith is split into per-family modules; this
-module re-exports the registry surface unchanged (``QUERIES``,
-``query_fns``, ``oracle_sqls``) and imports every family module IN THE
-ORIGINAL DEFINITION ORDER — registration happens at import time, and
-the driver-facing order (``_DRIVER_PREFIX`` first, then definition
-order) is byte-identical to the pre-split registry (verified against a
-snapshot of names, oracle hashes, and survey tags).
+Importing this module registers every query: it imports the sixteen
+family modules, one per query-name prefix (``d*`` → ``dedup``, ``st*`` →
+``streaming`` ...; COVERAGE.md, "Registry layout and order"). Import
+order does not matter: the driver-facing order is ``_registry.ORDER``,
+and a module whose oracle reuses another family's registered oracle
+imports that family itself.
 
 Core (QuerySpec, the registry dict, ``_register``/``_ctx``/``_dsum6``,
-the driver prefix) lives in ``_registry``; each ``q_*`` module holds
-one family's queries with their oracle SQL inline.
+``ORDER``) lives in ``_registry``; this module re-exports the registry
+surface (``QUERIES``, ``ORDER``, ``query_fns``, ``oracle_sqls``).
 """
 
 from __future__ import annotations
 
-from ._registry import (  # noqa: F401
-    _DRIVER_PREFIX,
-    QUERIES,
-    QuerySpec,
-    _ctx,
-    _driver_order,
-    _dsum6,
-    _register,
-    oracle_sqls,
-    query_fns,
+from . import (  # noqa: F401
+    aggregates,
+    casts,
+    curation,
+    dedup,
+    events,
+    graph,
+    joins,
+    multimodal,
+    pipelines,
+    similarity,
+    sources,
+    streaming,
+    text,
+    tpch,
+    udfs,
+    windows,
 )
-
-# Family modules — import order IS registration order; do not reorder.
-from . import q_tpch_core  # noqa: E402,F401
-from . import q_cycler_events  # noqa: E402,F401
-from . import q_northstar  # noqa: E402,F401
-from . import q_pipeline_streaming  # noqa: E402,F401
-from . import q_dedup_pairs  # noqa: E402,F401
-from . import q_align  # noqa: E402,F401
-from . import q_relational1  # noqa: E402,F401
-from . import q_relational2  # noqa: E402,F401
-from . import q_extensions1  # noqa: E402,F401
-from . import q_extensions2  # noqa: E402,F401
-from . import q_tpch_completion  # noqa: E402,F401
-from . import q_api_surface  # noqa: E402,F401
-from . import q_python_integration  # noqa: E402,F401
-from . import q_curation  # noqa: E402,F401
-from . import q_extensions3  # noqa: E402,F401
-from . import q_wave4_codecs  # noqa: E402,F401
-from . import q_wave4_text  # noqa: E402,F401
-from . import q_extensions4  # noqa: E402,F401
-from . import q_extensions5  # noqa: E402,F401
-from . import q_extensions6  # noqa: E402,F401
-from . import q_extensions7  # noqa: E402,F401
-from . import q_extensions8  # noqa: E402,F401
-from . import q_extensions9  # noqa: E402,F401
-from . import q_extensions10  # noqa: E402,F401
-from . import q_extensions11  # noqa: E402,F401
-
-# kept re-exports (tests and family modules historically reached these
-# through plans.queries)
-from .flagship import events_as_timeseries, flagship_features  # noqa: E402,F401
+from ._registry import ORDER, QUERIES, oracle_sqls, query_fns  # noqa: F401

@@ -188,6 +188,25 @@ def ntz_free_schema(spark: SparkSession, path: str) -> StructType:
     return schema
 
 
+def nanos_as_micros(df: DataFrame, path: str) -> DataFrame:
+    """Turn the TIMESTAMP(NANOS) columns of the parquet at ``path``, which
+    ``nanosAsLong`` reads as raw longs, back into µs timestamps. Batch
+    and streaming reads of a table share this projection.
+
+    The footer sniff reports pyarrow's view; INT96 timestamps also
+    surface there as timestamp[ns] but Spark decodes them as real
+    TIMESTAMP already — only convert columns Spark actually surfaced as
+    long (the genuine nanosAsLong case). Integer division keeps full µs
+    precision (ns values overflow double mantissa); truncation matches
+    DuckDB TIMESTAMP_NS→µs.
+    """
+    long_cols = {f.name for f in df.schema.fields if f.dataType.simpleString() == "bigint"}
+    for col in _nano_timestamp_columns(path):
+        if col in long_cols:
+            df = df.withColumn(col, F.expr(f"timestamp_micros(`{col}` div 1000)"))
+    return df
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one star-schema table, normalizing timestamps to LTZ."""
     path = os.path.join(sf_dir, f"{name}.parquet")
@@ -211,19 +230,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     hit = per.get(path)
     if sig is not None and hit is not None and hit[0] == sig:
         return hit[1]
-    df = spark.read.schema(ntz_free_schema(spark, path)).parquet(path)
-    long_cols = {f.name for f in df.schema.fields if f.dataType.simpleString() == "bigint"}
-    for col in _nano_timestamp_columns(path):
-        # The footer sniff reports pyarrow's view; INT96 timestamps also
-        # surface there as timestamp[ns] but Spark decodes them as real
-        # TIMESTAMP already — only convert columns Spark actually
-        # surfaced as long (the genuine nanosAsLong case). Integer
-        # division keeps full µs precision (ns values overflow double
-        # mantissa); truncation matches DuckDB TIMESTAMP_NS→µs.
-        if col in long_cols:
-            df = df.withColumn(
-                col, F.expr(f"timestamp_micros(`{col}` div 1000)")
-            )
+    df = nanos_as_micros(spark.read.schema(ntz_free_schema(spark, path)).parquet(path), path)
     if sig is not None:
         per[path] = (sig, df)
     return df
@@ -281,13 +288,17 @@ def scale_out(df: DataFrame, *cols: str) -> DataFrame:
         sigs = tuple(
             _file_sig(f[7:] if f.startswith("file://") else f) for f in files
         )
-        key = (
-            "scanparts",
-            df.semanticHash(),
-            sigs,
-            spark.conf.get("spark.sql.files.maxPartitionBytes"),
-            target,
-        )
+        # a file that cannot be stat'ed (any non-local path: hdfs://,
+        # s3a://) has no signature, so a rewrite of it would go unseen:
+        # probe every time instead of memoizing
+        if None not in sigs:
+            key = (
+                "scanparts",
+                df.semanticHash(),
+                sigs,
+                spark.conf.get("spark.sql.files.maxPartitionBytes"),
+                target,
+            )
     except Exception:
         key = None
     memo = _DF_CACHE.setdefault(spark, {})

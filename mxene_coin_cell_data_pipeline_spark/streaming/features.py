@@ -22,6 +22,7 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from .._serde import register_self
 from ..operators._keys import cycle_keys, is_dis
+from ..operators.capacity import capacity_aggs, coulombic_efficiency
 from .run import _run_foreach_batch
 
 register_self(sys.modules[__name__])
@@ -30,32 +31,20 @@ register_self(sys.modules[__name__])
 def stream_capacity_ce(ts: DataFrame, watermark: str = "1 hour") -> DataFrame:
     """Per-(cell, cycle) capacity + CE, maintained incrementally.
 
-    Identical algebra to the batch operator (capacity.py): end-of-cycle
-    cumulative capacity = ``max_by(col, ts | col not null)``; CE with
-    the null/zero guard (pipeline.py:160-162). Use output mode
+    The batch operator's own expressions (``operators/capacity.py``):
+    end-of-cycle cumulative capacity = ``max_by(col, ts | col not null)``;
+    CE with the null/zero guard (pipeline.py:160-162). Use output mode
     ``update`` — cycle keys are not event-time windows, so rows never
     finalize under append; each micro-batch emits refreshed rows for
     the cycles it touched. The watermark bounds state for late data.
     """
-    keys = cycle_keys(ts)
-
-    def last_non_null(col: str) -> F.Column:
-        return F.max_by(F.col(col), F.when(F.col(col).isNotNull(), F.col("timestamp")))
-
     agg = (
         ts.filter(F.col("cycle_index").isNotNull())
         .withWatermark("timestamp", watermark)
-        .groupBy(*keys)
-        .agg(
-            last_non_null("discharge_ah").alias("Q_dis_Ah"),
-            last_non_null("charge_ah").alias("Q_chg_Ah"),
-        )
+        .groupBy(*cycle_keys(ts))
+        .agg(*(F.expr(a) for a in capacity_aggs()))
     )
-    qchg = F.col("Q_chg_Ah")
-    ce = F.when(qchg.isNull() | (qchg == 0), F.lit(None).cast("double")).otherwise(
-        F.col("Q_dis_Ah") / qchg
-    )
-    return agg.withColumn("CE", ce)
+    return agg.withColumn("CE", F.expr(coulombic_efficiency()))
 
 
 #: applyInPandasWithState state: running trapezoid accumulator

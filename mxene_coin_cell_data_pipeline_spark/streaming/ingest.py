@@ -83,9 +83,7 @@ def read_table_stream(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """
     import os
 
-    import pyarrow.parquet as pq
-
-    from ..sources.tables import ntz_free_schema
+    from ..sources.tables import nanos_as_micros, ntz_free_schema
 
     path = os.path.join(sf_dir, f"{name}.parquet")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -93,12 +91,6 @@ def read_table_stream(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if os.path.isdir(path):
         # dataset laid out as a directory of part files: stream it directly
         df = spark.readStream.schema(schema).parquet(path)
-        first_part = next(
-            os.path.join(path, f)
-            for f in sorted(os.listdir(path))
-            if f.endswith(".parquet")
-        )
-        file_schema = pq.read_schema(first_part)
     else:
         # single-file table: the file-stream source requires a *directory*;
         # select the file out of the scale-factor dir with a glob filter
@@ -107,13 +99,4 @@ def read_table_stream(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             .option("pathGlobFilter", f"{name}.parquet")
             .parquet(sf_dir)
         )
-        file_schema = pq.read_schema(path)
-    # nanosAsLong surfaces TIMESTAMP(NANOS) columns as plain longs — convert
-    # those (and only those: a µs-written file reads as timestamp directly)
-    long_cols = {f.name for f in df.schema.fields if f.dataType.simpleString() == "bigint"}
-    for field in file_schema:
-        if str(field.type).startswith("timestamp[ns") and field.name in long_cols:
-            df = df.withColumn(
-                field.name, F.expr(f"timestamp_micros(`{field.name}` div 1000)")
-            )
-    return df
+    return nanos_as_micros(df, path)

@@ -25,16 +25,14 @@ from mxene_coin_cell_data_pipeline_spark.functions.similarity import (
     signlsh_adaptive_planes,
     signlsh_adaptive_tables,
 )
-from mxene_coin_cell_data_pipeline_spark.plans.q_align import (
-    _signlsh_planes_sql,
-    _signlsh_tables_sql,
-)
-from mxene_coin_cell_data_pipeline_spark.plans.q_api_surface import (
+from mxene_coin_cell_data_pipeline_spark.plans.dedup import _signlsh_tables_sql
+from mxene_coin_cell_data_pipeline_spark.plans.events import (
     _E08_BASE_N,
     _E08_MAX_HALVINGS,
     _e08_cell,
     _e08_cell_sql,
 )
+from mxene_coin_cell_data_pipeline_spark.plans.similarity import _signlsh_planes_sql
 
 
 def _boundary_counts(base: int, factor: int, rungs: int) -> list[int]:
@@ -226,7 +224,7 @@ def test_multiprobe_sql_twin_matches_spark_above_base_rung(spark):
     from mxene_coin_cell_data_pipeline_spark.functions.similarity import (
         signlsh_candidate_pairs,
     )
-    from mxene_coin_cell_data_pipeline_spark.plans.q_align import (
+    from mxene_coin_cell_data_pipeline_spark.plans.dedup import (
         _signlsh_multiprobe_candidates_sql,
     )
 

@@ -89,7 +89,7 @@ def test_d06_list_verify_pair_sql_matches_registered_d02(sf_dir):
 
     from mxene_coin_cell_data_pipeline_spark.plans import (
         QUERIES,
-        q_dedup_pairs as qd,
+        dedup as qd,
     )
 
     con = duckdb.connect()

@@ -1,7 +1,7 @@
 """Bucketed (Hive-layout) co-located join: the shuffle-free big⋈big
 join strategy at 100 TB.
 
-q_extensions1's j-family docstrings claim "both sides shuffle on
+The j-family docstrings (plans/joins.py) claim "both sides shuffle on
 o_orderkey unless pre-bucketed" — this module proves the pre-bucketed
 half of that claim on the engine's own session: writing both fact
 tables with ``bucketBy(N, key)`` + ``sortBy(key)`` and joining the

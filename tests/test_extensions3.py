@@ -1,4 +1,4 @@
-"""Unit tests for the wave-3 extension family (q_extensions3):
+"""Unit tests for the wave-3 extension family:
 BPE pre-tokenization, connected components, linear interpolation,
 Bloom-prefiltered decontamination, ORC roundtrip.
 
@@ -14,7 +14,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from mxene_coin_cell_data_pipeline_spark.plans.queries import QUERIES
-from mxene_coin_cell_data_pipeline_spark.plans.q_extensions3 import (
+from mxene_coin_cell_data_pipeline_spark.plans.text import (
     _BPE_PRETOKEN,
     _WS_TOKEN,
 )

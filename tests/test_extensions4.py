@@ -1,4 +1,4 @@
-"""Unit tests for the wave-4 extension family (q_extensions4): WAV
+"""Unit tests for the wave-4 extension family: WAV
 audio decode, intra-document span dedup, BM25 scoring, histogram
 quantile sketch, matryoshka truncation.
 

@@ -17,7 +17,7 @@ from mxene_coin_cell_data_pipeline_spark.functions.multimodal import (
     parse_ppm,
     resize_ppm_nn,
 )
-from mxene_coin_cell_data_pipeline_spark.plans.q_extensions3 import _BPE_PRETOKEN
+from mxene_coin_cell_data_pipeline_spark.plans.text import _BPE_PRETOKEN
 
 _img = st.tuples(
     st.integers(min_value=1, max_value=9),  # w

@@ -115,3 +115,27 @@ def test_load_table_returns_cached_handle(spark, sf_dir):
     b = load_table(spark, sf_dir, "region")
     assert a is b
     assert a.count() == b.count() > 0
+
+
+def test_scale_out_reprobes_when_a_file_has_no_signature(spark, tmp_path, monkeypatch):
+    """A path ``os.stat`` cannot see (hdfs://, s3a://) has no file
+    signature; memoizing its partition probe under that missing
+    signature would keep the answer across a rewrite of the file, so
+    every call must probe."""
+    import pandas as pd
+    from pyspark import RDD
+
+    from mxene_coin_cell_data_pipeline_spark.sources import tables
+
+    p = str(tmp_path / "t.parquet")
+    pd.DataFrame({"k": range(10)}).to_parquet(p)
+    df = spark.read.parquet(p)
+    probes = []
+    probe = RDD.getNumPartitions
+    monkeypatch.setattr(
+        RDD, "getNumPartitions", lambda self: probes.append(1) or probe(self)
+    )
+    monkeypatch.setattr(tables, "_file_sig", lambda path: None)
+    tables.scale_out(df)
+    tables.scale_out(df)
+    assert len(probes) == 2

@@ -169,7 +169,7 @@ def test_stateful_energy_checkpoint_recovery(spark, sf_dir, tmp_path):
     from mxene_coin_cell_data_pipeline_spark.operators.energy import (
         energy_wh_per_cycle,
     )
-    from mxene_coin_cell_data_pipeline_spark.plans.queries import (
+    from mxene_coin_cell_data_pipeline_spark.plans.flagship import (
         events_as_timeseries,
     )
     from mxene_coin_cell_data_pipeline_spark.streaming import (

@@ -72,11 +72,17 @@ def test_load_table_nanos_in_any_part_file_name(spark, tmp_path, part):
     """Spark reads every non-hidden file of a table directory, with or
     without a ``.parquet`` suffix (Hive writes ``000000_0``). The
     nanosecond sniff must look at the same files, or a TIMESTAMP(NANOS)
-    column loads as raw bigint nanoseconds."""
+    column loads as raw bigint nanoseconds — in the batch and in the
+    streaming read of the table."""
+    import re
+
     import pyarrow as pa
     import pyarrow.parquet as pq
 
     from mxene_coin_cell_data_pipeline_spark.sources.tables import load_table
+    from mxene_coin_cell_data_pipeline_spark.streaming.ingest import (
+        read_table_stream,
+    )
 
     table_dir = tmp_path / "t.parquet"
     table_dir.mkdir()
@@ -89,6 +95,20 @@ def test_load_table_nanos_in_any_part_file_name(spark, tmp_path, part):
     df = load_table(spark, str(tmp_path), "t")
     assert dict(df.dtypes)["ts"] == "timestamp"
     got = [r[0] for r in df.orderBy("id").select(F.unix_micros("ts")).collect()]
+    assert got == [n // 1000 for n in ns]
+
+    stream = read_table_stream(spark, str(tmp_path), "t")
+    assert dict(stream.dtypes)["ts"] == "timestamp"
+    sink = "nanos_stream_" + re.sub(r"\W", "_", part)
+    query = (
+        stream.writeStream.format("memory")
+        .queryName(sink)
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    query.awaitTermination()
+    got = [r[0] for r in spark.table(sink).orderBy("id").select(F.unix_micros("ts")).collect()]
     assert got == [n // 1000 for n in ns]
 
 

@@ -194,7 +194,7 @@ def test_p07_train_encode_corpus_identity(spark, sf_dir):
         bpe_apply_merges,
         bpe_train_rows,
     )
-    from mxene_coin_cell_data_pipeline_spark.plans.q_extensions9 import (
+    from mxene_coin_cell_data_pipeline_spark.plans.pipelines import (
         _p06_curation_stages,
     )
     from mxene_coin_cell_data_pipeline_spark.sources.tables import load_table

@@ -501,7 +501,7 @@ def test_containment_pairs_sound_and_complete_vs_bruteforce(spark):
 def test_schema_evolution_null_fill(spark, sf_dir):
     """The registered src06 relation itself: gen-1 rows carry zero
     non-null event_type after the mergeSchema read, gen-2 all."""
-    from mxene_coin_cell_data_pipeline_spark.plans.q_extensions7 import (
+    from mxene_coin_cell_data_pipeline_spark.plans.sources import (
         src06_schema_evolution,
     )
 
@@ -636,7 +636,7 @@ def test_merge_upsert_hand_case(spark, tmp_path):
     untouched base, matched update, matched delete, unmatched insert."""
     import datetime
 
-    from mxene_coin_cell_data_pipeline_spark.plans.q_extensions7 import (
+    from mxene_coin_cell_data_pipeline_spark.plans.curation import (
         o17_merge_upsert,
     )
     from mxene_coin_cell_data_pipeline_spark.plans._registry import QUERIES

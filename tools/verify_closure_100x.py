@@ -10,7 +10,7 @@ capacity), so the 100x verdict depended on this tool. Round 8
 restated the registered oracles as unrolled pointer-jumping label
 propagation with LINEAR per-round state plus a convergence
 certificate, and the registered output as bounded per-group audit
-aggregates (see plans/q_dedup_pairs.py:_closure_audit_oracle), so the
+aggregates (see plans/dedup.py:_closure_audit_oracle), so the
 sweep verifies d06/d14 directly. This tool remains as a third,
 algorithm-independent opinion:
 
