@@ -420,9 +420,8 @@ def main() -> None:
         json.dump(detail, f, indent=1)
     print(json.dumps({"per_query_detail": detail_file, "queries": times}), file=sys.stderr)
     # The LAST stdout line is parsed from a bounded (~2000-byte) output
-    # tail, so it is kept under 1900 bytes: query entries are 2-decimal
-    # and never dropped; informational fields are dropped first if the
-    # line ever outgrows the budget.
+    # tail, so it carries the totals and the 2-decimal per-query map
+    # only; the informational fields live in the detail file.
     stdout_obj = {
         "metric": "total_headline_query_sec",
         "value": total,
@@ -433,25 +432,9 @@ def main() -> None:
         },
         "value_extended_wave34_sec": total_ext,
         "value_bench_only_xxh_sec": total_xxh,
-        "n_passes": n_passes,
-        "warmup_pass_sec": warmup_pass_sec,
-        "intra_run_spread": round(max(pass_totals) / min(pass_totals), 3),
         "detail": os.path.basename(detail_file),
-        **host,
     }
     line = json.dumps(stdout_obj, separators=(",", ":"))
-    for drop in (
-        "host_wait_s",
-        "host_busy_at_start",
-        "host_loadavg_1m_at_start",
-        "warmup_pass_sec",
-        "n_passes",
-        "intra_run_spread",
-    ):
-        if len(line) <= 1900:
-            break
-        stdout_obj.pop(drop, None)
-        line = json.dumps(stdout_obj, separators=(",", ":"))
     print(line)
     spark.stop()
 

@@ -12,8 +12,11 @@ Design stance (SURVEY.md §7):
 - All per-cycle operators are keyed by ``(cell_id, cycle_index)`` when a
   ``cell_id`` column is present, so single-cell reference semantics
   generalize to partitioned multi-cell data for free.
-- Exactly one ``applyInPandas`` kernel (dQ/dV); every other reference
-  operator compiles to built-in Catalyst expressions and windows.
+- The batch reference operators, dQ/dV included, compile to built-in
+  Catalyst expressions, array functions and windows, with no Python
+  kernel. Python kernels (``mapInPandas``/``applyInPandas``) appear
+  only in extension operators, such as the media codecs, the BLAS
+  near-dup and the streaming energy accumulator.
 """
 
 __version__ = "0.1.0"

@@ -21,7 +21,7 @@ from .dedup import (  # noqa: F401
     near_dup_groups,
     chunk_dedup,
 )
-from .similarity import cosine_topk, ivf_topk, embedding_near_dup_pairs  # noqa: F401
+from .similarity import cosine_topk, ivf_topk  # noqa: F401
 from .multimodal import (  # noqa: F401
     binary_payload_meta,
     decode_images,

@@ -10,8 +10,8 @@
   At 100 TB this turns a full scan into a pruned scan of
   nprobe/nlist of the data; bucketing the table by ``label`` makes the
   probe a partition-pruned read.
-- ``embedding_near_dup_pairs``: blocked pairwise cosine for near-dup
-  detection (block = label bucket), never all-pairs.
+- ``embedding_near_dup_pairs_blas``: blocked pairwise cosine for
+  near-dup detection (block = label bucket), never all-pairs.
 """
 
 from __future__ import annotations
@@ -149,52 +149,6 @@ def ivf_topk(
     )
 
 
-def embedding_near_dup_pairs(
-    embeddings: DataFrame,
-    threshold: float = 0.95,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    block_col: str = "label",
-) -> DataFrame:
-    """Blocked pairwise cosine near-dup pairs (a < b, same block).
-
-    Norms are precomputed per vector BEFORE the pair join (O(n) fold
-    work instead of O(pairs)): per pair only the dot product remains.
-    cosine = dot/(norm_a·norm_b) — the same expression shape as
-    ``cosine()``, so results are bit-identical.
-    """
-    with_norm = embeddings.select(
-        F.col(block_col).alias("_blk"),
-        F.col(id_col),
-        F.col(vec_col),
-        _norm(F.col(vec_col)).alias("_nrm"),
-    )
-    a = with_norm.select(
-        "_blk",
-        F.col(id_col).alias("vec_a"),
-        F.col(vec_col).alias("_va"),
-        F.col("_nrm").alias("_na"),
-    )
-    b = with_norm.select(
-        "_blk",
-        F.col(id_col).alias("vec_b"),
-        F.col(vec_col).alias("_vb"),
-        F.col("_nrm").alias("_nb"),
-    )
-    return (
-        a.join(b, "_blk")
-        .filter(F.col("vec_a") < F.col("vec_b"))
-        .select(
-            "vec_a",
-            "vec_b",
-            (_dot(F.col("_va"), F.col("_vb")) / (F.col("_na") * F.col("_nb"))).alias(
-                "cosine"
-            ),
-        )
-        .filter(F.col("cosine") >= threshold)
-    )
-
-
 def embedding_near_dup_pairs_blas(
     embeddings: DataFrame,
     threshold: float = 0.95,
@@ -204,13 +158,12 @@ def embedding_near_dup_pairs_blas(
 ) -> DataFrame:
     """Blocked pairwise cosine via per-block matrix multiply.
 
-    Same semantics as ``embedding_near_dup_pairs`` (pairs a < b within
-    a block, cosine ≥ threshold), but the O(n²·d) inner work runs as
-    ONE BLAS gemm per block inside an Arrow-batched grouped-map kernel
-    instead of per-pair lambda folds — measured ~5× faster at sf0.1
-    and the gap widens with block size. Cosine differs from the SQL
-    fold only at ulp level (summation order), far inside the oracle
-    tolerance. The gemm runs in STRIPS (~128 MB of scores at a time):
+    Pairs a < b within a block with cosine ≥ threshold. The O(n²·d)
+    inner work runs as ONE BLAS gemm per block inside an Arrow-batched
+    grouped-map kernel instead of per-pair SQL lambda folds (``cosine``)
+    — measured ~5× faster at sf0.1, and the gap widens with block size.
+    Cosine differs from the SQL fold only at ulp level (summation
+    order), far inside the oracle tolerance. The gemm runs in STRIPS (~128 MB of scores at a time):
     a full n×n score matrix plus triu index arrays is O(n²) worker
     memory — at the 100× block size (21.8k vectors) that was ~8 GB per
     group and 32 concurrent groups OOM-killed the workers. Strips
@@ -473,7 +426,7 @@ def signlsh_near_dup_pairs(
 ) -> DataFrame:
     """Embedding near-dup at corpus scale: sign-LSH bucket-join
     candidates (``signlsh_candidate_pairs``) refined by exact cosine ≥
-    threshold. The unblocked companion to ``embedding_near_dup_pairs``
+    threshold. The unblocked companion to ``embedding_near_dup_pairs_blas``
     (which needs a pre-existing blocking key): candidate volume tracks
     bucket occupancy — (1 − θ/π)^n_planes per-table collision
     probability — not corpus², and the refine join fetches vectors for

@@ -27,11 +27,11 @@ def get_spark(app_name: str = "mxene-spark", cpus: int | None = None) -> SparkSe
     """
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    shuffle_parts = int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", str(cpus)))
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle_parts))
+        # one shuffle partition per core; AQE coalesces small ones
+        .config("spark.sql.shuffle.partitions", str(cpus))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -46,12 +46,8 @@ def get_spark(app_name: str = "mxene-spark", cpus: int | None = None) -> SparkSe
         # label joins, p01's feature joins) drop ~30% wall clock —
         # the per-round sort of the large cached side disappears.
         # 128m bounds the per-task hash build well under a 1g-heap
-        # task's execution memory at any cluster size; override via
-        # SPARK_GRAFT_SHJ_THRESHOLD (set 0 to disable).
-        .config(
-            "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-            os.environ.get("SPARK_GRAFT_SHJ_THRESHOLD", "128m"),
-        )
+        # task's execution memory at any cluster size.
+        .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "128m")
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.ansi.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")

@@ -6,7 +6,6 @@ import pytest
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 os.environ.setdefault("SPARK_GRAFT_CPUS", "4")
-os.environ.setdefault("SPARK_GRAFT_SHUFFLE_PARTITIONS", "4")
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR_TEST", "/root/testdata/sf0.001")
 

@@ -162,7 +162,7 @@ def test_cli_run_and_qc(tmp_path):
     raw = tmp_path / "CELL01_raw.csv"
     arbin_frame().to_csv(raw, index=False)
     out = tmp_path / "processed"
-    env = dict(os.environ, SPARK_GRAFT_CPUS="4", SPARK_GRAFT_SHUFFLE_PARTITIONS="4")
+    env = dict(os.environ, SPARK_GRAFT_CPUS="4")
     r = subprocess.run(
         [_sys.executable, "-m", "mxene_coin_cell_data_pipeline_spark", "run",
          "--in", str(raw), "--cell", "CELL01", "--rated_ah", "3.0",

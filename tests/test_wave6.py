@@ -181,6 +181,35 @@ def test_incremental_dedup_bucket_cap_is_subset(spark):
         assert row[1] <= full[b][1]
 
 
+@pytest.mark.parametrize(
+    "kw",
+    [{"bucket_cap": None, "hash_fn": "md5"}, {}, {"bucket_cap": 2}],
+    ids=["md5-uncapped", "defaults", "cap2"],
+)
+def test_incremental_dedup_equals_state_probe(spark, sf_dir, kw):
+    """The one-table path and the persisted-state path share one probe:
+    ``incremental_minhash_dedup`` must return the same rows as
+    ``probe_dedup_state`` of the batch side against
+    ``dedup_corpus_state`` of the corpus side."""
+    from mxene_coin_cell_data_pipeline_spark.functions.dedup import (
+        dedup_corpus_state,
+        incremental_minhash_dedup,
+        probe_dedup_state,
+    )
+    from mxene_coin_cell_data_pipeline_spark.sources.tables import load_table
+
+    docs = load_table(spark, sf_dir, "documents")
+    is_batch = F.col("doc_id") % 5 == 0
+    state = dedup_corpus_state(docs.filter(~is_batch), **kw)
+    probe_kw = {k: v for k, v in kw.items() if k == "hash_fn"}
+    probed = probe_dedup_state(docs.filter(is_batch), *state, **probe_kw)
+    want = sorted(
+        map(tuple, incremental_minhash_dedup(docs, batch_mod=5, **kw).collect())
+    )
+    assert want, "the test data holds near-dups crossing the %5 split"
+    assert sorted(map(tuple, probed.collect())) == want
+
+
 # ---------------------------------------------------------------------------
 # t19: BPE merge counts
 # ---------------------------------------------------------------------------
