@@ -19,10 +19,10 @@ Design for 100 TB:
 from __future__ import annotations
 
 from ..checkpoint import durable_checkpoint
-from ..operators._sql import ident
+from ..operators._sql import double, ident
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
-from .text import tokenize
+from .text import _tokenize_sql, tokenize
 
 DEFAULT_NUM_HASHES = 8
 DEFAULT_BAND_SIZE = 2
@@ -87,19 +87,22 @@ def _token_arrays(
     """
     from ..sources.tables import scale_out
 
-    return scale_out(docs.select("doc_id", text_col), "doc_id").select(
-        "doc_id", F.explode(F.array(tokenize(F.col(text_col)))).alias(name)
+    return scale_out(docs.select("doc_id", text_col), "doc_id").selectExpr(
+        "doc_id", f"explode(array({_tokenize_sql(text_col)})) AS {ident(name)}"
     )
 
 
-def _word_grams(toks: str, k: int) -> Column:
-    """Every k-token window of the token array column ``toks``, in
-    position order, as space-joined strings (empty below k tokens)."""
-    gram = F.transform(
-        F.sequence(F.lit(1), F.size(toks) - (k - 1)),
-        lambda i: F.concat_ws(" ", *[F.element_at(toks, i + j) for j in range(k)]),
+def _word_grams(toks: str, k: int) -> str:
+    """SQL text: every k-token window of the token array column
+    ``toks``, in position order, as space-joined strings (empty below k
+    tokens)."""
+    t = ident(toks)
+    words = ", ".join(f"element_at({t}, i + {j})" for j in range(k))
+    return (
+        f"CASE WHEN size({t}) >= {k}"
+        f" THEN transform(sequence(1, size({t}) - {k - 1}), i -> concat_ws(' ', {words}))"
+        " ELSE CAST(array() AS ARRAY<STRING>) END"
     )
-    return F.when(F.size(toks) >= k, gram).otherwise(F.array().cast("array<string>"))
 
 
 def _gram_key(grams: DataFrame, gram_key: str) -> DataFrame:
@@ -120,10 +123,28 @@ def shingles(docs: DataFrame, text_col: str = "text", n: int = 3) -> DataFrame:
     deduplicated per doc (``array_distinct``) map-side. Measured 2×
     faster than a posexplode + lead-window version at sf0.1.
     """
-    toks = _token_arrays(docs, text_col)
-    return toks.select(
-        "doc_id", F.explode(F.array_distinct(_word_grams("toks", n))).alias("shingle")
+    return _token_arrays(docs, text_col).selectExpr(
+        "doc_id", f"explode(array_distinct({_word_grams('toks', n)})) AS shingle"
     )
+
+
+#: SQL text of each hash family: the MinHash permutation ``i`` of a
+#: shingle, and the bucket of one band's signature columns ``cols``
+_MINHASH_SQL = {
+    "xxhash64": "xxhash64(CAST({i} AS BIGINT), shingle)",
+    "md5": "md5(concat('{i}|', shingle))",
+}
+_BAND_SQL = {
+    "xxhash64": "CAST(xxhash64({cols}) AS STRING)",
+    "md5": "md5(concat_ws('|', {cols}))",
+}
+
+
+def _hash_sql(family: dict[str, str], hash_fn: str) -> str:
+    """``family[hash_fn]``; an unknown ``hash_fn`` raises."""
+    if hash_fn not in family:
+        raise ValueError(f"unknown hash_fn: {hash_fn}")
+    return family[hash_fn]
 
 
 def minhash_signatures(
@@ -148,23 +169,10 @@ def minhash_signatures(
     property (band collision probability, jaccard refine, closure) is
     hash_fn-independent; only the concrete signature values differ.
     """
-    if hash_fn == "xxhash64":
-        aggs = [
-            F.min(F.xxhash64(F.lit(i).cast("long"), F.col("shingle"))).alias(
-                f"mh{i}"
-            )
-            for i in range(num_hashes)
-        ]
-    elif hash_fn == "md5":
-        aggs = [
-            F.min(F.md5(F.concat(F.lit(f"{i}|"), F.col("shingle")))).alias(
-                f"mh{i}"
-            )
-            for i in range(num_hashes)
-        ]
-    else:
-        raise ValueError(f"unknown hash_fn: {hash_fn}")
-    return sh.groupBy("doc_id").agg(*aggs)
+    perm = _hash_sql(_MINHASH_SQL, hash_fn)
+    return sh.groupBy("doc_id").agg(
+        *[F.expr(f"min({perm.format(i=i)}) AS mh{i}") for i in range(num_hashes)]
+    )
 
 
 def band_buckets(
@@ -176,7 +184,7 @@ def band_buckets(
     """(doc_id, band, bucket) rows — one per LSH band per doc, the
     probe/build key space every LSH consumer joins on.
 
-    One explode of a per-row literal-struct array, so the plan is one
+    One ``inline`` of a per-row literal-struct array, so the plan is one
     Generate node with no shuffle. ``lsh_candidate_pairs`` self-joins
     it; the incremental paths probe corpus-side buckets with batch-side
     ones instead.
@@ -187,30 +195,17 @@ def band_buckets(
     the engine-portable oracle form. Use the same ``hash_fn`` as the
     signatures were built with.
     """
-    n_bands = num_hashes // band_size
-
-    def band_bucket(b: int) -> Column:
-        cols = [F.col(f"mh{b * band_size + r}") for r in range(band_size)]
-        if hash_fn == "xxhash64":
-            return F.xxhash64(*cols).cast("string")
-        if hash_fn == "md5":
-            return F.md5(F.concat_ws("|", *cols))
-        raise ValueError(f"unknown hash_fn: {hash_fn}")
-
-    return sig.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        band_bucket(b).alias("bucket"),
-                    )
-                    for b in range(n_bands)
-                ]
-            )
-        ).alias("bb"),
-    ).select("doc_id", "bb.band", "bb.bucket")
+    bucket = _hash_sql(_BAND_SQL, hash_fn)
+    bands = ", ".join(
+        "struct({b} AS band, {h} AS bucket)".format(
+            b=b,
+            h=bucket.format(
+                cols=", ".join(f"mh{b * band_size + r}" for r in range(band_size))
+            ),
+        )
+        for b in range(num_hashes // band_size)
+    )
+    return sig.selectExpr("doc_id", f"inline(array({bands}))")
 
 
 def lsh_candidate_pairs(
@@ -258,18 +253,15 @@ def lsh_candidate_pairs(
         # — a long-lived session running many queries should clear the
         # cache between them (bench.py does after every execution).
         bands = bands.persist()
-        a = bands.alias("a")
-        b = bands.alias("b")
         return (
-            a.join(
-                b,
-                (F.col("a.band") == F.col("b.band"))
-                & (F.col("a.bucket") == F.col("b.bucket"))
-                & (F.col("a.doc_id") < F.col("b.doc_id")),
+            bands.alias("a")
+            .join(
+                bands.alias("b"),
+                F.expr(
+                    "a.band = b.band AND a.bucket = b.bucket AND a.doc_id < b.doc_id"
+                ),
             )
-            .select(
-                F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-            )
+            .selectExpr("a.doc_id AS doc_a", "b.doc_id AS doc_b")
             .distinct()
         )
     return _capped_bucket_pairs(bands, ["band", "bucket"], bucket_cap)
@@ -300,27 +292,24 @@ def _capped_bucket_pairs(
     not a streamier pair emitter.
     """
     g = bands.groupBy(*bucket_keys).agg(
-        F.array_sort(F.collect_list("doc_id")).alias("_ds")
+        F.expr("array_sort(collect_list(doc_id)) AS _ds")
     )
     # all ordered pairs (x at 0-based i, every later y) of the sorted
     # member array — doc_a < doc_b by construction, exactly the old
     # self-join's emission; slice() truncates at the array end
-    all_pairs = F.expr(
+    all_pairs = (
         "flatten(transform(_ds, (x, i) ->"
         " transform(slice(_ds, i + 2, size(_ds)),"
         "           y -> struct(x AS doc_a, y AS doc_b))))"
     )
     # star edges: min member (element 0) → every other member
-    star = F.expr(
+    star = (
         "transform(slice(_ds, 2, size(_ds) - 1),"
         " y -> struct(_ds[0] AS doc_a, y AS doc_b))"
     )
-    pairs = F.when(F.size("_ds") <= bucket_cap, all_pairs).otherwise(star)
-    return (
-        g.select(F.explode(pairs).alias("_p"))
-        .select("_p.doc_a", "_p.doc_b")
-        .distinct()
-    )
+    return g.selectExpr(
+        f"inline(CASE WHEN size(_ds) <= {int(bucket_cap)} THEN {all_pairs} ELSE {star} END)"
+    ).distinct()
 
 
 def _thin_buckets(buckets: DataFrame, bucket_cap: int | None) -> DataFrame:
@@ -337,18 +326,14 @@ def _thin_buckets(buckets: DataFrame, bucket_cap: int | None) -> DataFrame:
         return buckets
     return (
         buckets.groupBy("band", "bucket")
-        .agg(
-            F.slice(
-                F.array_sort(F.collect_list("doc_id")), 1, bucket_cap
-            ).alias("_ks")
-        )
-        .select("band", "bucket", F.explode("_ks").alias("doc_id"))
+        .agg(F.expr(f"slice(array_sort(collect_list(doc_id)), 1, {int(bucket_cap)}) AS _ks"))
+        .selectExpr("band", "bucket", "explode(_ks) AS doc_id")
     )
 
 
 def _doc_sets(sh: DataFrame) -> DataFrame:
     """``(doc_id, _set)``: each doc's shingle set as one array."""
-    return sh.groupBy("doc_id").agg(F.collect_set("shingle").alias("_set"))
+    return sh.groupBy("doc_id").agg(F.expr("collect_set(shingle) AS _set"))
 
 
 def _with_sets(
@@ -360,8 +345,8 @@ def _with_sets(
     """``pairs`` with doc_a's set from ``sets_a`` as ``_sa`` and
     doc_b's from ``sets_b`` as ``_sb`` (``_doc_sets`` frames): two
     joins touching candidate rows only, broadcast on request."""
-    a = sets_a.select(F.col("doc_id").alias("doc_a"), F.col("_set").alias("_sa"))
-    b = sets_b.select(F.col("doc_id").alias("doc_b"), F.col("_set").alias("_sb"))
+    a = sets_a.selectExpr("doc_id AS doc_a", "_set AS _sa")
+    b = sets_b.selectExpr("doc_id AS doc_b", "_set AS _sb")
     if broadcast:
         a, b = F.broadcast(a), F.broadcast(b)
     return pairs.join(a, "doc_a").join(b, "doc_b")
@@ -371,12 +356,11 @@ def _set_jaccard(
     pairs: DataFrame, sets_a: DataFrame, sets_b: DataFrame
 ) -> DataFrame:
     """``(doc_a, doc_b, jaccard)``: exact set jaccard of each pair."""
-    n_inter = F.size(F.array_intersect(F.col("_sa"), F.col("_sb")))
-    n_a, n_b = F.size(F.col("_sa")), F.size(F.col("_sb"))
-    return _with_sets(pairs, sets_a, sets_b).select(
+    n_inter = "size(array_intersect(_sa, _sb))"
+    return _with_sets(pairs, sets_a, sets_b).selectExpr(
         "doc_a",
         "doc_b",
-        (n_inter.cast("double") / (n_a + n_b - n_inter)).alias("jaccard"),
+        f"CAST({n_inter} AS DOUBLE) / (size(_sa) + size(_sb) - {n_inter}) AS jaccard",
     )
 
 
@@ -454,7 +438,7 @@ def minhash_near_dup_pairs(
     sh = shingles(docs, text_col, n)
     sig = minhash_signatures(sh, num_hashes, hash_fn)
     cand = lsh_candidate_pairs(sig, num_hashes, band_size, bucket_cap, hash_fn)
-    return pair_jaccard(sh, cand).filter(F.col("jaccard") >= threshold)
+    return pair_jaccard(sh, cand).filter(f"jaccard >= {double(threshold)}")
 
 
 def ngram_jaccard_pairs(
@@ -643,76 +627,62 @@ def near_dup_groups(pairs: DataFrame, max_iter: int = 25) -> DataFrame:
 
     Turning pairwise matches into keep/drop decisions needs the
     transitive closure (A~B, B~C ⇒ one group). Distributed hash-min
-    label propagation: every doc starts labeled with its own id; each
-    round a doc takes the min label among itself and its neighbors;
-    fixpoint after O(component diameter) rounds. group_id = the
-    component's minimum doc_id (the canonical "keeper" under keep-first
-    policy).
+    label propagation: every doc starts labeled with its own id, and
+    each round a doc takes the min label over itself and its neighbors
+    (its closed neighborhood); fixpoint after O(component diameter)
+    rounds. group_id = the component's minimum doc_id (the canonical
+    "keeper" under keep-first policy). ``max_iter`` bounds the rounds
+    of a pathological chain; ``max_iter ≤ 0`` returns the identity
+    labels.
 
-    Scale: each round is one join + one aggregation, both keyed by
-    doc_id; ``localCheckpoint`` truncates the growing lineage so round
-    N's plan does not replay rounds 1..N-1 (the standard iterative-
-    algorithm pattern on Spark). Near-dup graphs are sparse and
-    shallow — diameter is small in practice; ``max_iter`` bounds
-    pathological chains.
+    Plan: one ``inline`` emits both directions of every pair and both
+    endpoints' self-loops, so the min over a row's edges IS the min
+    over its closed neighborhood. The edge list is checkpointed
+    partitioned by ``dst``, the join key of every round. Round 1 needs
+    no join: with identity labels its result is ``min(src)`` per
+    ``dst``, one aggregate over the stored partitions. Each later round
+    is one join, edges ⋈ labels on ``dst``, and one ``groupBy(src)``
+    whose ``min`` is the new label and whose ``min`` over the self-loop
+    row alone is the old one; the changed-count rides the update, so a
+    round is one lazy checkpoint and one 1-row ``sum`` collect. Near-dup
+    groups are mostly stars around their smallest doc, which round 1
+    labels at once: such a graph costs two checkpoints.
 
-    Optimization r11 (identical labels): each round is ONE Spark
-    action instead of two — the changed-count rides the label update
-    as an inline flag (the old/new compare needs no self-join: both
-    values are present in the update's own select), and the 1-row
-    ``sum(_chg)`` collect is what materializes the round's
-    checkpoint. Measured: the closure phase of d06/d14/d21 drops
-    half its per-round job count.
+    A NULL endpoint links to nothing: its row keeps a NULL group and
+    its partner keeps its other links.
     """
-    fwd = pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
     edges = (
-        fwd.union(fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        # Checkpoint the edges partitioned by the PER-ROUND JOIN KEY
-        # (optimization r12, the g02/g04 move): hashpartitioning(dst)
-        # satisfies the (src, dst) dedup's clustered distribution, so
-        # the distinct runs with no further exchange, and every round's
-        # edges⋈labels join on dst reads the checkpointed partitions
-        # directly instead of re-exchanging the edge list each round.
+        pairs.selectExpr(
+            "inline(array(struct(doc_a AS src, doc_b AS dst),"
+            " struct(doc_b AS src, doc_a AS dst),"
+            " struct(doc_a AS src, doc_a AS dst),"
+            " struct(doc_b AS src, doc_b AS dst)))"
+        )
+        # a pair with one NULL end links nothing; both ends keep a row
+        .filter("(src IS NULL) = (dst IS NULL)")
         .repartition("dst")
         .dropDuplicates(["src", "dst"])
         .transform(durable_checkpoint)
     )
-    labels = (
-        edges.select(F.col("src").alias("doc_id"))
-        .distinct()
-        .withColumn("group_id", F.col("doc_id"))
-        .transform(durable_checkpoint)
+    # round 1 (max_iter ≤ 0: the identity labels)
+    seed = "min(src)" if max_iter > 0 else "dst"
+    labels = edges.groupBy("dst").agg(F.expr(f"{seed} AS group_id")).withColumnRenamed(
+        "dst", "doc_id"
     )
-    for _ in range(max_iter):
-        nbr_min = (
-            edges.join(
-                labels.select(
-                    F.col("doc_id").alias("dst"), F.col("group_id").alias("_nl")
-                ),
-                "dst",
-            )
-            .groupBy("src")
-            .agg(F.min("_nl").alias("_ml"))
-            .select(F.col("src").alias("doc_id"), "_ml")
-        )
-        new_lbl = F.least(
-            F.col("group_id"), F.coalesce(F.col("_ml"), F.col("group_id"))
-        )
+    for _ in range(max_iter - 1):
         stepped = (
-            labels.join(nbr_min, "doc_id", "left")
-            .select(
-                "doc_id",
-                # _chg BEFORE the group_id alias: lateral column alias
-                # resolution would otherwise bind the comparison's
-                # group_id to the just-updated value (always false)
-                (new_lbl != F.col("group_id")).cast("int").alias("_chg"),
-                new_lbl.alias("group_id"),
+            # left: the NULL doc's self-loop matches no label but keeps
+            # its row
+            edges.join(labels.selectExpr("doc_id AS dst", "group_id AS _nl"), "dst", "left")
+            .groupBy("src")
+            .agg(
+                F.expr("min(_nl) AS group_id"),
+                F.expr("CAST(min(_nl) <> min(_nl) FILTER (WHERE src = dst) AS INT) AS _chg"),
             )
+            .withColumnRenamed("src", "doc_id")
             .transform(lambda d: durable_checkpoint(d, eager=False))
         )
-        changed = int(
-            stepped.agg(F.sum("_chg")).collect()[0][0] or 0
-        )
+        changed = stepped.selectExpr("sum(_chg)").collect()[0][0] or 0
         labels = stepped.select("doc_id", "group_id")
         if changed == 0:
             break
@@ -1059,8 +1029,8 @@ def window_dup_rate(
     grams colliding merge their doc sets), the same trade the MinHash
     family documents.
     """
-    g = _token_arrays(docs, text_col).select(
-        "doc_id", F.explode(_word_grams("toks", k)).alias("gram")
+    g = _token_arrays(docs, text_col).selectExpr(
+        "doc_id", f"explode({_word_grams('toks', k)}) AS gram"
     )
     per_doc_gram = _gram_key(g, gram_key).groupBy("doc_id", "gram").agg(
         F.count(F.lit(1)).alias("n_pos")
@@ -1436,8 +1406,8 @@ def crossdoc_kept_tokens(
     toks = _token_arrays(docs, text_col, "w").filter(F.size("w") > 0)
 
     # (1) gram starts, row-locally assembled; corpus-min owner per gram
-    occ = toks.select(
-        "doc_id", F.posexplode(_word_grams("w", k)).alias("p0", "gram")
+    occ = toks.selectExpr(
+        "doc_id", f"posexplode({_word_grams('w', k)}) AS (p0, gram)"
     ).select("doc_id", (F.col("p0") + 1).alias("p"), "gram")
     gw = Window.partitionBy("gram")
     flagged = (

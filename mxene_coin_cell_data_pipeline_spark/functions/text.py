@@ -14,6 +14,7 @@ import sys
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from .._serde import register_self
+from ..operators._sql import ident, string
 
 # t23's BPE kernel closes over module functions — workers must be able
 # to re-import this module off-cwd (the SKILL.md serde gotcha)
@@ -33,6 +34,11 @@ LANG_MARKERS: dict[str, list[str]] = {
 def tokenize(col: Column) -> Column:
     """Lowercased word tokens (array<string>)."""
     return F.regexp_extract_all(F.lower(col), F.lit(TOKEN_RE), 0)
+
+
+def _tokenize_sql(name: str) -> str:
+    """``tokenize`` of the column ``name``, as SQL text."""
+    return f"regexp_extract_all(lower({ident(name)}), {string(TOKEN_RE)}, 0)"
 
 
 def token_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:

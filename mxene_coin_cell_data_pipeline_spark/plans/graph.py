@@ -210,15 +210,9 @@ def g02_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
         li.join(orders, F.col("o_orderkey") == F.col("l_orderkey"))
         .select(F.col("o_custkey").alias("src"), F.col("l_suppkey").alias("dst"))
     )
-    # Self-loops fold the "least(own, neighbor-min)" update into ONE
-    # join+aggregate per round: min over (neighbors ∪ self) ≡
-    # least(l_t(v), min over neighbors) — halves the per-round join
-    # count vs the textbook two-step (measured 8.0s → ~5s at sf0.1).
-    # Both directions AND both endpoints' self-loops emit from ONE
-    # pass via explode (optimization r11: the union form re-ran the
-    # lineitem⋈orders subtree once per branch — every vertex appears
-    # as src or dst of raw, so (s,s) ∪ (d,d) over raw rows is exactly
-    # the per-vertex self-loop set), still one distinct exchange.
+    # Both directions and both endpoints' self-loops in one explode, so
+    # a round's min over a vertex's edges is the min over its closed
+    # neighborhood (SCALING.md, "Hash-min closure: the plan history").
     g = (
         raw.select(
             F.explode(
@@ -250,10 +244,10 @@ def g02_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
         .dropDuplicates(["src", "dst"])
         .persist()
     )
-    labels = g.select(F.col("src").alias("v")).distinct().withColumn(
-        "lbl", F.col("v")
-    )
-    for _ in range(3):
+    # round 1 over identity labels: g is symmetric and already hashed
+    # by src, so it is one aggregate with no join and no exchange
+    labels = g.groupBy(F.col("src").alias("v")).agg(F.min("dst").alias("lbl"))
+    for _ in range(2):
         labels = (
             g.join(labels, g["src"] == labels["v"])
             .groupBy(F.col("dst").alias("v"))

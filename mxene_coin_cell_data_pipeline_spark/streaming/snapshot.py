@@ -127,8 +127,12 @@ def _merge_batch(
         last = _last_applied(snapshot_dir, ckpt_id)
         if last is not None and batch_id <= last:
             return
+    # the stored schema is the combine's own output schema, so reading
+    # with it skips the parquet schema-inference job
     current = (
-        batch_df.sparkSession.read.parquet(snapshot_dir)
+        batch_df.sparkSession.read.schema(combine(None, batch_df).schema).parquet(
+            snapshot_dir
+        )
         if os.path.exists(snapshot_dir)
         else None
     )
@@ -178,26 +182,21 @@ def merge_additive_totals(
     key: str,
     agg_cols: dict[str, str],
 ) -> DataFrame:
-    """The batch's PARTIAL (row count ``n`` and ``sum_<col>`` per key)
-    added into the stored totals. Decimal partials are exact and
-    associative, so the totals are identical for ANY micro-batch split
-    of the feed (a double sum would drift with accumulation order)."""
-    part = batch.groupBy(key).agg(
-        F.count(F.lit(1)).alias("n"),
-        *[
-            F.sum(F.round(F.col(c), 6).cast("decimal(38,6)")).alias(f"sum_{c}")
-            for c in agg_cols
-        ],
+    """The batch's rows (``n`` = 1 and ``sum_<col>`` = the value) added
+    into the stored totals (row count ``n`` and ``sum_<col>`` per key)
+    by one aggregate over both. Decimal sums are exact and associative,
+    so the totals are identical for ANY micro-batch split of the feed
+    (a double sum would drift with accumulation order)."""
+    rows = batch.select(
+        F.col(key),
+        F.lit(1).cast("long").alias("n"),
+        *[F.round(F.col(c), 6).cast("decimal(38,6)").alias(f"sum_{c}") for c in agg_cols],
     )
-    if current is None:
-        return part
-    return (
-        current.unionByName(part)
-        .groupBy(key)
-        .agg(
-            F.sum("n").alias("n"),
-            *[F.sum(f"sum_{c}").alias(f"sum_{c}") for c in agg_cols],
-        )
+    if current is not None:
+        rows = current.unionByName(rows)
+    return rows.groupBy(key).agg(
+        F.sum("n").alias("n"),
+        *[F.sum(f"sum_{c}").alias(f"sum_{c}") for c in agg_cols],
     )
 
 
@@ -208,25 +207,19 @@ def merge_bin_counts(
     value_col: str,
     bin_width: float,
 ) -> DataFrame:
-    """The batch's per-(key, ``bin = floor(value / bin_width)``) counts
-    ``c`` added into the stored histogram. All-integer state, so the
-    merged histogram is bit-identical to the one-pass batch histogram
-    for ANY micro-batch split."""
-    part = (
-        batch.select(
-            F.col(key),
-            F.floor(F.col(value_col) / F.lit(bin_width)).cast("long").alias("bin"),
-        )
-        .groupBy(key, "bin")
-        .agg(F.count(F.lit(1)).alias("c"))
+    """The batch's rows, each one count ``c`` = 1 in (key, ``bin =
+    floor(value / bin_width)``), added into the stored histogram by one
+    aggregate over both. All-integer state, so the merged histogram is
+    bit-identical to the one-pass batch histogram for ANY micro-batch
+    split."""
+    rows = batch.select(
+        F.col(key),
+        F.floor(F.col(value_col) / F.lit(bin_width)).cast("long").alias("bin"),
+        F.lit(1).cast("long").alias("c"),
     )
-    if current is None:
-        return part
-    return (
-        current.unionByName(part)
-        .groupBy(key, "bin")
-        .agg(F.sum("c").alias("c"))
-    )
+    if current is not None:
+        rows = current.unionByName(rows)
+    return rows.groupBy(key, "bin").agg(F.sum("c").alias("c"))
 
 
 def run_stream_latest_snapshot(

@@ -1,9 +1,11 @@
-"""Driver-call budgets for building the cell chain's plans.
+"""Driver-call budgets for building the cell chain's and the near-dup
+pair chain's plans.
 
-Normalize and the per-cycle feature plan are written as SQL text the
-JVM parses once, so building them costs a few dozen py4j calls however
-many formulas they hold. Column trees cost one py4j call per node: the
-feature plan took 1,741 calls that way and normalize 439–556.
+Normalize, the per-cycle feature plan and the near-dup pair chain are
+written as SQL text the JVM parses once, so building them costs a few
+dozen py4j calls however many formulas they hold. Column trees cost one
+py4j call per node: the feature plan took 1,741 calls that way and
+normalize 439–556.
 
 Each test counts py4j *call* commands (the ``c\\n`` prefix; garbage
 collection detaches are left out) while one plan is built, and holds it
@@ -12,7 +14,10 @@ to the count measured when the text form landed plus 25%:
 - ``per_cycle_features`` (all families) on the two-cell fixture: 62
   calls, budget 77;
 - ``normalize_cycler(..., cell_id=...)`` on the Arbin, Neware and
-  headless fixture CSVs: 52 calls each, budget 65.
+  headless fixture CSVs: 52 calls each, budget 65;
+- ``minhash_near_dup_pairs`` (the near-dup pair chain: shingles,
+  signatures, band buckets, capped candidate pairs, jaccard verify) on
+  the test documents: 83–87 calls, budget 109 (710 as Column trees).
 
 A new formula written as text costs nothing here; one written as a
 Column tree shows up at once.
@@ -25,13 +30,16 @@ from contextlib import contextmanager
 import pytest
 
 from fixtures import RATED_AH, arbin_frame, headless_frame, neware_frame
+from mxene_coin_cell_data_pipeline_spark.functions.dedup import minhash_near_dup_pairs
 from mxene_coin_cell_data_pipeline_spark.operators import normalize_cycler
 from mxene_coin_cell_data_pipeline_spark.operators.features import per_cycle_features
 from mxene_coin_cell_data_pipeline_spark.sources import read_cycler_csv
+from mxene_coin_cell_data_pipeline_spark.sources.tables import load_table
 from test_plan_shapes import _two_cell_timeseries
 
 FEATURES_BUDGET = 77
 NORMALIZE_BUDGET = 65
+PAIRS_BUDGET = 109
 
 
 @contextmanager
@@ -70,3 +78,11 @@ def test_normalize_build_budget(spark, tmp_path, frame):
     with _py4j_calls(spark) as calls:
         normalize_cycler(raw, cell_id="CELL01")
     assert calls[0] <= NORMALIZE_BUDGET, calls[0]
+
+
+def test_near_dup_pair_chain_build_budget(spark, sf_dir):
+    docs = load_table(spark, sf_dir, "documents")
+    minhash_near_dup_pairs(docs)
+    with _py4j_calls(spark) as calls:
+        minhash_near_dup_pairs(docs)
+    assert calls[0] <= PAIRS_BUDGET, calls[0]
