@@ -342,9 +342,15 @@ def measure(spark, fns: dict, sf_dir: str, passes: int, warmups: int):
     region.repartition(int(spark.conf.get("spark.sql.shuffle.partitions"))).mapInPandas(
         lambda it: it, schema=region.schema
     ).count()
-    # ... and whole-stage codegen: janino caches generated classes by
-    # source, so one pass at the smallest SF compiles the code the
-    # measured passes reuse.
+    # ... and whole-stage codegen: Spark caches generated classes by
+    # source, so one pass at the smallest SF compiles each plan's code
+    # before its first timed run. The measured passes do not reuse it:
+    # one pass over the 112 bench entries generates some 1,500 classes,
+    # more than the session's codegen cache holds (1000, session.py),
+    # so the LRU evicts every class before the next pass comes back to
+    # it. Counted at sf0.01: 1,341-1,376 compilations in each timed
+    # pass. A subset that fits the cache (tools/time_queries.py --only
+    # with five queries: 132 classes) compiled 0-4 in each timed pass.
     warmup_failures: list[str] = []
     if os.path.isdir(WARM_SF):
         untimed(WARM_SF, warmup_failures)

@@ -132,7 +132,20 @@ def full_feature_pipeline(
     freed when the frame is garbage-collected. A cell is still one task
     (module docstring). ``cache`` is accepted and ignored: the table is already
     materialized, and ``persist`` would only pin blocks nothing frees.
+
+    A checkpoint reports ``UnknownPartitioning``, so every consumer
+    plans a shuffle: an ``orderBy`` its range sample and exchange, an
+    aggregate by cell its hash exchange. A one-partition table (a single
+    cell, or a small one) is returned through ``coalesce(1)``, which
+    moves no rows and reports ``SinglePartition``. The count is the
+    checkpoint RDD's own, read without a Spark job; a plan that is not a
+    checkpoint (``tools/lazy_plan_dump.py`` turns checkpoints into the
+    identity) is returned as it is.
     """
-    return durable_checkpoint(
+    feat = durable_checkpoint(
         per_cycle_features(ts, rated_ah, dv).orderBy(*cycle_keys(ts))
     )
+    plan = feat._jdf.queryExecution().analyzed()
+    if plan.nodeName() == "LogicalRDD" and plan.rdd().getNumPartitions() == 1:
+        return feat.coalesce(1)
+    return feat

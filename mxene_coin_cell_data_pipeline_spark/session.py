@@ -48,6 +48,15 @@ def get_spark(app_name: str = "mxene-spark", cpus: int | None = None) -> SparkSe
         # 128m bounds the per-task hash build well under a 1g-heap
         # task's execution memory at any cluster size.
         .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "128m")
+        # Generated classes are cached by source text in an LRU of 100
+        # by default. One pass of the cell chain generates some 105-110
+        # distinct classes and one of the dedup families + snapshot
+        # runners some 140 (perfbench, 4 cores), so at 100 the cache
+        # thrashed: each warm pass recompiled 55-76 (cell) and 131-136
+        # (dedup) classes through Janino, on the driver and in the first
+        # task of each stage. At 1000 a warm pass compiles 0-8 (SCALING.md,
+        # "Codegen class cache"). A static conf: it is read once per JVM.
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.ansi.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")

@@ -571,24 +571,18 @@ def test_feature_pipeline_is_one_cell_exchange(spark, tmp_path):
     assert "partial_max_by" in plan, plan
 
 
-def test_feature_table_is_read_once(spark, tmp_path):
-    """``full_feature_pipeline`` materializes the table when it is
-    built, so the summary, report and QC plans read the stored cycles:
-    no raw-row parquet scan, no feature window and no exchange of raw
-    rows by cell. The fade fit's own aggregate by cell is the one cell
-    exchange left, over the cycle rows."""
-    from fixtures import RATED_AH
-    from mxene_coin_cell_data_pipeline_spark.operators import (
-        fade_and_rul,
-        full_feature_pipeline,
-    )
+def _assert_reads_stored_cycles(feat, one_partition: bool) -> None:
+    """The summary, report and QC plans of ``feat`` read the stored
+    cycles: no raw-row parquet scan, no feature window and no exchange
+    of raw rows by cell. Over a multi-partition table the fade fit's own
+    aggregate by cell is the one cell exchange, over the cycle rows;
+    over a one-partition table no plan has an exchange at all."""
+    from mxene_coin_cell_data_pipeline_spark.operators import fade_and_rul
     from mxene_coin_cell_data_pipeline_spark.operators.qc import qc_aggregate
     from mxene_coin_cell_data_pipeline_spark.operators.report import report_table
 
-    path = _two_cell_timeseries(spark, tmp_path)
-    feat = full_feature_pipeline(spark.read.parquet(path), rated_ah=RATED_AH)
     for name, df, cell_exchanges in (
-        ("fade", fade_and_rul(feat), 1),
+        ("fade", fade_and_rul(feat), 0 if one_partition else 1),
         ("report", report_table(feat), 0),
         ("qc", qc_aggregate(feat), 0),
     ):
@@ -598,6 +592,68 @@ def test_feature_table_is_read_once(spark, tmp_path):
         assert "Scan ExistingRDD" in plan, (name, plan)
         found = re.findall(r"Exchange hashpartitioning\(cell_id", plan)
         assert len(found) == cell_exchanges, (name, plan)
+        if one_partition:
+            assert "Exchange" not in plan, (name, plan)
+
+
+def test_feature_table_is_read_once(spark, tmp_path):
+    """``full_feature_pipeline`` materializes the table when it is
+    built, so the summary, report and QC plans read the stored cycles.
+    The two-cell table is one partition and reports it, so no consumer
+    shuffles at all: not the fade fit's aggregate by cell, not QC's
+    global aggregate, not an ``orderBy`` over the table."""
+    from fixtures import RATED_AH
+    from mxene_coin_cell_data_pipeline_spark.operators import full_feature_pipeline
+
+    path = _two_cell_timeseries(spark, tmp_path)
+    feat = full_feature_pipeline(spark.read.parquet(path), rated_ah=RATED_AH)
+    assert feat.rdd.getNumPartitions() == 1
+    _assert_reads_stored_cycles(feat, one_partition=True)
+    plan = feat.orderBy("cycle_index")._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in plan, plan
+
+
+def test_multi_partition_feature_table_keeps_its_cell_exchange(spark, tmp_path):
+    """A table stored in more than one partition keeps the plan of an
+    unknown partitioning: the fade fit's aggregate by cell is one cell
+    exchange over the cycle rows."""
+    from fixtures import RATED_AH
+    from mxene_coin_cell_data_pipeline_spark.operators import full_feature_pipeline
+
+    path = _two_cell_timeseries(spark, tmp_path)
+    key = "spark.sql.adaptive.coalescePartitions.enabled"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "false")  # the range exchange keeps its partitions
+    try:
+        feat = full_feature_pipeline(spark.read.parquet(path), rated_ah=RATED_AH)
+    finally:
+        spark.conf.set(key, before)
+    assert feat.rdd.getNumPartitions() > 1
+    _assert_reads_stored_cycles(feat, one_partition=False)
+
+
+def test_empty_feature_table_consumers(spark, tmp_path):
+    """An empty timeseries gives an empty summary and report, and a QC
+    aggregate of zero rows with no messages."""
+    from fixtures import RATED_AH
+    from pyspark.sql import functions as F
+
+    from mxene_coin_cell_data_pipeline_spark.operators import (
+        fade_and_rul,
+        full_feature_pipeline,
+        qc_checks,
+    )
+    from mxene_coin_cell_data_pipeline_spark.operators.qc import qc_aggregate
+    from mxene_coin_cell_data_pipeline_spark.operators.report import report_table
+
+    ts = spark.read.parquet(_two_cell_timeseries(spark, tmp_path)).filter(F.lit(False))
+    feat = full_feature_pipeline(ts, rated_ah=RATED_AH)
+    assert fade_and_rul(feat).collect() == []
+    assert report_table(feat).collect() == []
+    (qc,) = qc_aggregate(feat).collect()
+    assert qc["n_rows"] == 0 and qc["n_cycles"] == 0
+    assert [k for k, v in qc.asDict().items() if v is not None] == ["n_rows", "n_cycles"]
+    assert qc_checks(feat).messages == []
 
 
 def test_batch_normalize_is_one_cell_exchange(spark, tmp_path):

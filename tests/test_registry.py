@@ -8,7 +8,10 @@ from __future__ import annotations
 
 import hashlib
 import json
+import os
 import re
+import subprocess
+import sys
 
 from mxene_coin_cell_data_pipeline_spark.plans._registry import ORDER, QUERIES
 from mxene_coin_cell_data_pipeline_spark.plans.queries import oracle_sqls, query_fns
@@ -60,3 +63,23 @@ def test_each_query_lives_in_its_family_module():
         if got != want:
             misplaced[name] = got
     assert misplaced == {}
+
+
+def test_one_family_imports_without_the_registry():
+    """Importing one family module registers that family only; the
+    package's ``QUERIES`` still loads every family on first use."""
+    pkg = "mxene_coin_cell_data_pipeline_spark.plans"
+    code = (
+        f"import {pkg}.casts\n"
+        f"from {pkg}._registry import QUERIES\n"
+        "print(sorted(QUERIES))\n"
+        f"from {pkg} import QUERIES as ALL\n"
+        "print(len(ALL), ALL is QUERIES)\n"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", code], capture_output=True, text=True, check=True,
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    ).stdout.split("\n")
+    casts = sorted(n for n, spec in QUERIES.items() if spec.spark.__module__.endswith(".casts"))
+    assert out[0] == str(casts)
+    assert out[1] == f"{len(ORDER)} True"
