@@ -24,7 +24,7 @@ cycle keys, or, with no window at all (capacity or dQ/dV alone),
 partially aggregated before the shuffle; only the per-cycle rows move
 again for step 4.
 
-``full_feature_pipeline`` materializes the ordered table through
+``full_feature_pipeline`` materializes the table through
 ``checkpoint.durable_checkpoint``: the plan above runs as Spark jobs
 inside the call, and every later read (the CSV, the fade summary, the
 report, QC) scans the stored cycles instead of re-running the raw-row
@@ -133,19 +133,26 @@ def full_feature_pipeline(
     (module docstring). ``cache`` is accepted and ignored: the table is already
     materialized, and ``persist`` would only pin blocks nothing frees.
 
-    A checkpoint reports ``UnknownPartitioning``, so every consumer
-    plans a shuffle: an ``orderBy`` its range sample and exchange, an
-    aggregate by cell its hash exchange. A one-partition table (a single
-    cell, or a small one) is returned through ``coalesce(1)``, which
-    moves no rows and reports ``SinglePartition``. The count is the
-    checkpoint RDD's own, read without a Spark job; a plan that is not a
-    checkpoint (``tools/lazy_plan_dump.py`` turns checkpoints into the
-    identity) is returned as it is.
+    The checkpoint stores the rows sorted within the partitions of the
+    per-cell window, whose sort by the cycle keys they already carry:
+    two Spark jobs and no range sort (a global ``orderBy`` here cost a
+    sampling job and a range exchange as well). A checkpoint reports
+    ``UnknownPartitioning``. A one-partition table (a single cell, or a
+    small one) holds its rows in order and is returned through
+    ``coalesce(1)``, which moves no rows and reports
+    ``SinglePartition``, so its consumers plan no exchange. The count
+    is the checkpoint RDD's own, read without a Spark job. Any other
+    table is stored once more under a global ``orderBy`` of the cycle
+    keys, a range sort of the stored cycles: a lazy ``orderBy`` would
+    leave its range exchange and Sort under the fade and QC aggregates,
+    since their ``min_by``, ``regr_*`` and ``median`` are
+    order-sensitive and ``EliminateSorts`` keeps the sort.
     """
+    keys = cycle_keys(ts)
     feat = durable_checkpoint(
-        per_cycle_features(ts, rated_ah, dv).orderBy(*cycle_keys(ts))
+        per_cycle_features(ts, rated_ah, dv).sortWithinPartitions(*keys)
     )
     plan = feat._jdf.queryExecution().analyzed()
     if plan.nodeName() == "LogicalRDD" and plan.rdd().getNumPartitions() == 1:
         return feat.coalesce(1)
-    return feat
+    return durable_checkpoint(feat.orderBy(*keys))

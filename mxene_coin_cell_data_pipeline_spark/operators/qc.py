@@ -6,13 +6,14 @@ collapse into ONE Spark aggregation producing a single scalar row; the
 assertions run driver-side on that row, preserving the
 exit-1-on-warning automation contract.
 
-Medians are exact (``F.median``) to match pandas, per SURVEY.md §7's
-watch list — not ``percentile_approx``.
+Medians are exact (``median``) to match pandas, per SURVEY.md §7's
+watch list — not ``percentile_approx``. The aggregate list is SQL text
+(operators/_sql.py), so building it is a few dozen py4j calls.
 
 SCALE BOUNDARY: this module targets the FEATURES layer — one row per
 (cell, cycle), i.e. thousands of rows per cell, millions for a whole
-fleet — never the raw sample-level timeseries. The exact ``F.median``
-and ``countDistinct`` here are TypedImperativeAggregates whose final
+fleet — never the raw sample-level timeseries. The exact ``median``
+and ``count(DISTINCT ...)`` here are TypedImperativeAggregates whose final
 merge buffers the column on a single node: perfectly fine at features
 cardinality, not a 100 TB raw-data shape. For exact quantiles over
 fact-scale data use the two-pass bucketed selection in
@@ -28,6 +29,8 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, Row, functions as F
 
+from ._sql import ident
+
 
 @dataclass
 class QCResult:
@@ -40,45 +43,36 @@ class QCResult:
         return 0 if self.passed else 1
 
 
+def _count_if(cond: str) -> str:
+    return f"sum(CASE WHEN {cond} THEN 1 ELSE 0 END)"
+
+
 def qc_aggregate(features: DataFrame) -> DataFrame:
     """The one-row aggregate feeding every check (single shuffle-free
-    pass with map-side partial aggregation)."""
-    ce = F.col("CE")
-    q = F.col("Q_dis_Ah")
-    ir = F.col("IR_C2_ohm")
+    pass with map-side partial aggregation). A check whose column is
+    absent reads a typed NULL."""
     cols = set(features.columns)
-    have = lambda c: c in cols  # noqa: E731
-    aggs = [
-        F.count(F.lit(1)).alias("n_rows"),
-        F.countDistinct("cycle_index").alias("n_cycles"),
-        F.sum(F.when(F.col("cycle_index").isNull(), 1).otherwise(0)).alias("null_cycle"),
-        F.sum(F.when(q.isNull(), 1).otherwise(0)).alias("null_qdis"),
-        F.min(ce).alias("ce_min"),
-        F.max(ce).alias("ce_max"),
-        F.min_by(q, "cycle_index").alias("q_first"),
-        F.max_by(q, "cycle_index").alias("q_last"),
-    ]
-    aggs.append(
-        F.sum(F.when(F.col("E_dis_Wh") <= 0, 1).otherwise(0)).alias("n_epos_bad")
-        if have("E_dis_Wh")
-        else F.lit(None).cast("long").alias("n_epos_bad")
-    )
-    if have("IR_C2_ohm"):
-        aggs += [
-            F.sum(F.when(ir <= 0, 1).otherwise(0)).alias("n_ir_bad"),
-            F.median(ir).alias("ir_median"),
-        ]
-    else:
-        aggs += [
-            F.lit(None).cast("long").alias("n_ir_bad"),
-            F.lit(None).cast("double").alias("ir_median"),
-        ]
-    aggs.append(
-        F.max(F.abs(F.col("dQdV_shift_mV"))).alias("shift_max_abs")
-        if have("dQdV_shift_mV")
-        else F.lit(None).cast("double").alias("shift_max_abs")
-    )
-    return features.agg(*aggs)
+
+    def when_has(col: str, agg: str, null_type: str) -> str:
+        return agg if col in cols else f"CAST(NULL AS {null_type})"
+
+    aggs = {
+        "n_rows": "count(1)",
+        "n_cycles": "count(DISTINCT `cycle_index`)",
+        "null_cycle": _count_if("`cycle_index` IS NULL"),
+        "null_qdis": _count_if("`Q_dis_Ah` IS NULL"),
+        "ce_min": "min(`CE`)",
+        "ce_max": "max(`CE`)",
+        "q_first": "min_by(`Q_dis_Ah`, `cycle_index`)",
+        "q_last": "max_by(`Q_dis_Ah`, `cycle_index`)",
+        "n_epos_bad": when_has("E_dis_Wh", _count_if("`E_dis_Wh` <= 0"), "BIGINT"),
+        "n_ir_bad": when_has("IR_C2_ohm", _count_if("`IR_C2_ohm` <= 0"), "BIGINT"),
+        "ir_median": when_has("IR_C2_ohm", "median(`IR_C2_ohm`)", "DOUBLE"),
+        "shift_max_abs": when_has(
+            "dQdV_shift_mV", "max(abs(`dQdV_shift_mV`))", "DOUBLE"
+        ),
+    }
+    return features.agg(*(F.expr(f"{e} AS {ident(n)}") for n, e in aggs.items()))
 
 
 def qc_messages(s: Row) -> list[str]:
@@ -113,7 +107,7 @@ def qc_messages(s: Row) -> list[str]:
 
 
 def qc_checks(features: DataFrame) -> QCResult:
-    s = qc_aggregate(features).first()
+    (s,) = qc_aggregate(features).collect()  # a global aggregate: one row
     msgs = qc_messages(s)
     return QCResult(passed=not msgs, messages=msgs, stats=s.asDict())
 

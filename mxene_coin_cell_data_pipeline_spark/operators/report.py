@@ -4,7 +4,8 @@ Reference (/root/reference/step14_report.py): summary scalars + a
 rounded first-10-cycles table rendered into a Markdown template. The
 table is a top-k by cycle_index (orderBy + limit — Spark plans a
 TakeOrdered, no full sort at scale); rendering is driver-side on ≤10
-rows.
+rows. Over a multi-cell table the report reads only its own cell's
+summary row and cycles.
 """
 
 from __future__ import annotations
@@ -69,7 +70,13 @@ def report_table(features: DataFrame, n: int = 10) -> DataFrame:
 
 
 def render_report(features: DataFrame, summary: DataFrame, cell: str) -> str:
-    s = summary.first()
+    # one row per cell: collecting it costs less than a filter and a limit
+    rows = summary.collect()
+    if "cell_id" in summary.columns:
+        rows = [r for r in rows if r["cell_id"] == cell]
+    if "cell_id" in features.columns:
+        features = features.filter(F.col("cell_id") == F.lit(cell))
+    s = rows[0] if rows else None
     pdf = report_table(features).toPandas()
     nan = float("nan")
     return TEMPLATE.format(

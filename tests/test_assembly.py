@@ -81,6 +81,40 @@ def test_report_rounding_and_template(spark):
     assert "| cycle_index" in md and "2.994" in md
 
 
+def test_report_reads_only_its_cell(spark, tmp_path):
+    """On a two-cell feature table each report shows its own cell's
+    summary row and its own cycles, each once (c2 holds half c1's
+    capacity, so the two Q0 values differ)."""
+    from fixtures import RATED_AH, arbin_frame
+    from mxene_coin_cell_data_pipeline_spark.operators import (
+        fade_and_rul,
+        full_feature_pipeline,
+        normalize_cycler,
+    )
+    from mxene_coin_cell_data_pipeline_spark.sources import read_cycler_csv
+
+    cells = []
+    for cid, scale in (("c1", 1.0), ("c2", 0.5)):
+        pdf = arbin_frame()
+        for col in ("Charge_Capacity(Ah)", "Discharge_Capacity(Ah)"):
+            pdf[col] *= scale
+        pdf["cell_id"] = cid
+        cells.append(pdf)
+    csv = str(tmp_path / "cells.csv")
+    pd.concat(cells, ignore_index=True).to_csv(csv, index=False)
+    feat = full_feature_pipeline(
+        normalize_cycler(read_cycler_csv(spark, csv)), rated_ah=RATED_AH
+    )
+    summary = fade_and_rul(feat)
+    for cid, q0 in (("c1", "2.994"), ("c2", "1.497")):
+        md = render_report(feat, summary, cid)
+        assert f"**Q₀ (Ah):** {q0}" in md, md
+        rows = [ln for ln in md.splitlines() if ln.startswith("| ") and "cycle_index" not in ln]
+        cycles = [ln.split("|")[1].strip() for ln in rows]
+        assert cycles == [str(n) for n in range(1, len(cycles) + 1)], md
+        assert all(f"| {q0[:3]}" in ln for ln in rows), md
+
+
 def test_plots_gated_without_matplotlib(spark, tmp_path):
     feat = spark.createDataFrame(
         [(1, 2.9, 0.99)], "cycle_index long, Q_dis_Ah double, CE double"

@@ -1,11 +1,12 @@
 """Driver-call budgets for building the cell chain's and the near-dup
 pair chain's plans.
 
-Normalize, the per-cycle feature plan and the near-dup pair chain are
-written as SQL text the JVM parses once, so building them costs a few
-dozen py4j calls however many formulas they hold. Column trees cost one
-py4j call per node: the feature plan took 1,741 calls that way and
-normalize 439–556.
+Normalize, the per-cycle feature plan, the fade fit, the QC aggregate
+and the near-dup pair chain are written as SQL text the JVM parses
+once, so building them costs a few dozen py4j calls however many
+formulas they hold. Column trees cost one py4j call per node: the
+feature plan took 1,741 calls that way, normalize 439–556, the fade fit
+187–191 and the QC aggregate 178–193.
 
 Each test counts py4j *call* commands (the ``c\\n`` prefix; garbage
 collection detaches are left out) while one plan is built, and holds it
@@ -15,6 +16,10 @@ to the count measured when the text form landed plus 25%:
   calls, budget 77;
 - ``normalize_cycler(..., cell_id=...)`` on the Arbin, Neware and
   headless fixture CSVs: 52 calls each, budget 65;
+- ``fade_and_rul`` over the two-cell feature table: 21 calls, budget
+  27;
+- ``qc_aggregate`` over the two-cell feature table: 27 calls, budget
+  34;
 - ``minhash_near_dup_pairs`` (the near-dup pair chain: shingles,
   signatures, band buckets, capped candidate pairs, jaccard verify) on
   the test documents: 83–87 calls, budget 109 (710 as Column trees).
@@ -31,14 +36,21 @@ import pytest
 
 from fixtures import RATED_AH, arbin_frame, headless_frame, neware_frame
 from mxene_coin_cell_data_pipeline_spark.functions.dedup import minhash_near_dup_pairs
-from mxene_coin_cell_data_pipeline_spark.operators import normalize_cycler
+from mxene_coin_cell_data_pipeline_spark.operators import (
+    fade_and_rul,
+    full_feature_pipeline,
+    normalize_cycler,
+)
 from mxene_coin_cell_data_pipeline_spark.operators.features import per_cycle_features
+from mxene_coin_cell_data_pipeline_spark.operators.qc import qc_aggregate
 from mxene_coin_cell_data_pipeline_spark.sources import read_cycler_csv
 from mxene_coin_cell_data_pipeline_spark.sources.tables import load_table
 from test_plan_shapes import _two_cell_timeseries
 
 FEATURES_BUDGET = 77
 NORMALIZE_BUDGET = 65
+FADE_BUDGET = 27
+QC_BUDGET = 34
 PAIRS_BUDGET = 109
 
 
@@ -78,6 +90,18 @@ def test_normalize_build_budget(spark, tmp_path, frame):
     with _py4j_calls(spark) as calls:
         normalize_cycler(raw, cell_id="CELL01")
     assert calls[0] <= NORMALIZE_BUDGET, calls[0]
+
+
+@pytest.mark.parametrize(
+    "build, budget", [(fade_and_rul, FADE_BUDGET), (qc_aggregate, QC_BUDGET)]
+)
+def test_feature_consumer_build_budget(spark, tmp_path, build, budget):
+    ts = spark.read.parquet(_two_cell_timeseries(spark, tmp_path))
+    feat = full_feature_pipeline(ts, rated_ah=RATED_AH)
+    build(feat)
+    with _py4j_calls(spark) as calls:
+        build(feat)
+    assert calls[0] <= budget, calls[0]
 
 
 def test_near_dup_pair_chain_build_budget(spark, sf_dir):

@@ -614,22 +614,80 @@ def test_feature_table_is_read_once(spark, tmp_path):
 
 
 def test_multi_partition_feature_table_keeps_its_cell_exchange(spark, tmp_path):
-    """A table stored in more than one partition keeps the plan of an
-    unknown partitioning: the fade fit's aggregate by cell is one cell
-    exchange over the cycle rows."""
+    """A table stored in more than one partition is stored again in
+    global order (a range sort of the stored cycles), and keeps the
+    plan of an unknown partitioning: the fade fit's aggregate by cell
+    is one cell exchange over the cycle rows."""
     from fixtures import RATED_AH
     from mxene_coin_cell_data_pipeline_spark.operators import full_feature_pipeline
 
     path = _two_cell_timeseries(spark, tmp_path)
     key = "spark.sql.adaptive.coalescePartitions.enabled"
     before = spark.conf.get(key)
-    spark.conf.set(key, "false")  # the range exchange keeps its partitions
+    spark.conf.set(key, "false")  # the window's cell hash exchange keeps its partitions
     try:
         feat = full_feature_pipeline(spark.read.parquet(path), rated_ah=RATED_AH)
     finally:
         spark.conf.set(key, before)
     assert feat.rdd.getNumPartitions() > 1
     _assert_reads_stored_cycles(feat, one_partition=False)
+    rows = [tuple(r) for r in feat.select("cell_id", "cycle_index").collect()]
+    assert rows == sorted(rows)
+
+
+def _jobs_in(spark, group: str, body):
+    """Run ``body()`` in job group ``group``; return its result and the
+    number of Spark jobs it ran."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = body()
+    finally:
+        sc._jsc.clearJobGroup()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_single_file_csv_read_runs_no_job(spark, tmp_path):
+    """``read_cycler_csv`` of one file names its columns without a Spark
+    job: the header is read on the driver and tokenized by a local
+    query. The sniff and Spark's header inference cost 2 jobs."""
+    from mxene_coin_cell_data_pipeline_spark.sources import read_cycler_csv
+
+    csv = _two_cell_csv(tmp_path)
+    raw, jobs = _jobs_in(spark, "csv-read", lambda: read_cycler_csv(spark, csv))
+    assert jobs == 0
+    assert "cell_id" in raw.columns
+
+
+def test_feature_checkpoint_is_two_jobs_without_range_sort(spark, tmp_path, monkeypatch):
+    """The feature checkpoint stores the per-cell window's rows sorted
+    within their partitions: one hash exchange by cell, no range
+    exchange, and 2 Spark jobs for the whole ``full_feature_pipeline``
+    call on the two-cell fixture (a global ``orderBy`` cost 4: its
+    range sample and its range shuffle re-ran the windows)."""
+    from fixtures import RATED_AH
+    from mxene_coin_cell_data_pipeline_spark.operators import features
+
+    stored, checkpoint = [], features.durable_checkpoint
+
+    def recording(df, *args, **kwargs):
+        stored.append(df)
+        return checkpoint(df, *args, **kwargs)
+
+    monkeypatch.setattr(features, "durable_checkpoint", recording)
+    ts = spark.read.parquet(_two_cell_timeseries(spark, tmp_path))
+    feat, jobs = _jobs_in(
+        spark, "feature-checkpoint",
+        lambda: features.full_feature_pipeline(ts, rated_ah=RATED_AH),
+    )
+    assert jobs == 2, jobs
+    assert len(stored) == 1 and feat.rdd.getNumPartitions() == 1
+    plan = stored[0]._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Initial Plan ==")[0]  # the adaptive plan as it ran
+    assert "rangepartitioning" not in plan, plan
+    assert re.findall(r"Exchange (\w+)", final) == ["hashpartitioning"], plan
+    rows = [tuple(r) for r in feat.select("cell_id", "cycle_index").collect()]
+    assert rows == sorted(rows)
 
 
 def test_empty_feature_table_consumers(spark, tmp_path):
