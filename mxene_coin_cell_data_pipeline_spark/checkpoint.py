@@ -60,6 +60,24 @@ def durable_checkpoint(df: DataFrame, eager: bool = True) -> DataFrame:
     return df.localCheckpoint(eager=eager)
 
 
+def release_checkpoint(df: DataFrame) -> None:
+    """Free the rows a checkpoint stored for ``df`` once nothing reads
+    them: a local checkpoint's blocks are unpersisted, a reliable
+    checkpoint's files deleted. ``df`` must be the checkpoint itself
+    (a ``LogicalRDD`` plan); any other plan is left alone."""
+    plan = df._jdf.queryExecution().analyzed()
+    if plan.nodeName() != "LogicalRDD":
+        return
+    rdd = plan.rdd()
+    stored = rdd.getCheckpointFile()
+    if not stored.isDefined():
+        rdd.unpersist(False)
+        return
+    sc = df.sparkSession.sparkContext
+    path = sc._jvm.org.apache.hadoop.fs.Path(stored.get())
+    path.getFileSystem(sc._jsc.hadoopConfiguration()).delete(path, True)
+
+
 def _checkpoints_into(sc, ckdir: str) -> bool:
     """Whether ``sc`` already writes reliable checkpoints into ``ckdir``.
 

@@ -43,7 +43,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from ..checkpoint import durable_checkpoint
+from ..checkpoint import durable_checkpoint, release_checkpoint
 from ._keys import IS_DIS, cell_keys, cycle_keys, drop_null_cycles
 from ._sql import ident, over
 from .capacity import capacity_aggs, coulombic_efficiency, q_norm
@@ -146,7 +146,8 @@ def full_feature_pipeline(
     keys, a range sort of the stored cycles: a lazy ``orderBy`` would
     leave its range exchange and Sort under the fade and QC aggregates,
     since their ``min_by``, ``regr_*`` and ``median`` are
-    order-sensitive and ``EliminateSorts`` keeps the sort.
+    order-sensitive and ``EliminateSorts`` keeps the sort. The first
+    copy is released once the ordered one is stored.
     """
     keys = cycle_keys(ts)
     feat = durable_checkpoint(
@@ -155,4 +156,6 @@ def full_feature_pipeline(
     plan = feat._jdf.queryExecution().analyzed()
     if plan.nodeName() == "LogicalRDD" and plan.rdd().getNumPartitions() == 1:
         return feat.coalesce(1)
-    return durable_checkpoint(feat.orderBy(*keys))
+    ordered = durable_checkpoint(feat.orderBy(*keys))
+    release_checkpoint(feat)
+    return ordered

@@ -5,7 +5,7 @@ rounded first-10-cycles table rendered into a Markdown template. The
 table is a top-k by cycle_index (orderBy + limit — Spark plans a
 TakeOrdered, no full sort at scale); rendering is driver-side on ≤10
 rows. Over a multi-cell table the report reads only its own cell's
-summary row and cycles.
+summary row and cycles (``_summary_row``).
 """
 
 from __future__ import annotations
@@ -69,14 +69,30 @@ def report_table(features: DataFrame, n: int = 10) -> DataFrame:
     return features.orderBy("cycle_index").limit(n).select(*cols)
 
 
-def render_report(features: DataFrame, summary: DataFrame, cell: str) -> str:
-    # one row per cell: collecting it costs less than a filter and a limit
+def _summary_row(summary: DataFrame, cell: str):
+    """The summary row of ``cell``. A summary without ``cell_id`` is
+    one row. When no row carries ``cell``, a summary of one cell is
+    that cell's (the CLI's ``--cell`` names the report, and a raw
+    CSV's own ``cell_id`` column may spell the cell otherwise); an
+    empty one gives None, and one of several other cells is an error."""
+    if "cell_id" not in summary.columns:
+        rows = summary.collect()
+        return rows[0] if rows else None
+    rows = summary.filter(F.col("cell_id") == F.lit(cell)).collect()
+    if rows:
+        return rows[0]
     rows = summary.collect()
-    if "cell_id" in summary.columns:
-        rows = [r for r in rows if r["cell_id"] == cell]
+    if len(rows) > 1:
+        found = sorted(str(r["cell_id"]) for r in rows)
+        raise ValueError(f"no summary row for cell {cell!r}; cells found: {found}")
+    return rows[0] if rows else None
+
+
+def render_report(features: DataFrame, summary: DataFrame, cell: str) -> str:
+    s = _summary_row(summary, cell)
     if "cell_id" in features.columns:
-        features = features.filter(F.col("cell_id") == F.lit(cell))
-    s = rows[0] if rows else None
+        own = s["cell_id"] if s is not None and "cell_id" in summary.columns else cell
+        features = features.filter(F.col("cell_id").eqNullSafe(F.lit(own)))
     pdf = report_table(features).toPandas()
     nan = float("nan")
     return TEMPLATE.format(

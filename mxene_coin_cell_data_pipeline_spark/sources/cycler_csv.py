@@ -72,10 +72,15 @@ def _first_lines(spark: SparkSession, path: str) -> tuple[str, str] | None:
 
 def _header_tokens(spark: SparkSession, line: str, sep: str) -> list[str | None]:
     """``line`` split by Spark's CSV parser (quotes, escapes) in a local
-    query: no Spark job. ``schema_of_csv`` gives the field count; the
-    line holds at most one field more than it holds separators. The
-    line is a bound parameter, so no ``${...}`` in it is substituted."""
-    fields = ", ".join(f"_c{i} STRING" for i in range(line.count(sep) + 1))
+    query: no Spark job. ``schema_of_csv`` gives the field count.
+    ``from_csv`` parses into a bound on it: one field more than the
+    separators for a one-character ``sep``, else one more than the
+    line's characters, since Spark also takes escaped spellings such as
+    ``\\t`` (the longer schema costs some 9 ms on a 200-character
+    header). The line is a bound parameter, so no ``${...}`` in it is
+    substituted."""
+    bound = line.count(sep) + 1 if len(sep) == 1 else len(line) + 1
+    fields = ", ".join(f"_c{i} STRING" for i in range(bound))
     (row,) = spark.sql(
         "SELECT schema_of_csv(:line, map('sep', :sep)) AS s, "
         f"from_csv(col1, '{fields}', map('sep', :sep)) AS t FROM VALUES (:line)",

@@ -81,9 +81,10 @@ def test_report_rounding_and_template(spark):
     assert "| cycle_index" in md and "2.994" in md
 
 
-def test_report_reads_only_its_cell(spark, tmp_path):
-    """On a two-cell feature table each report shows its own cell's
-    summary row and its own cycles, each once (c2 holds half c1's
+@pytest.fixture(scope="module")
+def two_cell_features(spark, tmp_path_factory):
+    """The feature table and fade summary of a two-cell raw CSV whose
+    own ``cell_id`` column names c1 and c2 (c2 holds half c1's
     capacity, so the two Q0 values differ)."""
     from fixtures import RATED_AH, arbin_frame
     from mxene_coin_cell_data_pipeline_spark.operators import (
@@ -100,19 +101,51 @@ def test_report_reads_only_its_cell(spark, tmp_path):
             pdf[col] *= scale
         pdf["cell_id"] = cid
         cells.append(pdf)
-    csv = str(tmp_path / "cells.csv")
+    csv = str(tmp_path_factory.mktemp("two_cells") / "cells.csv")
     pd.concat(cells, ignore_index=True).to_csv(csv, index=False)
     feat = full_feature_pipeline(
         normalize_cycler(read_cycler_csv(spark, csv)), rated_ah=RATED_AH
     )
-    summary = fade_and_rul(feat)
+    return feat, fade_and_rul(feat)
+
+
+def _report_rows(md: str, q0: str) -> list[str]:
+    """The table's cycle numbers, after checking the report's Q0 line
+    and that every row shows that cell's capacity."""
+    from fixtures import N_CYCLES
+
+    assert f"**Q₀ (Ah):** {q0}" in md, md
+    rows = [ln for ln in md.splitlines() if ln.startswith("| ") and "cycle_index" not in ln]
+    assert len(rows) == min(10, N_CYCLES), md
+    assert all(f"| {q0[:3]}" in ln for ln in rows), md
+    return [ln.split("|")[1].strip() for ln in rows]
+
+
+def test_report_reads_only_its_cell(two_cell_features):
+    """On a two-cell feature table each report shows its own cell's
+    summary row and its own cycles, each once."""
+    feat, summary = two_cell_features
     for cid, q0 in (("c1", "2.994"), ("c2", "1.497")):
-        md = render_report(feat, summary, cid)
-        assert f"**Q₀ (Ah):** {q0}" in md, md
-        rows = [ln for ln in md.splitlines() if ln.startswith("| ") and "cycle_index" not in ln]
-        cycles = [ln.split("|")[1].strip() for ln in rows]
-        assert cycles == [str(n) for n in range(1, len(cycles) + 1)], md
-        assert all(f"| {q0[:3]}" in ln for ln in rows), md
+        cycles = _report_rows(render_report(feat, summary, cid), q0)
+        assert cycles == [str(n) for n in range(1, len(cycles) + 1)]
+
+
+def test_report_of_a_cell_the_table_names_otherwise(two_cell_features):
+    """A one-cell table whose ``cell_id`` differs from the requested
+    cell (a raw CSV's own column wins over ``--cell``) reports that
+    cell under the requested title; among several cells an unknown
+    cell is an error naming the cells found."""
+    from pyspark.sql import functions as F
+
+    from mxene_coin_cell_data_pipeline_spark.operators import fade_and_rul
+
+    feat, summary = two_cell_features
+    with pytest.raises(ValueError, match=r"'c3'.*\['c1', 'c2'\]"):
+        render_report(feat, summary, "c3")
+    one = feat.filter(F.col("cell_id") == "c2")
+    md = render_report(one, fade_and_rul(one), "CELL01")
+    assert md.startswith("# Cycle-Life Report — CELL01")
+    assert _report_rows(md, "1.497")[0] == "1"
 
 
 def test_plots_gated_without_matplotlib(spark, tmp_path):

@@ -64,12 +64,16 @@ def _read_jobs(spark, path: str) -> int:
     return _jobs_in(spark, "csv-header", build)[1]
 
 
-def _assert_same(spark, path: str, sep: str) -> None:
+def _assert_same(spark, path: str, sep: str, given: str | None = None) -> None:
+    """Same outcome as Spark's read with ``sep``; ``given`` is passed to
+    ``read_cycler_csv`` as its ``sep`` (None: it picks one)."""
+
     def spark_read():
         df = spark.read.option("header", True).option("sep", sep).csv(path)
         return df.toDF(*(c.strip() for c in df.columns))
 
-    assert _outcome(lambda: read_cycler_csv(spark, path)) == _outcome(spark_read)
+    ours = _outcome(lambda: read_cycler_csv(spark, path, sep=given))
+    assert ours == _outcome(spark_read)
 
 
 @pytest.mark.parametrize("case", sorted(CASES))
@@ -85,3 +89,20 @@ def test_directory_and_glob_match_spark(spark, tmp_path, pattern):
     (tmp_path / "dir").mkdir()
     (tmp_path / "dir" / "part.csv").write_bytes(CASES["case_duplicates"])
     _assert_same(spark, str(tmp_path / pattern), ",")
+
+
+@pytest.mark.parametrize(
+    "sep, data",
+    [
+        ("\\t", b"a\tb\tc\n1\t2\t3\n"),
+        ("\t", b"a\tb\tc\n1\t2\t3\n"),
+        ("||", b"a||b||c\n1||2||3\n"),
+    ],
+    ids=["escaped_tab", "tab", "two_chars"],
+)
+def test_given_sep_matches_spark(spark, tmp_path, sep, data):
+    """A ``sep`` passed in any spelling Spark takes names every column."""
+    path = tmp_path / "raw.csv"
+    path.write_bytes(data)
+    _assert_same(spark, str(path), sep, given=sep)
+    assert read_cycler_csv(spark, str(path), sep=sep).columns == ["a", "b", "c"]

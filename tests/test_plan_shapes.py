@@ -635,6 +635,42 @@ def test_multi_partition_feature_table_keeps_its_cell_exchange(spark, tmp_path):
     assert rows == sorted(rows)
 
 
+def test_multi_partition_feature_table_keeps_one_stored_copy(spark, tmp_path):
+    """The unordered first copy of a multi-partition table is released
+    once the ordered copy is stored: its local blocks are unpersisted,
+    and a reliable checkpoint leaves one RDD directory, not two."""
+    import os
+
+    from fixtures import RATED_AH
+    from mxene_coin_cell_data_pipeline_spark.operators import full_feature_pipeline
+
+    ts = spark.read.parquet(_two_cell_timeseries(spark, tmp_path))
+    def stored_rdds():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+    key = "spark.sql.adaptive.coalescePartitions.enabled"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        held = stored_rdds()
+        local = full_feature_pipeline(ts, rated_ah=RATED_AH)
+        assert len(stored_rdds() - held) == 1
+        ckdir = str(tmp_path / "ck")
+        spark.conf.set("spark.graft.checkpointDir", ckdir)
+        try:
+            reliable = full_feature_pipeline(ts, rated_ah=RATED_AH)
+        finally:
+            spark.conf.unset("spark.graft.checkpointDir")
+    finally:
+        spark.conf.set(key, before)
+    assert local.rdd.getNumPartitions() > 1
+    rdd_dirs = [
+        d for root, dirs, _ in os.walk(ckdir) for d in dirs if d.startswith("rdd-")
+    ]
+    assert len(rdd_dirs) == 1, rdd_dirs
+    assert reliable.collect() == local.collect()
+
+
 def _jobs_in(spark, group: str, body):
     """Run ``body()`` in job group ``group``; return its result and the
     number of Spark jobs it ran."""
