@@ -64,11 +64,8 @@ def release_checkpoint(df: DataFrame) -> None:
     """Free the rows a checkpoint stored for ``df`` once nothing reads
     them: a local checkpoint's blocks are unpersisted, a reliable
     checkpoint's files deleted. ``df`` must be the checkpoint itself
-    (a ``LogicalRDD`` plan); any other plan is left alone."""
-    plan = df._jdf.queryExecution().analyzed()
-    if plan.nodeName() != "LogicalRDD":
-        return
-    rdd = plan.rdd()
+    (a ``LogicalRDD`` plan)."""
+    rdd = df._jdf.queryExecution().analyzed().rdd()
     stored = rdd.getCheckpointFile()
     if not stored.isDefined():
         rdd.unpersist(False)

@@ -53,7 +53,9 @@ def cmd_run(args: argparse.Namespace) -> int:
         ts_path = os.path.join(args.out, f"{args.cell}_timeseries.parquet")
         ts.write.mode("overwrite").parquet(ts_path)
 
-        ts = spark.read.parquet(ts_path)  # features read the materialized layer
+        # features read the materialized layer; its schema is known, so
+        # the read runs no schema-inference job
+        ts = spark.read.schema(ts.schema).parquet(ts_path)
         feat = full_feature_pipeline(
             ts, rated_ah=args.rated_ah, dv=args.dv
         ).orderBy("cycle_index")

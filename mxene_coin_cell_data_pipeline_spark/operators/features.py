@@ -153,8 +153,7 @@ def full_feature_pipeline(
     feat = durable_checkpoint(
         per_cycle_features(ts, rated_ah, dv).sortWithinPartitions(*keys)
     )
-    plan = feat._jdf.queryExecution().analyzed()
-    if plan.nodeName() == "LogicalRDD" and plan.rdd().getNumPartitions() == 1:
+    if feat._jdf.queryExecution().analyzed().rdd().getNumPartitions() == 1:
         return feat.coalesce(1)
     ordered = durable_checkpoint(feat.orderBy(*keys))
     release_checkpoint(feat)

@@ -354,9 +354,10 @@ def _closure_audit_oracle(pair_sql: str, rounds: int = 12) -> str:
     would otherwise inline the chain exponentially.
 
     ``rounds`` was cut 24 → 12 in round 10 after the phase-split
-    profile (tools/profile_d06_oracle.py) MEASURED the 24-round chain
-    as the 100x memory binder: DuckDB's per-thread operator state
-    scales with unrolled rounds, and 24 rounds × 32 threads exhausted
+    profile (`git show d7617ac:tools/profile_d06_oracle.py`) MEASURED
+    the 24-round chain as the 100x memory binder: DuckDB's per-thread
+    operator state scales with unrolled rounds, and 24 rounds × 32
+    threads exhausted
     a 48GB limit in 182s, while the same pair relation (26,914,312
     pairs) closed at rounds=12/48GB in 118s (rounds=8 also converged,
     92s; the 24-round form needs threads=8 — 372s — or 80GB). The cut

@@ -218,42 +218,6 @@ def test_near_dup_groups_long_chain(spark):
     assert got == {i: 0 for i in range(13)}
 
 
-def test_cli_run_and_qc(tmp_path):
-    """End-to-end CLI contract: run produces the reference's file set;
-    qc exits 1 on the fixture (its IR is 0.75 Ω by design)."""
-    import subprocess
-    import sys as _sys
-
-    from fixtures import arbin_frame
-
-    raw = tmp_path / "CELL01_raw.csv"
-    arbin_frame().to_csv(raw, index=False)
-    out = tmp_path / "processed"
-    env = dict(os.environ, SPARK_GRAFT_CPUS="4")
-    r = subprocess.run(
-        [_sys.executable, "-m", "mxene_coin_cell_data_pipeline_spark", "run",
-         "--in", str(raw), "--cell", "CELL01", "--rated_ah", "3.0",
-         "--out", str(out)],
-        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        env=env, capture_output=True, text=True, timeout=300,
-    )
-    assert r.returncode == 0, r.stderr[-2000:]
-    for f in ["CELL01_timeseries.parquet", "CELL01_features_full.csv",
-              "CELL01_summary.csv", "CELL01_report.md"]:
-        assert (out / f).exists(), f
-    summary = pd.read_csv(out / "CELL01_summary.csv")
-    assert summary["fade_slope_pct_per_cycle"][0] == pytest.approx(-0.2004008016032053)
-
-    r2 = subprocess.run(
-        [_sys.executable, "-m", "mxene_coin_cell_data_pipeline_spark", "qc",
-         "--features", str(out / "CELL01_features_full.csv")],
-        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        env=env, capture_output=True, text=True, timeout=300,
-    )
-    assert r2.returncode == 1  # exit-1-on-warning contract
-    assert "Median IR_C2" in r2.stdout
-
-
 def test_ngram_jaccard_max_df_cap(spark):
     """max_df caps candidate generation only — scores of surviving
     pairs are identical to the exact run."""

@@ -50,9 +50,10 @@ HEAVY_EXTRA_ARGS: dict[str, list[str]] = {
         "--stop-spark-before-oracle",
     ],
     # r10: the closure oracle now fits the default 48GB — the r10
-    # phase profile (tools/profile_d06_oracle.py) measured the OLD
-    # 24-round chain as the binder (per-thread operator state scales
-    # with unrolled rounds; 24x32 threads exhausted 48GB in 182s) and
+    # phase profile (git show d7617ac:tools/profile_d06_oracle.py)
+    # measured the OLD 24-round chain as the binder (per-thread
+    # operator state scales with unrolled rounds; 24x32 threads
+    # exhausted 48GB in 182s) and
     # the registered oracle was cut to rounds=12 (118s at 48GB over
     # the same 26.9M-pair relation, convergence-certified per run).
     # Only the Spark-JVM-stop remains: pairs + chain still want the
