@@ -28,7 +28,7 @@ DEFAULT_NUM_HASHES = 8
 DEFAULT_BAND_SIZE = 2
 #: Library DEFAULT for per-bucket pair emission in the LSH/SimHash
 #: candidate generators. A band bucket of m co-hashed docs emits
-#: m(m-1)/2 pairs from the self-join — at web scale one viral
+#: m(m-1)/2 pairs uncapped — at web scale one viral
 #: boilerplate cluster (m ~ 1e6) is 5e11 pairs from ONE bucket, the
 #: single quadratic scale-killer in the dedup family (measured:
 #: SCALING.md — uncapped edges grew 100.5× on 10× duplicate-heavy
@@ -129,7 +129,9 @@ def shingles(docs: DataFrame, text_col: str = "text", n: int = 3) -> DataFrame:
 
 
 #: SQL text of each hash family: the MinHash permutation ``i`` of a
-#: shingle, and the bucket of one band's signature columns ``cols``
+#: shingle, the bucket of one band's signature columns ``cols``, and
+#: the per-doc shingle set the jaccard verify intersects (64-bit gram
+#: ids on xxhash64, the exact strings on md5)
 _MINHASH_SQL = {
     "xxhash64": "xxhash64(CAST({i} AS BIGINT), shingle)",
     "md5": "md5(concat('{i}|', shingle))",
@@ -137,6 +139,10 @@ _MINHASH_SQL = {
 _BAND_SQL = {
     "xxhash64": "CAST(xxhash64({cols}) AS STRING)",
     "md5": "md5(concat_ws('|', {cols}))",
+}
+_SET_SQL = {
+    "xxhash64": "collect_set(xxhash64(shingle))",
+    "md5": "collect_set(shingle)",
 }
 
 
@@ -169,9 +175,42 @@ def minhash_signatures(
     property (band collision probability, jaccard refine, closure) is
     hash_fn-independent; only the concrete signature values differ.
     """
+    return sh.groupBy("doc_id").agg(*_signature_cols(num_hashes, hash_fn))
+
+
+def _signature_cols(num_hashes: int, hash_fn: str) -> list[Column]:
+    """The aggregate columns mh0..mh{k-1} of ``minhash_signatures``."""
     perm = _hash_sql(_MINHASH_SQL, hash_fn)
-    return sh.groupBy("doc_id").agg(
-        *[F.expr(f"min({perm.format(i=i)}) AS mh{i}") for i in range(num_hashes)]
+    return [F.expr(f"min({perm.format(i=i)}) AS mh{i}") for i in range(num_hashes)]
+
+
+def _minhash_doc_state(
+    docs: DataFrame, text_col: str, n: int, num_hashes: int, hash_fn: str
+) -> DataFrame:
+    """``(doc_id, mh0..mh{k-1}, _set)``, stored: each doc's MinHash
+    signature and its shingle set, from ONE tokenization.
+
+    One ``groupBy(doc_id)`` over the shingle stream computes both the
+    signature (the codegen'd ``min`` aggregates of
+    ``minhash_signatures``) and ``_set`` (``_SET_SQL``), and
+    ``durable_checkpoint`` stores the result, so the band buckets and
+    both sides of the jaccard verify read the stored rows and no
+    consumer tokenizes again. One row per doc, so the state is
+    corpus-linear; a local checkpoint's blocks are freed by Spark's
+    context cleaner once no plan references them.
+
+    On md5 ``_set`` holds the shingle strings, so the jaccard is the
+    string jaccard byte for byte. On xxhash64 it holds 64-bit gram ids
+    (``xxhash64(shingle)``): a pair's id jaccard equals its string
+    jaccard unless two distinct shingles of the pair's union share a
+    hash. For a union of u shingles that has probability at most
+    u(u-1)/2 / 2^64 (about 3·10⁻¹⁴ at u = 1,000); each colliding pair
+    of shingles counts as one gram.
+    """
+    agg = _signature_cols(num_hashes, hash_fn)
+    agg.append(F.expr(f"{_hash_sql(_SET_SQL, hash_fn)} AS _set"))
+    return durable_checkpoint(
+        shingles(docs, text_col, n).groupBy("doc_id").agg(*agg)
     )
 
 
@@ -185,9 +224,9 @@ def band_buckets(
     probe/build key space every LSH consumer joins on.
 
     One ``inline`` of a per-row literal-struct array, so the plan is one
-    Generate node with no shuffle. ``lsh_candidate_pairs`` self-joins
-    it; the incremental paths probe corpus-side buckets with batch-side
-    ones instead.
+    Generate node with no shuffle. ``lsh_candidate_pairs`` groups it
+    by bucket; the incremental paths probe corpus-side buckets with
+    batch-side ones instead.
 
     ``hash_fn`` picks the band-bucket hash: ``xxhash64`` (default)
     folds the band's signature columns directly into one int64 —
@@ -224,9 +263,9 @@ def lsh_candidate_pairs(
     signatures were built with (``minhash_near_dup_pairs`` threads it).
 
     ``bucket_cap`` is the scale guard against quadratic pair emission:
-    a bucket of m co-hashed docs emits m(m−1)/2 pairs from the
-    self-join — at web scale a single viral boilerplate cluster
-    (m ~ 10⁶) is 5·10¹¹ pairs from ONE bucket. With a cap, buckets of
+    a bucket of m co-hashed docs emits m(m−1)/2 pairs — at web scale
+    a single viral boilerplate cluster (m ~ 10⁶) is 5·10¹¹ pairs from
+    ONE bucket. With a cap, buckets of
     m ≤ cap keep the exact all-pairs emission, and larger buckets emit
     only STAR edges to the bucket's min doc_id (m−1 edges, the d10
     first-occurrence pattern) — per-bucket work drops from O(m²) to
@@ -239,69 +278,54 @@ def lsh_candidate_pairs(
     band collision at large m is overwhelming evidence of boilerplate.
     Capped emission (``DEFAULT_BUCKET_CAP``) is the production
     default; ``bucket_cap=None`` opts out into the fully-exact
-    all-pairs shape.
+    all-pairs shape. Both go through ``_capped_bucket_pairs``, which
+    reads the band relation once, so a lazy ``sig`` is evaluated once,
+    not once per join leg.
     """
     bands = band_buckets(sig, num_hashes, band_size, hash_fn)
-    if bucket_cap is None:
-        # Persist the band relation (optimization r11): it is COMPACT
-        # (n_bands rows per doc, id + band + bucket) but BOTH self-join
-        # legs re-derive the full shingle → minhash-signature chain
-        # (the per-shingle hashing that dominates this family's per-row
-        # cost) without it. Scoped to the uncapped branch only — the
-        # capped path (r12) reads the band relation exactly once.
-        # NOTE: SQL-cached relations live until unpersist()/clearCache()
-        # — a long-lived session running many queries should clear the
-        # cache between them (bench.py does after every execution).
-        bands = bands.persist()
-        return (
-            bands.alias("a")
-            .join(
-                bands.alias("b"),
-                F.expr(
-                    "a.band = b.band AND a.bucket = b.bucket AND a.doc_id < b.doc_id"
-                ),
-            )
-            .selectExpr("a.doc_id AS doc_a", "b.doc_id AS doc_b")
-            .distinct()
-        )
     return _capped_bucket_pairs(bands, ["band", "bucket"], bucket_cap)
 
 
 def _capped_bucket_pairs(
-    bands: DataFrame, bucket_keys: list[str], bucket_cap: int
+    bands: DataFrame, bucket_keys: list[str], bucket_cap: int | None
 ) -> DataFrame:
-    """All-pairs within small buckets + star edges (min doc_id → member)
-    within large ones; distinct over both.
+    """All pairs (doc_a < doc_b) within buckets of at most
+    ``bucket_cap`` members, star edges (min doc_id → member) within
+    larger ones; distinct over both. ``bucket_cap=None`` emits all
+    pairs of every bucket, exactly a self-join of ``bands`` on the
+    bucket keys with ``a.doc_id < b.doc_id``.
 
     Single-pass form (optimization r12, guide §2.4): ONE groupBy over
-    the bucket keys collects each bucket's (distinct-by-construction)
-    members into a sorted array, and the pair emission is a row-local
-    array expression — all ordered pairs of the array when the bucket
-    is small, star edges from the array's minimum (element 0 after the
-    sort) past the cap. This replaces the r11 shape (a count/min window
-    + a small-bucket SELF-JOIN + a star filter over a persisted window
-    output): the window exchange, both join exchanges and the persist
-    all disappear — the band relation is read exactly once and only the
-    final ``distinct`` shuffles pair rows.
+    the bucket keys collects each bucket's distinct members into a
+    sorted array, and the pair emission is a row-local array
+    expression — all ordered pairs of the array when the bucket is
+    small (or uncapped), star edges from the array's minimum (element
+    0 after the sort) past the cap. No window, self-join or persist:
+    the band relation is read exactly once and only the final
+    ``distinct`` shuffles pair rows. A doc_id repeated inside a bucket
+    is collected once, so it emits no self-pair.
 
     Memory boundary: one aggregation buffer holds one bucket's member
     array (8 bytes/id) — 8 MB at m = 10⁶, fine for any real boilerplate
     cluster; a pathological m ≳ 10⁸ bucket would pressure a single
     task's buffer, but such a bucket also emits m−1 star rows, so the
     right guard at that scale is pre-filtering the bucket key upstream,
-    not a streamier pair emitter.
+    not a streamier pair emitter. Uncapped, such a bucket emits m²/2
+    pairs: the quadratic trap the cap exists for.
     """
     g = bands.groupBy(*bucket_keys).agg(
-        F.expr("array_sort(collect_list(doc_id)) AS _ds")
+        F.expr("array_sort(collect_set(doc_id)) AS _ds")
     )
     # all ordered pairs (x at 0-based i, every later y) of the sorted
-    # member array — doc_a < doc_b by construction, exactly the old
-    # self-join's emission; slice() truncates at the array end
+    # distinct member array — doc_a < doc_b by construction, exactly
+    # the self-join's emission; slice() truncates at the array end
     all_pairs = (
         "flatten(transform(_ds, (x, i) ->"
         " transform(slice(_ds, i + 2, size(_ds)),"
         "           y -> struct(x AS doc_a, y AS doc_b))))"
     )
+    if bucket_cap is None:
+        return g.selectExpr(f"inline({all_pairs})").distinct()
     # star edges: min member (element 0) → every other member
     star = (
         "transform(slice(_ds, 2, size(_ds) - 1),"
@@ -343,8 +367,9 @@ def _with_sets(
     broadcast: bool = False,
 ) -> DataFrame:
     """``pairs`` with doc_a's set from ``sets_a`` as ``_sa`` and
-    doc_b's from ``sets_b`` as ``_sb`` (``_doc_sets`` frames): two
-    joins touching candidate rows only, broadcast on request."""
+    doc_b's from ``sets_b`` as ``_sb`` (frames with ``doc_id`` and
+    ``_set``): two joins touching candidate rows only, broadcast on
+    request."""
     a = sets_a.selectExpr("doc_id AS doc_a", "_set AS _sa")
     b = sets_b.selectExpr("doc_id AS doc_b", "_set AS _sb")
     if broadcast:
@@ -362,18 +387,6 @@ def _set_jaccard(
         "doc_b",
         f"CAST({n_inter} AS DOUBLE) / (size(_sa) + size(_sb) - {n_inter}) AS jaccard",
     )
-
-
-def pair_jaccard(sh: DataFrame, pairs: DataFrame) -> DataFrame:
-    """Exact shingle-set jaccard for given (doc_a, doc_b) pairs.
-
-    Candidate-pair sets are small after LSH, so instead of a quadratic
-    inverted-index self-join we attach each doc's shingle set as an
-    array (one groupBy) and intersect per pair — work is
-    O(|pairs| · set size), independent of shingle document frequency.
-    """
-    doc_sets = _doc_sets(sh)
-    return _set_jaccard(pairs, doc_sets, doc_sets)
 
 
 def _rarest_first_postings(sh: DataFrame, max_df: int | None) -> DataFrame:
@@ -420,14 +433,26 @@ def minhash_near_dup_pairs(
     bucket_cap: int | None = DEFAULT_BUCKET_CAP,
     hash_fn: str = "xxhash64",
 ) -> DataFrame:
-    """shingle → minhash → band-bucket join → exact-jaccard refine.
+    """shingle → minhash → band-bucket pairs → exact-jaccard refine.
 
-    The shingle table feeds both the signatures and the refine step,
-    but it is NOT persisted: shingling is map-side-only (zero-shuffle,
-    see ``shingles``), so recomputing the two branches is cheaper than
-    materializing an exploded table that is ~10× the corpus size —
-    measured 3.8× faster cold at sf0.1, and at 100 TB the cache would
-    not fit storage memory anyway.
+    Each doc is tokenized once: ``_minhash_doc_state`` stores one row
+    per doc with its signature and its shingle set, the band buckets
+    are derived from the stored signatures, and both sides of the
+    verify join the stored sets onto the candidate pairs, so the
+    returned plan scans the stored state and never the documents.
+    Candidate pairs are few after LSH, so the verify is an
+    array intersect per pair, O(|pairs| · set size), independent of
+    shingle document frequency. Building the pairs runs one Spark job,
+    the state's checkpoint.
+
+    The per-doc rows are what make storing pay: the exploded
+    (doc_id, shingle) table is some 10× the corpus, and storing that
+    measured 3.8× slower cold at sf0.1 than re-deriving it per branch,
+    while the state is one compact row per doc and removes two of the
+    three tokenizations (SCALING.md "Near-dup chains: one tokenization
+    per doc"). On the default xxhash64 path the sets hold 64-bit gram
+    ids; see ``_minhash_doc_state`` for the collision bound under
+    which the jaccard equals the string jaccard.
 
     ``bucket_cap`` bounds per-bucket pair emission (star edges past
     the cap — see ``lsh_candidate_pairs``); capped is the DEFAULT
@@ -435,10 +460,9 @@ def minhash_near_dup_pairs(
     otherwise emit O(m²) candidates. ``bucket_cap=None`` opts out
     into the fully-exact all-pairs shape (the d02 oracle does).
     """
-    sh = shingles(docs, text_col, n)
-    sig = minhash_signatures(sh, num_hashes, hash_fn)
-    cand = lsh_candidate_pairs(sig, num_hashes, band_size, bucket_cap, hash_fn)
-    return pair_jaccard(sh, cand).filter(f"jaccard >= {double(threshold)}")
+    state = _minhash_doc_state(docs, text_col, n, num_hashes, hash_fn)
+    cand = lsh_candidate_pairs(state, num_hashes, band_size, bucket_cap, hash_fn)
+    return _set_jaccard(cand, state, state).filter(f"jaccard >= {double(threshold)}")
 
 
 def ngram_jaccard_pairs(
@@ -844,20 +868,19 @@ def hamming_pairs_from_bits(
         .alias(word_cols[i])
         for i in range(n_words)
     ]
-    # Persist the COMPACT per-doc fingerprint table (optimization r11,
-    # guide §5 caching rule: reused AND expensive to recompute). The
-    # lazy form replicated the upstream fingerprint derivation under
-    # THREE plan subtrees (r12: the capped path's band groupBy plus the
-    # two word re-attach legs; the r11 window/self-join shape had five)
-    # — for the multimodal callers each replay re-runs the codec kernel
+    # Store the COMPACT per-doc fingerprint table (guide §5 caching
+    # rule: reused AND expensive to recompute). The lazy form
+    # replicated the upstream fingerprint derivation under THREE plan
+    # subtrees (the capped path's band groupBy plus the two word
+    # re-attach legs; the old window/self-join shape had five) — for
+    # the multimodal callers each replay re-runs the codec kernel
     # (measured: m10's kernel 0.84s, full query 2.7s). One narrow row
-    # per doc (id + bits + words), so the cache is corpus-linear and
-    # MEMORY_AND_DISK-safe at scale. NOTE (r12, corrected): SQL-cached
-    # blocks live until unpersist()/clearCache() — CacheManager holds
-    # the plan strongly, so GC of this handle does NOT free them; a
-    # long-lived session running many queries should clear its cache
-    # between them (bench.py does after every execution).
-    sh = fps.select("doc_id", bits_col, *words).persist()
+    # per doc (id + bits + words), so the store is corpus-linear.
+    # Stored through durable_checkpoint, not persist(): the SQL cache
+    # holds a persisted plan until unpersist()/clearCache(), and later
+    # plans of the session picked it up; a local checkpoint's blocks
+    # are freed by the context cleaner once no plan references them.
+    sh = durable_checkpoint(fps.select("doc_id", bits_col, *words))
     bands = sh.select(
         "doc_id",
         *word_cols,
@@ -1053,21 +1076,6 @@ def window_dup_rate(
     )
 
 
-def _minhash_bands(
-    docs: DataFrame,
-    text_col: str,
-    n: int,
-    num_hashes: int,
-    band_size: int,
-    hash_fn: str,
-) -> tuple[DataFrame, DataFrame]:
-    """``(shingles, band buckets)`` of ``docs``: the two relations an
-    incremental-dedup side is built from."""
-    sh = shingles(docs, text_col, n)
-    sig = minhash_signatures(sh, num_hashes, hash_fn)
-    return sh, band_buckets(sig, num_hashes, band_size, hash_fn)
-
-
 def _probe_buckets(
     corpus_buckets: DataFrame,
     batch_buckets: DataFrame,
@@ -1120,7 +1128,7 @@ def incremental_minhash_dedup(
     appended. Here the split is carved deterministically out of one
     table (``doc_id % batch_mod == 0`` → batch, else corpus) so the
     operator is closed over the driver's test data; in production the
-    corpus side is the persisted signature/bucket store and the batch
+    corpus side is the stored signature/bucket state and the batch
     side is the day's crawl.
 
     Returns one row per MATCHED batch doc: ``batch_doc``,
@@ -1131,19 +1139,20 @@ def incremental_minhash_dedup(
     of the output so the interesting structure (who matched what, how
     strongly) is what gets checked.
 
-    Scale design: signatures and band buckets are built once over both
-    sides (same per-doc groupBy as ``minhash_near_dup_pairs``); the
-    candidate join is corpus-bands ⋈ batch-bands on (band, bucket) —
-    batch is typically ≪ corpus, so this is a build-small/probe-large
-    hash join, never a corpus self-join — and the jaccard verify is the
-    candidate-bounded array-intersect of ``pair_jaccard`` (O(|cand| ·
-    set size), independent of shingle document frequency). The probe
-    is ``probe_dedup_state``'s, over one shingle table for both sides.
-    CRITICALLY, at steady state the corpus side's shingling +
-    signatures need not be recomputed per batch: they are append-only
-    state keyed by doc_id, written once when a doc is admitted
-    (``dedup_corpus_state``; this function recomputes them only because
-    its input is one ephemeral table).
+    Scale design: signatures and shingle sets are built once over both
+    sides, from one tokenization (the stored per-doc state of
+    ``minhash_near_dup_pairs``, so building the relation runs one Spark
+    job); the candidate join is corpus-bands ⋈ batch-bands on (band,
+    bucket) — batch is typically ≪ corpus, so this is a
+    build-small/probe-large hash join, never a corpus self-join — and
+    the jaccard verify is the candidate-bounded array intersect of
+    ``minhash_near_dup_pairs`` (O(|cand| · set size), independent of
+    shingle document frequency). The probe is ``probe_dedup_state``'s,
+    over one stored state for both sides. CRITICALLY, at steady state
+    the corpus side's shingling + signatures need not be recomputed
+    per batch: they are append-only state keyed by doc_id, written
+    once when a doc is admitted (``dedup_corpus_state``; this function
+    recomputes them only because its input is one ephemeral table).
 
     ``bucket_cap`` guards the skew case of a batch doc's bucket landing
     in viral corpus boilerplate: corpus buckets larger than the cap are
@@ -1156,17 +1165,16 @@ def incremental_minhash_dedup(
     ``bucket_cap=None`` opts out into the exact all-members probe (the
     registered oracle does).
     """
-    sh, bands = _minhash_bands(docs, text_col, n, num_hashes, band_size, hash_fn)
+    state = _minhash_doc_state(docs, text_col, n, num_hashes, hash_fn)
+    bands = band_buckets(state, num_hashes, band_size, hash_fn)
     is_batch = F.col("doc_id") % batch_mod == 0
-    # one shingle table and one doc-set aggregate serve both sides;
-    # shingling each side on its own (the dedup_corpus_state route)
-    # measured slower at sf0.1
-    doc_sets = _doc_sets(sh)
+    # one stored state serves both sides; shingling each side on its
+    # own (the dedup_corpus_state route) measured slower at sf0.1
     return _probe_buckets(
         _thin_buckets(bands.filter(~is_batch), bucket_cap),
         bands.filter(is_batch),
-        doc_sets,
-        doc_sets,
+        state,
+        state,
         threshold,
     )
 
@@ -1180,7 +1188,7 @@ def dedup_corpus_state(
     bucket_cap: int | None = DEFAULT_BUCKET_CAP,
     hash_fn: str = "xxhash64",
 ) -> tuple[DataFrame, DataFrame]:
-    """The persisted corpus side of incremental dedup: ``(buckets,
+    """The stored corpus side of incremental dedup: ``(buckets,
     sets)`` — the (doc_id, band, bucket) LSH probe keys and the per-doc
     shingle arrays the jaccard verify intersects against.
 
@@ -1191,11 +1199,17 @@ def dedup_corpus_state(
     oversized buckets to their cap smallest doc_ids at state-build time
     (the ``incremental_minhash_dedup`` recall trade, applied once
     instead of per probe).
+
+    Both relations are stored, so probing them re-runs no corpus work:
+    the sets are a projection of the stored per-doc state (one
+    tokenization, ``minhash_near_dup_pairs``), the uncapped buckets a
+    row-local one over it, and thinned buckets are stored themselves.
     """
-    sh, buckets = _minhash_bands(
-        corpus_docs, text_col, n, num_hashes, band_size, hash_fn
-    )
-    return _thin_buckets(buckets, bucket_cap), _doc_sets(sh)
+    state = _minhash_doc_state(corpus_docs, text_col, n, num_hashes, hash_fn)
+    buckets = band_buckets(state, num_hashes, band_size, hash_fn)
+    if bucket_cap is not None:
+        buckets = durable_checkpoint(_thin_buckets(buckets, bucket_cap))
+    return buckets, state.select("doc_id", "_set")
 
 
 def probe_dedup_state(
@@ -1216,18 +1230,20 @@ def probe_dedup_state(
 
     Built for the micro-batch path (``streaming.features.
     stream_incremental_dedup`` calls it inside ``foreachBatch``): every
-    step is batch-sized except the two joins against the persisted
+    step is batch-sized except the two joins against the stored
     corpus relations, and since each document's verdict depends only on
     itself and the STATIC corpus, per-micro-batch evaluation is exact —
     no cross-batch streaming state at all. Signatures/buckets must use
     the same ``num_hashes``/``band_size``/``hash_fn`` the state was
     built with (as with ``lsh_candidate_pairs``).
     """
-    sh_b, bands_b = _minhash_bands(
-        batch_docs, text_col, n, num_hashes, band_size, hash_fn
-    )
+    state = _minhash_doc_state(batch_docs, text_col, n, num_hashes, hash_fn)
     return _probe_buckets(
-        corpus_buckets, bands_b, corpus_sets, _doc_sets(sh_b), threshold
+        corpus_buckets,
+        band_buckets(state, num_hashes, band_size, hash_fn),
+        corpus_sets,
+        state,
+        threshold,
     )
 
 

@@ -268,7 +268,7 @@ def stream_incremental_dedup(
 ) -> DataFrame:
     """Streaming incremental MinHash dedup — d18's production twin as a
     genuine structured-streaming execution: new documents arrive on a
-    stream and every micro-batch is probed against PREBUILT, persisted
+    stream and every micro-batch is probed against PREBUILT, stored
     corpus dedup state (``functions.dedup.dedup_corpus_state``). Runs
     the stream to completion (availableNow) and returns the matched-doc
     audit relation (batch_doc, n_matches, first_match,
@@ -281,8 +281,9 @@ def stream_incremental_dedup(
     verdict depends only on itself, per-micro-batch batch evaluation is
     EXACT with zero cross-batch state: the streaming-state problem
     disappears by construction (the d18 docstring's steady-state
-    argument, executed). The corpus relations are persisted once before
-    the stream starts and every micro-batch reuses them; per-batch work
+    argument, executed). ``dedup_corpus_state`` stores the corpus
+    relations before the stream starts and every micro-batch reuses
+    them; per-batch work
     is O(batch docs), so an always-on ingest holds steady cost no
     matter how large the corpus grows.
 
@@ -329,24 +330,17 @@ def stream_incremental_dedup(
         bucket_cap=bucket_cap,
         hash_fn=hash_fn,
     )
-    buckets.persist()
-    sets.persist()
-    try:
-        buckets.count(), sets.count()  # materialize state before the stream
 
-        def _probe(batch_df: DataFrame, batch_id: int) -> None:
-            probe_dedup_state(
-                batch_df,
-                buckets,
-                sets,
-                num_hashes=nh,
-                band_size=bs,
-                threshold=threshold,
-                hash_fn=hash_fn,
-            ).write.mode("append").parquet(out_dir)
+    def _probe(batch_df: DataFrame, batch_id: int) -> None:
+        probe_dedup_state(
+            batch_df,
+            buckets,
+            sets,
+            num_hashes=nh,
+            band_size=bs,
+            threshold=threshold,
+            hash_fn=hash_fn,
+        ).write.mode("append").parquet(out_dir)
 
-        _run_foreach_batch(doc_stream, _probe, "update", checkpoint_dir)
-    finally:
-        buckets.unpersist()
-        sets.unpersist()
+    _run_foreach_batch(doc_stream, _probe, "update", checkpoint_dir)
     return doc_stream.sparkSession.read.parquet(out_dir)

@@ -165,3 +165,25 @@ def test_star_cap_is_the_library_default(spark):
     sig = minhash_signatures(shingles(docs))
     # default call — no opt-in — must emit the linear star shape
     assert lsh_candidate_pairs(sig).count() == m - 1
+
+
+@pytest.mark.parametrize("bucket_cap", [None, 4])
+def test_repeated_sig_row_emits_no_self_pair(spark, bucket_cap):
+    """A doc_id that appears twice in the signature table sits twice in
+    each of its buckets. The uncapped emitter must still emit exactly
+    the self-join's ``a.doc_id < b.doc_id`` pairs, so no (x, x) pair,
+    and the capped one must not count the repeat as a member."""
+    from mxene_coin_cell_data_pipeline_spark.functions.dedup import (
+        lsh_candidate_pairs,
+        minhash_signatures,
+        shingles,
+    )
+
+    m = 3
+    sig = minhash_signatures(shingles(_dup_heavy_docs(spark, m, 0)))
+    twice = sig.unionByName(sig.filter("doc_id = 0"))
+    pairs = sorted(
+        (r["doc_a"], r["doc_b"])
+        for r in lsh_candidate_pairs(twice, bucket_cap=bucket_cap).collect()
+    )
+    assert pairs == [(0, 1), (0, 2), (1, 2)]

@@ -20,9 +20,13 @@ to the count measured when the text form landed plus 25%:
   27;
 - ``qc_aggregate`` over the two-cell feature table: 27 calls, budget
   34;
-- ``minhash_near_dup_pairs`` (the near-dup pair chain: shingles,
-  signatures, band buckets, capped candidate pairs, jaccard verify) on
-  the test documents: 83–87 calls, budget 109 (710 as Column trees).
+- ``minhash_near_dup_pairs`` (the near-dup pair chain: the stored
+  per-doc signature and shingle set, band buckets, capped candidate
+  pairs, jaccard verify) on the test documents: 84 calls, budget 105
+  (710 as Column trees; 83–87 before the state was stored);
+- ``incremental_minhash_dedup`` (the stored state, both band sides,
+  the corpus thinning, the probe join, verify and audit aggregate) on
+  the test documents: 264 calls, budget 330.
 
 A new formula written as text costs nothing here; one written as a
 Column tree shows up at once.
@@ -35,7 +39,10 @@ from contextlib import contextmanager
 import pytest
 
 from fixtures import RATED_AH, arbin_frame, headless_frame, neware_frame
-from mxene_coin_cell_data_pipeline_spark.functions.dedup import minhash_near_dup_pairs
+from mxene_coin_cell_data_pipeline_spark.functions.dedup import (
+    incremental_minhash_dedup,
+    minhash_near_dup_pairs,
+)
 from mxene_coin_cell_data_pipeline_spark.operators import (
     fade_and_rul,
     full_feature_pipeline,
@@ -51,7 +58,8 @@ FEATURES_BUDGET = 77
 NORMALIZE_BUDGET = 65
 FADE_BUDGET = 27
 QC_BUDGET = 34
-PAIRS_BUDGET = 109
+PAIRS_BUDGET = 105
+INCREMENTAL_BUDGET = 330
 
 
 @contextmanager
@@ -110,3 +118,11 @@ def test_near_dup_pair_chain_build_budget(spark, sf_dir):
     with _py4j_calls(spark) as calls:
         minhash_near_dup_pairs(docs)
     assert calls[0] <= PAIRS_BUDGET, calls[0]
+
+
+def test_incremental_dedup_build_budget(spark, sf_dir):
+    docs = load_table(spark, sf_dir, "documents")
+    incremental_minhash_dedup(docs)
+    with _py4j_calls(spark) as calls:
+        incremental_minhash_dedup(docs)
+    assert calls[0] <= INCREMENTAL_BUDGET, calls[0]

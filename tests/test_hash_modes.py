@@ -12,8 +12,10 @@ the hash family.
 """
 
 import inspect
+import re
 
 import pytest
+from hypothesis import given, settings, strategies as st
 from pyspark.sql import functions as F
 
 
@@ -148,3 +150,74 @@ def test_countmin_one_sided_guarantee_both_modes(spark, hash_fn):
         .agg(F.max("n").alias("exact_n"), F.min("cell_n").alias("est_n"))
     )
     assert all(r["est_n"] >= r["exact_n"] for r in est.collect())
+
+
+def _string_jaccard(a: str, b: str, n: int = 3) -> float:
+    """Jaccard of two texts' word n-gram shingle strings, recounted in
+    Python with the library's tokenizer rule."""
+    from mxene_coin_cell_data_pipeline_spark.functions.text import TOKEN_RE
+
+    def grams(text):
+        toks = re.findall(TOKEN_RE, text.lower())
+        return {" ".join(toks[i:i + n]) for i in range(len(toks) - n + 1)}
+
+    sa, sb = grams(a), grams(b)
+    inter = len(sa & sb)
+    return inter / (len(sa) + len(sb) - inter)
+
+
+def _assert_gram_id_jaccard_is_string_jaccard(docs) -> None:
+    """Every candidate pair of the xxhash64 chain (threshold 0, so the
+    verify keeps them all) scores exactly the string-shingle jaccard:
+    the 64-bit gram ids of the stored sets do not collide here."""
+    from mxene_coin_cell_data_pipeline_spark.functions.dedup import (
+        minhash_near_dup_pairs,
+    )
+
+    text = {r["doc_id"]: r["text"] for r in docs.collect()}
+    pairs = minhash_near_dup_pairs(docs, threshold=0.0, bucket_cap=None).collect()
+    assert pairs
+    for r in pairs:
+        assert r["jaccard"] == _string_jaccard(text[r["doc_a"]], text[r["doc_b"]]), r
+
+
+def test_gram_id_jaccard_is_string_jaccard_on_test_docs(spark, sf_dir):
+    from mxene_coin_cell_data_pipeline_spark.sources.tables import load_table
+
+    _assert_gram_id_jaccard_is_string_jaccard(
+        load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    )
+
+
+_WORDS = st.sampled_from(
+    "alpha Beta gamma DELTA eps zeta eta theta iota kappa lam mu 42 x9".split()
+)
+_SEPS = st.sampled_from([" ", ", ", "-", ". ", "\n"])
+
+
+@st.composite
+def _near_dup_corpus(draw):
+    """Base docs, each with a few copies that replace up to two words,
+    plus one exact copy of the first base (so some pair always
+    passes)."""
+    bases = draw(st.lists(st.lists(_WORDS, min_size=3, max_size=20),
+                          min_size=1, max_size=4))
+    docs = [bases[0]]
+    for base in bases:
+        docs.append(base)
+        for _ in range(draw(st.integers(1, 3))):
+            copy = list(base)
+            for _ in range(draw(st.integers(0, 2))):
+                copy[draw(st.integers(0, len(copy) - 1))] = draw(_WORDS)
+            docs.append(copy)
+    return [
+        "".join(w + draw(_SEPS) for w in words).strip() for words in docs
+    ]
+
+
+@given(corpus=_near_dup_corpus())
+@settings(max_examples=10, deadline=None)
+def test_gram_id_jaccard_is_string_jaccard_on_near_dups(spark, corpus):
+    _assert_gram_id_jaccard_is_string_jaccard(
+        spark.createDataFrame(list(enumerate(corpus)), "doc_id long, text string")
+    )

@@ -318,14 +318,39 @@ def test_d20_no_gram_self_join_and_linear_windows(spark, sf_dir):
     assert n_joins == 1, plan[:2000]
 
 
-def test_m11_same_band_machinery_as_m10(spark, sf_dir):
-    """pHash near-dup must run through the shared band join: an
-    Arrow-batched kernel (mapInPandas -> ArrowEvalPython/MapInPandas
-    node), then the band bucket join with no cartesian."""
-    plan = _plan("m11_image_phash_neardup", spark, sf_dir)
-    assert "MapInPandas" in plan
+def _record_dedup_checkpoints(monkeypatch) -> list[str]:
+    """Patch ``functions.dedup.durable_checkpoint`` (for this test) to
+    record the plan of each relation it stores; returns the list."""
+    from mxene_coin_cell_data_pipeline_spark.functions import dedup
+
+    stored, checkpoint = [], dedup.durable_checkpoint
+
+    def recording(df, *args, **kwargs):
+        stored.append(df._jdf.queryExecution().executedPlan().toString())
+        return checkpoint(df, *args, **kwargs)
+
+    monkeypatch.setattr(dedup, "durable_checkpoint", recording)
+    return stored
+
+
+def _assert_kernel_stored_once(plan: str, stored: list[str]) -> None:
+    """The shared band machinery stores the fingerprint table: its
+    checkpoint runs each kernel once (two MapInPandas nodes, the
+    payload generator and the codec), and the band join reads the
+    stored rows, re-running no kernel, with no cartesian."""
+    assert [p.count("MapInPandas") for p in stored] == [2], stored
+    assert "MapInPandas" not in plan, plan[:3000]
+    assert "Scan ExistingRDD" in plan, plan[:3000]
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
+
+
+def test_m11_same_band_machinery_as_m10(spark, sf_dir, monkeypatch):
+    """pHash near-dup must run through the shared band join: the
+    Arrow-batched kernel (mapInPandas -> MapInPandas node) runs once,
+    into the stored fingerprint table, then the band bucket join."""
+    stored = _record_dedup_checkpoints(monkeypatch)
+    _assert_kernel_stored_once(_plan("m11_image_phash_neardup", spark, sf_dir), stored)
 
 
 def test_o18_quota_broadcast_onto_rows(spark, sf_dir):
@@ -365,23 +390,15 @@ def test_s13_adc_is_pure_scan_plus_topk_broadcasts(spark, sf_dir):
     assert not re.search(r"Exchange (hash|range)partitioning", plan), plan[:2000]
 
 
-def test_m12_kernel_once_band_join_capped(spark, sf_dir):
+def test_m12_kernel_once_band_join_capped(spark, sf_dir, monkeypatch):
     """Video near-dup must ride the SAME band-machinery plan shape as
     m10/m11 (n_kf travels in the composite frame id, so the audit adds
     NO extra kernel subtree, no second join leg beyond the family
-    shape) with no cartesian anywhere. The shared machinery persists
-    the compact fingerprint table (optimization r11 — one kernel
-    execution instead of five subtree replays), so InMemoryTableScan
-    IS expected in the plan."""
-    plan = _plan("m12_video_phash_neardup", spark, sf_dir)
-    # raw-text MapInPandas counts are cache-state dependent (the
-    # persisted fingerprint relation's description embeds the kernel
-    # subtree once per InMemoryTableScan reference), so pin presence +
-    # the cached single-execution shape instead of a count
-    assert "MapInPandas" in plan
-    assert "InMemoryTableScan" in plan
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
+    shape) with no cartesian anywhere. The kernel runs once, into the
+    stored fingerprint table (the lazy form re-ran it under five plan
+    subtrees)."""
+    stored = _record_dedup_checkpoints(monkeypatch)
+    _assert_kernel_stored_once(_plan("m12_video_phash_neardup", spark, sf_dir), stored)
 
 
 def test_p06_capstone_stages_compose_lazily(spark, sf_dir):
@@ -415,21 +432,15 @@ def test_s14_ivfpq_is_pruned_scan_plus_topk_broadcasts(spark, sf_dir):
     assert "list_id" in plan
 
 
-def test_m13_kernel_once_band_join_capped(spark, sf_dir):
+def test_m13_kernel_once_band_join_capped(spark, sf_dir, monkeypatch):
     """Audio near-dup must ride the SAME band-machinery plan shape as
     m10-m12: ONE codec kernel pass (n_win travels in the composite
-    window id — no second kernel TYPE), no cartesian. The compact
-    fingerprint table is PERSISTED by the shared band machinery
-    (optimization r11: the lazy form re-executed the codec kernel
-    under five plan subtrees), so every InMemoryTableScan reference
-    must read the same single cached relation."""
-    plan = _plan("m13_audio_fingerprint_neardup", spark, sf_dir)
-    # see test_m12_kernel_once_band_join_capped: raw-text kernel counts
-    # are cache-state dependent; pin presence + cached shape
-    assert "MapInPandas" in plan
-    assert "InMemoryTableScan" in plan
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
+    window id — no second kernel TYPE), into the stored fingerprint
+    table, and no cartesian."""
+    stored = _record_dedup_checkpoints(monkeypatch)
+    _assert_kernel_stored_once(
+        _plan("m13_audio_fingerprint_neardup", spark, sf_dir), stored
+    )
 
 
 def test_s15_fusion_is_broadcast_sized(spark, sf_dir):
@@ -516,17 +527,40 @@ def _exchanges(plan: str) -> int:
     return len(re.findall(r"\b(?:Broadcast)?Exchange\b", plan))
 
 
-def test_d02_band_relation_persisted(spark, sf_dir):
-    """The all-pairs (uncapped) LSH candidate chain reads its band
-    relation from a persisted copy instead of replaying the shingle →
-    MinHash chain under each join leg (optimization r11), and every
-    join broadcasts. Like m12, pin the cached shape, not a count: a
-    relation cached by an earlier test adds scans to the plan text."""
+def test_d02_reads_stored_doc_state(spark, sf_dir):
+    """The all-pairs (uncapped) LSH chain emits its pairs with the
+    single-pass bucket emitter over the stored per-doc state: no
+    persisted relation, no documents scan, no wide join and no
+    window."""
     plan = _plan("d02_minhash_lsh", spark, sf_dir)
-    assert "InMemoryTableScan" in plan, plan[:3000]
-    assert "Window" not in plan
-    for node in _WIDE_JOINS:
-        assert node not in plan, node
+    for node in ("InMemoryTableScan", "FileScan", "Window", *_WIDE_JOINS):
+        assert node not in plan, (node, plan[:3000])
+
+
+_TOKENIZE = re.compile(r"Generate explode\(array\(regexp_extract_all")
+
+
+@pytest.mark.parametrize("chain", ["pairs-xxhash64", "pairs-md5", "incremental"])
+def test_minhash_chains_tokenize_once(spark, sf_dir, monkeypatch, chain):
+    """One execution of a MinHash chain tokenizes each document once:
+    the per-doc state checkpoint holds the only tokenizing Generate,
+    and the returned plan reads the stored state and neither scans nor
+    tokenizes the documents (the pair chain tokenized 3 times, the
+    incremental one 4)."""
+    from mxene_coin_cell_data_pipeline_spark.functions import dedup
+    from mxene_coin_cell_data_pipeline_spark.plans._registry import _ctx
+
+    stored = _record_dedup_checkpoints(monkeypatch)
+    (docs,) = _ctx(spark, sf_dir, "documents")
+    if chain == "incremental":
+        df = dedup.incremental_minhash_dedup(docs)
+    else:
+        df = dedup.minhash_near_dup_pairs(docs, hash_fn=chain.split("-")[1])
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "FileScan" not in plan, plan[:3000]
+    assert not _TOKENIZE.search(plan), plan[:3000]
+    assert [len(_TOKENIZE.findall(p)) for p in stored] == [1], stored
 
 
 def test_d03_simhash_aggregates_on_its_scan_exchange(spark, sf_dir):
@@ -576,14 +610,14 @@ def test_d10_chunk_owner_is_a_window(spark, sf_dir):
 def test_capped_bands_are_single_pass(spark, sf_dir, name):
     """The capped band machinery is one groupBy per bucket with row-local
     pair emission (optimization r12): no bucket window, no small-bucket
-    self-join. m10 reads its fingerprints from the persisted kernel
+    self-join. m10 reads its fingerprints from the stored kernel
     output."""
     plan = _plan(name, spark, sf_dir)
     assert "Window" not in plan
     for node in _WIDE_JOINS:
         assert node not in plan, (name, node)
     if name.startswith("m10"):
-        assert "InMemoryTableScan" in plan, plan[:3000]
+        assert "Scan ExistingRDD" in plan, plan[:3000]
 
 
 @pytest.mark.parametrize(
